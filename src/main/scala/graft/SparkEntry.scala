@@ -198,9 +198,9 @@ object SparkEntry {
 
   /** A REUSABLE store under the same fixed scratch scheme: built once
     * per (name, sf) and kept — callers check the manifest shape and
-    * rebuild only when it doesn't match. This is what lets a bench time
-    * the READ path alone: the expensive block writes happen on first
-    * use (or an untimed [[setup]] pass), not inside the measured query. */
+    * rebuild only when it doesn't match. This is what keeps a repeated
+    * query on the READ path alone: the expensive block writes happen on
+    * first use, not on every run. */
   private def reusableStore(name: String, sfDir: String, blockRangeMs: Long): BlockStore = {
     val p = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft-scratch",
@@ -277,19 +277,6 @@ object SparkEntry {
     p.toString
   }
 
-  /** One-time setup per query a bench harness should run UNTIMED before
-    * timing the query itself (scratch-store/index builds). [[queries]]
-    * entries stay self-contained — they run their own setup when it
-    * hasn't happened — but a timing harness that skips this conflates
-    * build and query cost. */
-  def setup: Map[String, (SparkSession, String) => Unit] = Map(
-    "ts_bucketed_dedup" -> ((s, dir) => { bucketedDedupStore(s, dir); () }),
-    "ts_select_labelled" -> ((s, dir) => { labelledStore(s, dir); () }),
-    "ts_seek" -> ((s, dir) => { labelledStore(s, dir); () }),
-    "promql_store_rate" -> ((s, dir) => { promqlStore(s, dir); () }),
-    "emb_ivf_persisted" -> ((s, dir) => { ivfLayout(s, dir); () }),
-    "emb_ivfpq_persisted" -> ((s, dir) => { ivfPqLayout(s, dir); () }))
-
   /** The coalesced two-delete tombstone interval set `ts_tombstone_delete`
     * applies — matcher resolution over the index, metadata-sized. */
   private def tombstoneSet(s: SparkSession, dir: String): DataFrame = {
@@ -319,101 +306,6 @@ object SparkEntry {
     }
   }
 
-  /** The post-maintenance store behind `ts_compacted_read`'s split bench
-    * phases: overlap write ×2 + matcher delete + planner compaction,
-    * idempotent like [[bucketedDedupStore]] (one compacted block, id 4:
-    * two writes + one spilled-or-inline delete consume ids 1-3). */
-  private def compactedStore(s: SparkSession, dir: String): BlockStore = {
-    val store = reusableStore("compactbench", dir, 7 * DAY)
-    if (store.manifest.blocks.size == 1 && store.manifest.blocks.head.blockId > 2L) store
-    else {
-      store.destroy(s)
-      val fresh = reusableStore("compactbench", dir, 7 * DAY)
-      val base = TsdbSource.events(s, dir).samples
-      fresh.write(base)
-      fresh.write(
-        base.where(col("t").between(OVERLAP_LO, OVERLAP_HI))
-          .withColumn("v", col("v") + 100))
-      fresh.delete(s, DEL1_LO, DEL1_HI, Eq("name", "click"))
-      fresh.compact(s, fresh.planCompaction(BlockStore.exponentialRanges(7 * DAY, 3)))
-      fresh
-    }
-  }
-
-  /** Lifecycle-bundled entries split into (reset, setup, query) for the
-    * bench record: after reset() + setup(), query() computes the same
-    * rows as `queries(name)` — so a bench can time the store build and
-    * the read separately, and cross-engine ratios compare the READ
-    * against an oracle that never pays the build. [[queries]] entries
-    * stay self-contained (the correctness gate still runs the bundled
-    * form). */
-  final case class BenchPhase(
-      reset: (SparkSession, String) => Unit,
-      setupPhase: (SparkSession, String) => Unit,
-      query: (SparkSession, String) => DataFrame)
-
-  def benchPhases: Map[String, BenchPhase] = Map(
-    "ts_overlap_read" -> BenchPhase(
-      (s, dir) => reusableStore("bucketdedup", dir, 7 * DAY).destroy(s),
-      (s, dir) => { bucketedDedupStore(s, dir); () },
-      (s, dir) => bucketedDedupStore(s, dir)
-        .readRange(s, T0, T0 + 40 * DAY)
-        .select("sample_id", "series_key", "t", "v")
-        .orderBy("series_key", "t", "sample_id")),
-    "ts_compacted_read" -> BenchPhase(
-      (s, dir) => reusableStore("compactbench", dir, 7 * DAY).destroy(s),
-      (s, dir) => { compactedStore(s, dir); () },
-      (s, dir) => compactedStore(s, dir)
-        .readRange(s, T0, T0 + 40 * DAY)
-        .select("sample_id", "series_key", "t", "v")
-        .orderBy("series_key", "t", "sample_id")),
-    "ts_tombstone_delete" -> BenchPhase(
-      (_, dir) => {
-        scala.reflect.io.Directory(tombScratch(dir).toFile).deleteRecursively(); ()
-      },
-      // setup = the matcher-resolution + coalescing METADATA job,
-      // materialized — what BlockStore.delete publishes to the manifest
-      // at delete time, long before any read runs
-      (s, dir) => {
-        java.nio.file.Files.createDirectories(tombScratch(dir).getParent)
-        tombstoneSet(s, dir).coalesce(1).write.mode("overwrite")
-          .parquet(tombScratch(dir).toString)
-      },
-      (s, dir) => Tombstones.applyTo(
-          TsdbSource.events(s, dir).samples,
-          s.read.parquet(tombScratch(dir).toString))
-        .select("sample_id", "series_key", "t", "v")
-        .sortWithinPartitions("sample_id")),
-    "ts_select_postings" -> BenchPhase(
-      (_, dir) => {
-        scala.reflect.io.Directory(postingsScratch(dir).toFile).deleteRecursively(); ()
-      },
-      // setup = deriving + persisting the inverted index — what
-      // BlockStore writes per block at WRITE time (S12), long before
-      // any read; the bundled entry re-derives it ad hoc, which the
-      // r7 judge measured as 44× against a twin that reads a flat
-      // filter and never pays the derivation
-      (s, dir) => {
-        java.nio.file.Files.createDirectories(postingsScratch(dir).getParent)
-        graft.query.Postings.fromSamples(TsdbSource.events(s, dir).samples)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(postingsScratch(dir).toString)
-      },
-      // query = PostingsForMatchers over the PERSISTED index (a
-      // #series×#labels parquet read) + the single fact probe
-      (s, dir) => graft.query.Postings.select(
-          TsdbSource.events(s, dir).samples,
-          s.read.parquet(postingsScratch(dir).toString),
-          MINT, MAXT,
-          Eq("name", "click"), Re("user", "1.*"), Matcher.neq("vip", "1"))
-        .select(col("sample_id"), col("series_key"), col("t"), col("v"))
-        .sortWithinPartitions("sample_id")))
-
-  private def postingsScratch(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-scratch",
-      "postings-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-
   /** Shared Params of the promql_* entries: suite grid + the
     * TsdbSource.select pushdown hook, scan-bounded by the lattice's
     * own lookbehind (the selectors carry no offsets and the entries'
@@ -425,11 +317,6 @@ object SparkEntry {
     PromQl.Params(mint, maxt, stepMs, lookbackMs, nameLabel = "name",
       pushdown = Some(ms =>
         TsdbSource.events(s, dir).select(mint - DAY - lookbackMs, maxt, ms: _*)))
-
-  private def tombScratch(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-scratch",
-      "tombs-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
 
   /** DuckDB CTE shared by the storage-semantics oracles: the events table
     * in the canonical long format. */
@@ -633,7 +520,7 @@ object SparkEntry {
     // U3 through the BUCKETED store read path — the query the CLUSTERED
     // BY (series_key) layout exists for. Same semantics and oracle as
     // ts_overlap_read, but the store build is idempotent setup (see
-    // [[setup]]): what's measured is readRange alone, whose dedup
+    // [[reusableStore]]): a repeat run is readRange alone, whose dedup
     // aggregate consumes the bucketed scan with NO exchange
     // (plan-asserted in StorageSpec) — vs ts_vertical_dedup, which pays
     // the full shuffle on ad-hoc frames.
@@ -3221,7 +3108,7 @@ object SparkEntry {
     // the k = 1440 twin: the same derivation at 6h sample grain on the
     // 1m lattice over one day, rate-scaled. The twin SQL fans out
     // lattice × window samples (the promql_rate_1d shape) — fine at the
-    // sf0.01 correctness scale, x10-skip-listed in bench_oracle.py;
+    // sf0.01 correctness scale, too large for a 10x-scaled corpus;
     // the Spark side runs the decomposed (no-explode) plan.
     "promql_native_rate_1d" -> {
       val R = DAY

@@ -48,8 +48,15 @@ object ApiServer {
     server.createContext("/-/healthy", fixed(200, "OK"))
     server.createContext("/-/ready", fixed(200, "OK"))
     // a small pool: each request is a Spark action; the scheduler
-    // interleaves them and the pool bounds driver-side fan-in
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    // interleaves them and the pool bounds driver-side fan-in. Daemon
+    // threads: HttpServer.stop never shuts the pool down, so they must
+    // not keep the JVM alive once the server is stopped
+    val threads = java.util.concurrent.Executors.defaultThreadFactory()
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8, { r =>
+      val t = threads.newThread(r)
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }

@@ -483,14 +483,7 @@ object Dedup {
     * edge (singleton docs) are absent by construction; callers keep them
     * implicitly (see [[dedupSurvivors]]).
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
-    connectedComponentsWithRounds(edges, maxIter)._1
-
-  /** [[connectedComponents]] plus the round count it converged in — the
-    * alternating-star O(log n) bound is a measurable claim, so at-scale
-    * benches record it instead of asserting it in prose. */
-  def connectedComponentsWithRounds(
-      edges: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val Seq(cu, cv) = edges.columns.take(2).toSeq
     val sc = edges.sparkSession.sparkContext
     // localCheckpoint blocks are RDD-cached, which Dataset.unpersist
@@ -571,8 +564,7 @@ object Dedup {
     val roots = cur.select(col("v").as("node")).distinct()
       .join(cur.select(col("u").as("node")).distinct(), Seq("node"), "left_anti")
       .select(col("node"), col("node").as("component"))
-    (cur.select(col("u").as("node"), col("v").as("component"))
-      .union(roots), it)
+    cur.select(col("u").as("node"), col("v").as("component")).union(roots)
   }
 
   /** Documents surviving near-duplicate clustering: one representative —

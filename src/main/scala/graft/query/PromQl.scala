@@ -642,7 +642,7 @@ object PromQl {
     * aggregation buffer cannot live in the UnsafeRow hash map, so that
     * form compiles to a partial SortAggregate that SORTS the full
     * sample volume by series_key before shrinking it (profiled as the
-    * dominant re-attach cost at 20M+ rows — RateProfile r12). Grouping
+    * dominant re-attach cost at 20M+ rows, r12). Grouping
     * KEYS, unlike buffers, may be var-length and need only be
     * orderable, so: dedup on the canonically-sorted entry array (one
     * HashAggregate with ZERO aggregate buffers, map-side combined —
@@ -3466,9 +3466,7 @@ object PromQl {
     private val arithOps = Set("+", "-", "*", "/", "%", "^", "atan2")
     private def binarySharedFill(b: Bin): Option[DataFrame] = (b.lhs, b.rhs) match {
       case (ls: Selector, rs: Selector)
-          // dev toggle for A/B plan comparison (never set in production)
-          if !sys.env.get("SPARK_GRAFT_NO_SHARED_FILL").contains("1") &&
-            !hasH && arithOps.contains(b.op) &&
+          if !hasH && arithOps.contains(b.op) &&
             b.matchOn.forall(_.card == 0) &&
             ls.at.isEmpty && rs.at.isEmpty =>
         // side-tagged union; selected() already applied each side's

@@ -119,6 +119,10 @@ object Manifest {
     if (n.startsWith(Prefix)) n.stripPrefix(Prefix).toLongOption else None
   }
 
+  /** ASCII digits whatever the JVM's default locale, so a store written
+    * under one locale opens under any other. */
+  private def fileOf(v: Long): String = Prefix + "%09d".formatLocal(java.util.Locale.ROOT, v)
+
   def currentVersion(root: String): Long = {
     val d = dir(root)
     if (!Files.isDirectory(d)) 0L
@@ -133,7 +137,7 @@ object Manifest {
     val v = currentVersion(root)
     if (v == 0L) ManifestState(Nil, Nil)
     else {
-      val lines = Files.readAllLines(dir(root).resolve(Prefix + "%09d".format(v))).asScala
+      val lines = Files.readAllLines(dir(root).resolve(fileOf(v))).asScala
       val blocks = Seq.newBuilder[BlockMeta]
       val tombs = Seq.newBuilder[TombstoneInterval]
       val files = Seq.newBuilder[TombstoneFile]
@@ -208,7 +212,7 @@ object Manifest {
       var done = false
       while (!done) {
         try {
-          Files.createLink(d.resolve(Prefix + "%09d".format(v)), tmp)
+          Files.createLink(d.resolve(fileOf(v)), tmp)
           done = true
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => v += 1

@@ -92,21 +92,6 @@ class RelationalSpec extends SparkSuite {
     assert(p.contains("GreaterThanOrEqual(ts,"), p.take(3000))
   }
 
-  test("benchPhases: reset+setup+query computes the same rows as the bundled entry") {
-    // the bench's split lifecycle rows are only honest if the split
-    // query IS the bundled query — same rows, same schema
-    for ((name, ph) <- SparkEntry.benchPhases) {
-      val bundled = SparkEntry.queries(name)(spark, sf)
-      ph.reset(spark, sf)
-      ph.setupPhase(spark, sf)
-      val split = ph.query(spark, sf)
-      assert(split.columns.toSeq == bundled.columns.toSeq, name)
-      val a = bundled.collect().map(_.toString).sorted.toSeq
-      val b = split.collect().map(_.toString).sorted.toSeq
-      assert(a == b, s"$name: ${a.length} vs ${b.length} rows")
-    }
-  }
-
   test("every oracle key has a query and vice versa") {
     // r7: the rows-only set is empty. ts_series_id left it in r6 (its
     // oracle implements XXHash64 as DuckDB integer SQL);

@@ -214,6 +214,10 @@ class ApiServerSpec extends SparkSuite
           " ELSE " + h(3, 6, 16.5) + " END"))
       .select("series_key", "labels", "t", "h")
     db2.registerHistograms(hf)
+    import scala.jdk.CollectionConverters._
+    def liveNonDaemon(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val threadsBefore = liveNonDaemon()
     val srv = ApiServer.start(spark, db2, port = 0)
     try {
       val b2 = s"http://127.0.0.1:${srv.getAddress.getPort}"
@@ -266,5 +270,9 @@ class ApiServerSpec extends SparkSuite
       assert(c7 == 200, v7)
       assert(v7.contains(""""value":[2.2,"18"]"""), v7)
     } finally srv.stop(0)
+    // a stopped server must not keep the JVM alive: its handler threads
+    // outlive stop(0), so they have to be daemons
+    val leftOver = liveNonDaemon() -- threadsBefore
+    assert(leftOver.isEmpty, leftOver.map(_.getName))
   }
 }

@@ -770,6 +770,25 @@ class BlockStoreSpec extends SparkSuite {
       store.readRange(spark, T0, T0 + 40 * DAY).count())
   }
 
+  test("a manifest published under one JVM locale loads under another") {
+    val root = Files.createTempDirectory("graft-locale").toString
+    val state = ManifestState(
+      Seq(BlockMeta(7L, T0, T0 + DAY, 10L, 2L, 0L, 123L)),
+      Seq(TombstoneInterval("{a=\"1\"}", T0, T0 + 5)))
+    Manifest.publish(root, state)
+    val saved = java.util.Locale.getDefault
+    // Thai digits: a default-locale "%09d" names the version MANIFEST-๐๐๐๐๐๐๐๐๑
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("th-TH-u-nu-thai"))
+    try {
+      val loaded = Manifest.load(root)
+      assert(loaded.blocks == state.blocks && loaded.tombstones == state.tombstones)
+      assert(Manifest.publish(root, loaded) == 2L)
+    } finally java.util.Locale.setDefault(saved)
+    assert(Manifest.load(root).blocks == state.blocks)
+    val names = new java.io.File(root, "meta").list().filter(_.startsWith("MANIFEST-")).toSet
+    assert(names == Set("MANIFEST-000000001", "MANIFEST-000000002"))
+  }
+
   test("half-written blocks are invisible until published (atomic publication)") {
     val store = freshStore()
     store.write(samples)
