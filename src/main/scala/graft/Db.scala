@@ -105,12 +105,6 @@ final class Db private (
     passes
   }
 
-  /** Evaluate a PromQL range query over this store — the full language
-    * front-end ([[graft.query.PromQl]]) on the label-carrying read
-    * path: selector resolution still happens in the compiled plan (the
-    * store read attaches each series' label map from the postings
-    * index, one pivot). `nameLabel` defaults to `__name__`, the
-    * Prometheus convention. */
   /** The optional native-histogram channel: a samples frame
     * `(series_key, labels, t, h)` ([[graft.query.PromQl.HistType]]
     * structs — `NativeHistogram.observe`+pack or the streaming observe
@@ -122,19 +116,20 @@ final class Db private (
   def registerHistograms(frame: DataFrame): Unit =
     histChannel = Some(frame.select("series_key", "labels", "t", "h"))
 
+  /** Evaluate a PromQL range query over this store — the full language
+    * front-end ([[graft.query.PromQl]]) on the label-carrying read
+    * path: selector resolution still happens in the compiled plan (the
+    * store read attaches each series' label map from the postings
+    * index, one pivot). `nameLabel` defaults to `__name__`, the
+    * Prometheus convention. The frame is unordered;
+    * [[graft.query.ResultJson.render]] orders what it serves. */
   def promql(
       query: String,
       startMs: Long,
       endMs: Long,
       stepMs: Long,
       lookbackMs: Long = 300000L,
-      nameLabel: String = "__name__",
-      /** `false` skips the final global (series_key, t) sort — the
-        * orderBy's range-partitioner bounds-sampling job re-executes
-        * the compiled lineage once, a ~2× tax no RELATIONAL consumer
-        * needs (joins, aggregates, correctness compares); serving
-        * surfaces keep the sorted default. */
-      ordered: Boolean = true): DataFrame = {
+      nameLabel: String = "__name__"): DataFrame = {
     // bound the scan to exactly what the expression can reach —
     // lookbacks/ranges/offsets behind the window AND any @-pinned
     // absolute instants — then block pruning and t pushdown apply like
@@ -177,10 +172,8 @@ final class Db private (
       // driver-side build is provably safe
       seriesEstimate = Some(store.manifest.blocks.map(_.numSeries).sum),
       broadcastLimit = store.broadcastLimit)
-    if (histChannel.nonEmpty)
-      graft.query.PromQl.evalMixed(query, samples, params, ordered)
-    else if (ordered) graft.query.PromQl.eval(query, samples, params)
-    else graft.query.PromQl.evalUnsorted(query, samples, params)
+    if (histChannel.nonEmpty) graft.query.PromQl.evalMixed(query, samples, params)
+    else graft.query.PromQl.eval(query, samples, params)
   }
 
   /** Consistent snapshot into `destRoot` (`db.go:1108-1146`). */

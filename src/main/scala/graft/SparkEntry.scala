@@ -850,7 +850,7 @@ object SparkEntry {
       val lab = PromQl.seriesLabelsDim(src)
       val frame = hs.join(lab, Seq("series_key"))
         .select("series_key", "labels", "t", "v", "h")
-      PromQl.evalUnsorted(
+      PromQl.eval(
           "histogram_quantile(0.9, rate({name=\"click\"}[3d]))", frame,
           PromQl.Params(T0 + 4 * DAY, T0 + 15 * DAY, DAY, nameLabel = "name",
             seriesEstimate = Some(100000L)))
@@ -902,7 +902,7 @@ object SparkEntry {
       val lab = PromQl.seriesLabelsDim(src)
       val frame = hs.join(lab, Seq("series_key"))
         .select("series_key", "labels", "t", "v", "h")
-      PromQl.evalUnsorted(
+      PromQl.eval(
           "histogram_quantile(0.9, rate({name=\"click\"}[1d]))", frame,
           PromQl.Params(T0 + 2 * DAY, T0 + 3 * DAY, 60000L, nameLabel = "name",
             seriesEstimate = Some(100000L)))
@@ -946,12 +946,12 @@ object SparkEntry {
         .select("series_key", "labels", "t", "v", "h")
       val p = PromQl.Params(T0 + DAY, T0 + 15 * DAY, DAY, nameLabel = "name",
         seriesEstimate = Some(100000L))
-      val q = PromQl.evalUnsorted(
+      val q = PromQl.eval(
           "histogram_quantile(0.5, ({name=\"click\"} + {name=\"view\"}) * 2)",
           frame, p)
         .select(col("series_key"), col("t"),
           (floor(col("v") * 1e4 + 0.5) / 1e4).as("q"))
-      val n = PromQl.evalUnsorted(
+      val n = PromQl.eval(
           "histogram_count(({name=\"click\"} + {name=\"view\"}) * 2)",
           frame, p)
         .select(col("series_key"), col("t"), col("v").cast("long").as("n"))
@@ -2291,13 +2291,13 @@ object SparkEntry {
     // filtering the constructed labels map instead cannot fold through
     // map_filter and reads the whole corpus.
     "promql_sum_by" -> ((s, dir) =>
-      PromQl.evalUnsorted("sum by (name) ({name=~\".+\"})",
+      PromQl.eval("sum by (name) ({name=~\".+\"})",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, MINT, MAXT, BUCKET_W))
         .select(col("series_key"), col("t"), round(col("v"), 2).as("v"))),
 
     "promql_quantile_by" -> ((s, dir) =>
-      PromQl.evalUnsorted("quantile by (name) (0.5, {name=~\".+\"})",
+      PromQl.eval("quantile by (name) (0.5, {name=~\".+\"})",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, MINT, MAXT, BUCKET_W))
         .select(col("series_key"), col("t"), round(col("v"), 4).as("v"))),
@@ -2305,7 +2305,7 @@ object SparkEntry {
     // topk keeps the winning input series' FULL label sets — the output
     // series_key is the events table's own canonical key
     "promql_topk" -> ((s, dir) =>
-      PromQl.evalUnsorted("topk(2, {name=~\".+\"})",
+      PromQl.eval("topk(2, {name=~\".+\"})",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, MINT, MAXT, BUCKET_W))
         .select(col("series_key"), col("t"), col("v"))),
@@ -2320,7 +2320,7 @@ object SparkEntry {
     // compiler can't round mid-expression); 4dp of ~1e3 magnitudes
     // leaves ~7 guard digits — the doc_entropy-class accepted risk.
     "promql_increase" -> ((s, dir) =>
-      PromQl.evalUnsorted("increase({name=\"click\"}[1d])",
+      PromQl.eval("increase({name=\"click\"}[1d])",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, T0 + 2 * DAY, T0 + 14 * DAY, DAY))
         .select(col("series_key"), col("t"), round(col("v"), 4).as("v"))),
@@ -2333,7 +2333,7 @@ object SparkEntry {
     // Same closed form as promql_increase per instant, divided by the
     // range seconds; 8dp of ~1e-2 magnitudes leaves ~8 guard digits.
     "promql_rate_1d" -> ((s, dir) =>
-      PromQl.evalUnsorted("rate({name=\"click\"}[1d])",
+      PromQl.eval("rate({name=\"click\"}[1d])",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, T0 + 2 * DAY, T0 + 3 * DAY, 60000L))
         .select(col("series_key"), col("t"), round(col("v"), 8).as("v"))),
@@ -2348,8 +2348,7 @@ object SparkEntry {
       val st = promqlStore(s, dir)
       graft.Db.open(s, st.root)
         .promql("rate({name=\"click\"}[1d])",
-          T0 + 2 * DAY, T0 + 3 * DAY, 60000L, nameLabel = "name",
-          ordered = false)
+          T0 + 2 * DAY, T0 + 3 * DAY, 60000L, nameLabel = "name")
         .select(col("series_key"), col("t"), round(col("v"), 8).as("v"))
     }),
 
@@ -2359,7 +2358,7 @@ object SparkEntry {
     // staleness on the 6h lattice so the two sparse metrics coincide
     // at enough instants to gate on.
     "promql_ratio" -> ((s, dir) =>
-      PromQl.evalUnsorted("{name=\"click\"} / {name=\"view\"}",
+      PromQl.eval("{name=\"click\"} / {name=\"view\"}",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, MINT, MAXT, BUCKET_W, BUCKET_W + 1))
         .select(col("series_key"), col("t"), round(col("v"), 4).as("v"))),
@@ -2370,7 +2369,7 @@ object SparkEntry {
     // hash-compares with no rounding caveat. Inner lattice aligned to
     // absolute 6h multiples (the Prometheus subquery convention).
     "promql_subquery" -> ((s, dir) =>
-      PromQl.evalUnsorted("max_over_time({name=\"click\"}[1d:6h])",
+      PromQl.eval("max_over_time({name=\"click\"}[1d:6h])",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, T0 + 2 * DAY, T0 + 14 * DAY, DAY, BUCKET_W + 1))
         .select(col("series_key"), col("t"), col("v"))),
@@ -2384,7 +2383,7 @@ object SparkEntry {
     // compiler can't round mid-expression) — 6dp of an O(1e-3) ratio
     // leaves ~9 guard digits, the promql_increase-class accepted risk.
     "promql_scalar" -> ((s, dir) =>
-      PromQl.evalUnsorted("{name=\"click\"} / scalar(sum({name=\"click\"}))",
+      PromQl.eval("{name=\"click\"} / scalar(sum({name=\"click\"}))",
           TsdbSource.events(s, dir).samples,
           promqlParams(s, dir, MINT, MAXT, BUCKET_W))
         .select(col("series_key"), col("t"), round(col("v"), 6).as("v"))),

@@ -39,8 +39,7 @@ object LabelDictionary {
     * against a 100k-value label (the 5M-series matcher bench), a
     * collected 100k-literal `isin` costs seconds of analysis/codegen
     * and beats the plain regex at nothing — past ~1k values the
-    * per-distinct-value regex eval IS the fast path. For dictionaries
-    * too large to collect at all, use [[semiJoin]].
+    * per-distinct-value regex eval IS the fast path.
     */
   def rewrite(dict: DataFrame, ms: Seq[Matcher], maxValues: Int = 1000): Seq[Matcher] = {
     def rw(m: Matcher): Matcher = m match {
@@ -66,24 +65,5 @@ object LabelDictionary {
       case other      => other
     }
     ms.map(rw)
-  }
-
-  /** Shuffle-free alternative for dictionaries too large for an `isin`
-    * list: semi-join the fact table against the regex-matching dictionary
-    * values. The dictionary side is the small side (broadcast); the fact
-    * table never evaluates the regex. Only valid for matchers that do
-    * NOT match the empty string (an absent label can't join). */
-  def semiJoin(
-      samples: DataFrame,
-      dict: DataFrame,
-      re: Re): DataFrame = {
-    require(!re.matchesValue(""),
-      "semiJoin cannot express matches-empty regexes; use rewrite()")
-    val matching = broadcast(
-      dict.where(col("label_name") === re.name &&
-        col("label_value").rlike(re.anchored))
-        .select(col("label_value").as("__dict_v")))
-    samples
-      .join(matching, col("labels").getItem(re.name) === col("__dict_v"), "left_semi")
   }
 }

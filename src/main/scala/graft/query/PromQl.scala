@@ -855,9 +855,6 @@ object PromQl {
     }
   }
 
-  def eval(query: String, samples: DataFrame, p: Params): DataFrame =
-    evalUnsorted(query, samples, p).orderBy("series_key", "t")
-
   /** The corridor's histogram struct type (the `h` channel of a mixed
     * samples frame, [[NativeHistogram]]'s packed shape). */
   val HistType: org.apache.spark.sql.types.DataType =
@@ -881,18 +878,8 @@ object PromQl {
     * identically. This is the serving stack's entry: [[ResultJson]]
     * renders per row whichever channel is present (the Prometheus
     * sample envelope's value-vs-histogram switch). */
-  def evalMixed(query: String, samples: DataFrame, p: Params): DataFrame =
-    evalMixed(query, samples, p, ordered = true)
-
-  /** [[evalMixed]] with the [[evalUnsorted]] contract available:
-    * `ordered = false` drops the final global sort (same element set),
-    * so relational consumers skip the range partitioner's ~2×
-    * bounds-sampling tax — [[graft.Db.promql]] threads its own flag
-    * here so the histogram channel honors the same contract. */
-  def evalMixed(
-      query: String, samples: DataFrame, p: Params,
-      ordered: Boolean): DataFrame = {
-    val floats = evalUnsorted(query, samples, p)
+  def evalMixed(query: String, samples: DataFrame, p: Params): DataFrame = {
+    val floats = eval(query, samples, p)
       .withColumn("h", lit(null).cast(HistType))
     val (hOpt, floatSide) =
       if (!samples.columns.contains("h")) (None, floats)
@@ -908,24 +895,18 @@ object PromQl {
             floats.where(col("v").isNotNull))
         case ast => (new Compiler(samples, p).histVec(ast), floats)
       }
-    val out = hOpt match {
+    hOpt match {
       case Some(hv) => floatSide.unionByName(hv.select(
         col("series_key"), col("labels"), col("t"),
         lit(null).cast("double").as("v"), col("h")))
       case None => floats
     }
-    if (ordered) out.orderBy("series_key", "t") else out
   }
 
-  /** [[eval]] minus the final global sort: the `orderBy`'s range
-    * partitioner runs a bounds-SAMPLING job that re-executes the whole
-    * compiled lineage once before the real pass — a ~2× tax no
-    * relational consumer needs (joins, aggregates, the correctness
-    * compare, and the bench's noop sink are all order-free). Serving
-    * surfaces that render per-series (HTTP API, CLI) keep [[eval]];
-    * its sort is result-sized there because the compile bounds the
-    * lattice first. */
-  def evalUnsorted(query: String, samples: DataFrame, p: Params): DataFrame = {
+  /** Evaluate `query` over `samples` on the `p` lattice: one
+    * `(series_key, labels, t, v)` row per element, in no particular
+    * order ([[ResultJson.render]] orders what it serves). */
+  def eval(query: String, samples: DataFrame, p: Params): DataFrame = {
     require(p.stepMs > 0 && p.endMs >= p.startMs, "bad evaluation range")
     val out = parse(query) match {
       // a TOP-LEVEL range vector is legal in an INSTANT query and
@@ -1965,7 +1946,7 @@ object PromQl {
         Vec(absentOverTime(rv))
       case Call("sort" | "sort_desc", Seq(e)) =>
         // presentation-order functions: a relational result set has no
-        // element order — the final eval() ordering applies; identity
+        // element order — ResultJson's series order applies; identity
         eval(e)
       case Call("sort_by_label" | "sort_by_label_desc", e +: srcs)
           if srcs.nonEmpty && srcs.forall(_.isInstanceOf[StringLit]) =>

@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Renders a [[PromQl.eval]] result frame as the Prometheus HTTP API's
   * `data` payload (`{"resultType":"vector"|"matrix","result":[...]}`) —
@@ -46,8 +47,10 @@ object ResultJson {
     else new java.math.BigDecimal(java.lang.Double.toString(v))
       .stripTrailingZeros.toPlainString
 
+  /** Epoch seconds, fixed notation, millisecond decimals only when
+    * needed (`1700006400.5`, not `Double.toString`'s `1.7000064005E9`). */
   private[query] def fmtT(ms: Long): String =
-    if (ms % 1000 == 0) (ms / 1000).toString else (ms / 1000.0).toString
+    java.math.BigDecimal.valueOf(ms, 3).stripTrailingZeros.toPlainString
 
   /** One label map as the API's sorted `{"k":"v",…}` object. */
   private[graft] def labelsJson(labels: scala.collection.Map[String, String]): String =
@@ -96,14 +99,17 @@ object ResultJson {
     * series' single (latest) point; otherwise the full `matrix`. A row
     * whose `h` channel is set renders in the Prometheus histogram
     * envelope (`"histogram"` / `"histograms"`) instead of the float
-    * `"value"`/`"values"` — a mixed series emits both arrays. */
+    * `"value"`/`"values"` — a mixed series emits both arrays.
+    *
+    * The frame's rows may arrive in any order: they group per series
+    * here, series emit in Spark's string order of `series_key`
+    * (unsigned UTF-8 bytes, which `String.compareTo`'s UTF-16 order is
+    * not above U+FFFF) and each series' points by ascending `t`. */
   def render(frame: DataFrame, instant: Boolean): String = {
     val hasH = frame.columns.contains("h")
     val cols = Seq("series_key", "labels", "t", "v") ++
       (if (hasH) Seq("h") else Nil)
-    val it = frame.select(cols.head, cols.tail: _*)
-      .orderBy("series_key", "t").toLocalIterator()
-    val keys = Vector.newBuilder[String]
+    val it = frame.select(cols.head, cols.tail: _*).toLocalIterator()
     val labelsOf = scala.collection.mutable.HashMap.empty[String, String]
     val pointsOf = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[(Long, Double)]]
@@ -113,7 +119,6 @@ object ResultJson {
       val r = it.next()
       val key = r.getString(0)
       if (!labelsOf.contains(key)) {
-        keys += key
         labelsOf(key) = labelsJson(r.getMap[String, String](1))
         pointsOf(key) = scala.collection.mutable.ArrayBuffer.empty
         histsOf(key) = scala.collection.mutable.ArrayBuffer.empty
@@ -123,10 +128,12 @@ object ResultJson {
       else if (!r.isNullAt(3))
         pointsOf(key) += ((r.getLong(2), r.getDouble(3)))
     }
-    val items = keys.result().map { key =>
+    val keys = labelsOf.keys.toVector.map(UTF8String.fromString)
+      .sortWith(_.binaryCompare(_) < 0).map(_.toString)
+    val items = keys.map { key =>
       val metric = labelsOf(key)
-      val pts = pointsOf(key)
-      val hs = histsOf(key)
+      val pts = pointsOf(key).sortBy(_._1)
+      val hs = histsOf(key).sortBy(_._1)
       if (instant) {
         // the single (latest) point — a histogram beats an older float
         val useHist = hs.nonEmpty && (pts.isEmpty || hs.last._1 >= pts.last._1)

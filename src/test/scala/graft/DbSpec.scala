@@ -250,17 +250,8 @@ class DbSpec extends SparkSuite {
     val pinned = db.promql("req{inst=\"0\"} @ 600", 20 * M, 20 * M, M)
     assert(pinned.select("t", "v").as[(Long, Double)].collect().toSeq ==
       Seq((20 * M, 100.0)))
-    // ordered = false: same element SET, no trailing global sort in the
-    // plan (the relational-consumer contract)
-    val un = db.promql("req", 10 * M, 10 * M, M, ordered = false)
-    assert(un.select("series_key", "v").as[(String, Double)].collect().toSet ==
-      iv.select("series_key", "v").as[(String, Double)].collect().toSet)
-    val tail = un.queryExecution.optimizedPlan.toString.linesIterator.next()
-    assert(!tail.contains("Sort"), tail)
 
-    // the ordered=false contract holds on the HISTOGRAM path too: with
-    // a registered h channel the eval routes through evalMixed, which
-    // used to append the global sort unconditionally (ADVICE r10)
+    // with a registered h channel the eval routes through evalMixed
     val hlbl = Map("__name__" -> "mh")
     val hf = Seq(0L, M, 2 * M).zipWithIndex.map { case (t, k) => (hlbl, t, k) }
       .toDF("labels", "t", "k")
@@ -273,14 +264,8 @@ class DbSpec extends SparkSuite {
           "'pos', cast(array() as array<struct<i:int,c:double>>))"))
       .select("series_key", "labels", "t", "h")
     db.registerHistograms(hf)
-    val hun = db.promql("mh", 2 * M, 2 * M, M, ordered = false)
-    val htail = hun.queryExecution.optimizedPlan.toString.linesIterator.next()
-    assert(!htail.contains("Sort"), htail)
+    val hun = db.promql("mh", 2 * M, 2 * M, M)
     assert(hun.where(col("h").isNotNull).count() == 1L)
-    // the serving default still sorts
-    val hord = db.promql("mh", 2 * M, 2 * M, M)
-    assert(hord.queryExecution.optimizedPlan.toString
-      .linesIterator.next().contains("Sort"))
 
     // r11 second wave through the serving layer: scalar scale and the
     // == filter comparison route through evalMixed's histogram reading
@@ -288,5 +273,13 @@ class DbSpec extends SparkSuite {
     assert(hm2.select("v").as[Double].head() == 6.0)
     val heq = db.promql("histogram_count(mh == mh)", 2 * M, 2 * M, M)
     assert(heq.select("v").as[Double].head() == 3.0)
+
+    // every result is an unordered set, on the float and the histogram
+    // channel alike: no global sort on top of any plan (ResultJson
+    // orders what it serves)
+    Seq(iv, sel, sr, pinned, hun, hm2, heq).foreach { df =>
+      val top = df.queryExecution.optimizedPlan.toString.linesIterator.next()
+      assert(!top.contains("Sort"), top)
+    }
   }
 }

@@ -143,15 +143,4 @@ class QuerierSpec extends SparkSuite {
       .queryExecution.executedPlan.toString
     assert(naive.toLowerCase.contains("rlike"), naive.take(2000))
   }
-
-  test("semiJoin dictionary path matches the isin path without collecting values") {
-    val dict = LabelDictionary.fromSamples(src.samples)
-    val re = Re("name", "c.*|sig.*")
-    val got = LabelDictionary.semiJoin(src.samples, dict, re).count()
-    val want = src.select(0L, Long.MaxValue / 2, re).count()
-    assert(got == want && got > 0)
-    intercept[IllegalArgumentException] {
-      LabelDictionary.semiJoin(src.samples, dict, Re("vip", "|1"))
-    }
-  }
 }
