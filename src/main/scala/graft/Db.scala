@@ -49,13 +49,19 @@ final class Db private (
 
   /** Matcher select over a closed time range — the `Querier(mint,
     * maxt).Select(ms…)` round trip in one call; resolution runs in the
-    * postings index, never on sample rows. */
+    * postings index, never on sample rows: on the driver, against the
+    * store's resident per-block postings, while the manifest's series
+    * total is within [[BlockStore.broadcastLimit]] (the scan gets a
+    * literal key filter, no Spark job resolves it), and as a Spark
+    * aggregate over the unioned dictionaries above it
+    * ([[BlockStore.readRange]]). */
   def query(mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
     store.readRange(spark, mint, maxt, matchers: _*)
 
   /** [[query]] with each series' label map attached — the reference's
-    * `Series.Labels()` (`querier.go:50-57`); the map comes from one
-    * pivot of the postings index, not from sample rows. */
+    * `Series.Labels()` (`querier.go:50-57`); the map comes from the
+    * postings index (the resident index's local relation under the
+    * gate, one Spark pivot above it), not from sample rows. */
   def query(mint: Long, maxt: Long, withLabels: Boolean, matchers: Matcher*): DataFrame =
     store.readRange(spark, mint, maxt, withLabels, matchers: _*)
 
@@ -118,9 +124,9 @@ final class Db private (
 
   /** Evaluate a PromQL range query over this store — the full language
     * front-end ([[graft.query.PromQl]]) on the label-carrying read
-    * path: selector resolution still happens in the compiled plan (the
-    * store read attaches each series' label map from the postings
-    * index, one pivot). `nameLabel` defaults to `__name__`, the
+    * path: each selector resolves through [[query]]'s postings path and
+    * the store read attaches each series' label map from the postings
+    * index. `nameLabel` defaults to `__name__`, the
     * Prometheus convention. The frame is unordered;
     * [[graft.query.ResultJson.render]] orders what it serves. */
   def promql(

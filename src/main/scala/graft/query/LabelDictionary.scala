@@ -29,19 +29,23 @@ object LabelDictionary {
       .select(explode(col("labels")).as(Seq("label_name", "label_value")))
       .distinct()
 
+  /** The most literals a driver-built `isin` filter carries. Measured
+    * against a 100k-value label (the 5M-series matcher bench), a
+    * 100k-literal `isin` costs seconds of analysis/codegen and beats the
+    * alternative at nothing — past ~1k values a per-distinct-value
+    * regex eval ([[rewrite]]) or a semi-join against the set
+    * ([[graft.storage.BlockStore.readRange]]) IS the fast path. */
+  val literalLimit: Int = 1000
+
   /** Rewrite every regex matcher in `ms` into an [[InSet]] by evaluating
     * it over the dictionary (`=~` and, via [[Not]], `!~`). Non-regex
     * matchers pass through. The value list is collected to the driver
     * (it becomes an `isin` the scan can push down); `maxValues` guards
     * the collect — beyond it the matcher is left as a regex, which is
     * still correct (one rlike per distinct index/dictionary row), just
-    * not the pushdown path. The default is deliberately small: measured
-    * against a 100k-value label (the 5M-series matcher bench), a
-    * collected 100k-literal `isin` costs seconds of analysis/codegen
-    * and beats the plain regex at nothing — past ~1k values the
-    * per-distinct-value regex eval IS the fast path.
+    * not the pushdown path.
     */
-  def rewrite(dict: DataFrame, ms: Seq[Matcher], maxValues: Int = 1000): Seq[Matcher] = {
+  def rewrite(dict: DataFrame, ms: Seq[Matcher], maxValues: Int = literalLimit): Seq[Matcher] = {
     def rw(m: Matcher): Matcher = m match {
       // upstream's literal fast paths (`.*` matches everything, `.+`
       // everything non-empty): a dictionary scan can only ever return

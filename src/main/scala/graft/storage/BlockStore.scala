@@ -22,11 +22,16 @@ import graft.matchers.Matcher
   *    `tombstones` files). Readers see only manifest-listed blocks, so a
   *    half-written block dir is invisible until published — the tmp +
   *    rename discipline of `compact.go:634-639` at list granularity;
-  *  - every write also materializes the block's `(label_name,
-  *    label_value)` dictionary under `dict/block_id=<n>/` — the
-  *    label-value index of the reference (`index/index.go:404-448`),
-  *    which the query layer uses to answer regex matchers without
-  *    scanning sample rows ([[graft.query.Querier.selectViaDictionary]]).
+  *  - every write also materializes the block's `(series_key,
+  *    label_name, label_value)` dictionary under `dict/block_id=<n>/` —
+  *    the postings index of the reference (`index/index.go:113-147`).
+  *    Selectors, label maps and label metadata resolve against it,
+  *    never against sample rows: while the manifest's series total is
+  *    at most [[broadcastLimit]], from a driver-resident
+  *    [[SeriesIndex]] that loads each block's dictionary once per JVM
+  *    (no Spark job on a warm cache); above it, as Spark jobs over the
+  *    unioned dictionaries ([[postingsIndex]],
+  *    [[graft.query.Postings.seriesFor]]).
   *
   * Scale notes: the manifest is O(#blocks) driver-side metadata (the
   * reference holds the same list in memory); retention and compaction
@@ -58,13 +63,15 @@ final class BlockStore(
       * (the reference's in-memory tombstone list is single-node by
       * design; this is the distributed replacement). */
     val tombstoneSpillThreshold: Int = 10000,
-    /** Matched-series / tombstone sets are broadcast-hinted only when
-      * the manifest-derived worst case (every series matched) stays
-      * under this row count; past it the hint is dropped and AQE picks
-      * the join strategy from actual runtime sizes — a matcher like
-      * `Re(".*")` over 10⁸ series must never force a driver-side
-      * broadcast build (the reference streams postings lazily,
-      * `index/postings.go:297-368`, and never materializes them). */
+    /** The most series the driver holds: under this manifest-derived
+      * worst case (every series matched) the postings index is resident
+      * on the driver ([[SeriesIndex]]) and matched-series / tombstone
+      * sets are broadcast; past it selectors and labels resolve as
+      * Spark jobs, the hints are dropped and AQE picks the join
+      * strategy from actual runtime sizes — a matcher like `Re(".*")`
+      * over 10⁸ series must never force a driver-side build (the
+      * reference streams postings lazily, `index/postings.go:297-368`,
+      * and never materializes them). */
     val broadcastLimit: Long = 2000000L) {
   def dataDir = s"$root/data"
   private[storage] def dictDir = s"$root/dict"
@@ -360,13 +367,25 @@ final class BlockStore(
   def readRange(spark: SparkSession, mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
     // matcher selection resolves ENTIRELY in the postings index — the
     // reference's Select never evaluates matchers on sample data
-    // (`querier.go:326-396`); the fact side gets one semi-join, hinted
-    // broadcast only when the manifest's series count bounds the matched
-    // set safely (a broad matcher over 10⁸ series must not OOM the
-    // driver), otherwise AQE picks the strategy from runtime sizes
-    readSelected(spark, mint, maxt) { (raw0, live) =>
+    // (`querier.go:326-396`). Under the gate the keys resolve on the
+    // driver and reach the scan as a literal `In` (a broadcast
+    // semi-join against a local relation past the literal bound);
+    // above it they resolve as a Spark aggregate and the fact side
+    // gets one semi-join, hinted broadcast only when the blocks in
+    // range bound the matched set safely (a broad matcher over 10⁸
+    // series must not OOM the driver), otherwise AQE picks the
+    // strategy from runtime sizes
+    readSelected(spark, mint, maxt) { (raw0, st, live) =>
       if (matchers.isEmpty) raw0
-      else {
+      else if (resident(st)) {
+        val keys = seriesIndex(spark, st).resolve(matchers)
+        if (keys.size <= graft.query.LabelDictionary.literalLimit)
+          raw0.where(col("series_key").isin(keys: _*))
+        else {
+          import spark.implicits._
+          raw0.join(broadcast(keys.toDF("series_key")), Seq("series_key"), "left_semi")
+        }
+      } else {
         val idx = postingsIndex(spark)
         val keys = graft.query.Postings.seriesFor(
           idx, extraSeriesFor(spark, idx, matchers), matchers)
@@ -396,7 +415,7 @@ final class BlockStore(
       mint: Long,
       maxt: Long): DataFrame = {
     val key = graft.model.Labels.fromMap(labels).canonical
-    readSelected(spark, mint, maxt) { (raw0, _) =>
+    readSelected(spark, mint, maxt) { (raw0, _, _) =>
       raw0.where(col("series_key") === lit(key))
     }
   }
@@ -405,7 +424,7 @@ final class BlockStore(
     * bounds, sample-grain time clamp, then `select` (the series
     * restriction), then overlap dedup + tombstones. */
   private def readSelected(spark: SparkSession, mint: Long, maxt: Long)(
-      select: (DataFrame, Seq[BlockMeta]) => DataFrame): DataFrame = {
+      select: (DataFrame, ManifestState, Seq[BlockMeta]) => DataFrame): DataFrame = {
     val st = manifest
     val live = st.blocks.filter(_.overlaps(mint, maxt))
     // no overlapping block — including a store with no published blocks
@@ -427,7 +446,7 @@ final class BlockStore(
         case _ => lit(true)
       })
       .where(col("t") >= lit(mint) && col("t") <= lit(maxt))
-    val raw = select(raw0, live)
+    val raw = select(raw0, st, live)
     val vertical = Compaction.overlappingGroups(live).nonEmpty
     val merged =
       if (vertical) Merge.dedupLatest(raw, blockRecency(live), col("sample_id"))
@@ -445,11 +464,12 @@ final class BlockStore(
     * normalized (sample rows carry only the series key; label pairs
     * live once per series in the postings index), so consumers doing
     * per-label grouping downstream (the PromQL `by (label)` shape) get
-    * the map back from ONE pivot of the index — `map_from_entries` over
-    * a per-series collect, joined to the read once, broadcast-gated by
-    * the manifest's series count exactly like matcher semi-joins. The
-    * label-less series `"{}"` owns no index rows and surfaces an empty
-    * map, the reference's `labels.Labels{}`. */
+    * the map back from one `(series_key, labels)` relation joined to the
+    * read once: under the gate the [[SeriesIndex]]'s local relation,
+    * broadcast (built once per index, reused by every query); above it
+    * one pivot of the index — `map_from_entries` over a per-series
+    * collect — left to AQE. The label-less series `"{}"` owns no index
+    * rows and surfaces an empty map, the reference's `labels.Labels{}`. */
   def readRange(
       spark: SparkSession,
       mint: Long,
@@ -459,17 +479,39 @@ final class BlockStore(
     val rows = readRange(spark, mint, maxt, matchers: _*)
     if (!withLabels) rows
     else {
-      val lab = postingsIndex(spark)
-        .groupBy("series_key")
-        .agg(map_from_entries(
-          collect_list(struct(col("label_name"), col("label_value")))).as("__lab"))
-      val totalSeries = manifest.blocks.map(_.numSeries).sum
-      val hinted = if (totalSeries <= broadcastLimit) broadcast(lab) else lab
-      rows.join(hinted, Seq("series_key"), "left")
+      val st = manifest
+      val lab =
+        if (resident(st)) broadcast(seriesIndex(spark, st).labelsFrame(spark))
+        else postingsIndex(spark)
+          .groupBy("series_key")
+          .agg(map_from_entries(
+            collect_list(struct(col("label_name"), col("label_value")))).as("labels"))
+      rows.join(lab, Seq("series_key"), "left")
         .withColumn("labels",
           org.apache.spark.sql.functions.coalesce(
-            col("__lab"), map().cast("map<string,string>")))
-        .drop("__lab")
+            col("labels"), map().cast("map<string,string>")))
+    }
+  }
+
+  /** The gate between the two resolution paths: the manifest's series
+    * total (an upper bound on live series, one count per block) within
+    * [[broadcastLimit]] — the size the Spark path already builds on the
+    * driver, as a broadcast, for every labelled read. */
+  private def resident(st: ManifestState): Boolean =
+    st.blocks.map(_.numSeries).sum <= broadcastLimit
+
+  /** This store's driver-resident [[SeriesIndex]] as of `st`, shared
+    * by every `BlockStore` on the same root in this JVM: reused while
+    * its dictionaries' part files are unchanged, refreshed (reading
+    * only the new dictionaries, dropping the retired ones) otherwise. */
+  private[storage] def seriesIndex(spark: SparkSession, st: ManifestState): SeriesIndex = {
+    val blockDirs = indexedBlocks(st).map(id => id -> s"$dictDir/block_id=$id")
+    val headDir = Some(headDictDir).filter(d => Files.isDirectory(Paths.get(d)))
+    BlockStore.seriesIndexes.synchronized {
+      val ix = SeriesIndex.refresh(
+        spark, BlockStore.seriesIndexes.get(tableName), blockDirs, headDir)
+      BlockStore.seriesIndexes(tableName) = ix
+      ix
     }
   }
 
@@ -524,32 +566,13 @@ final class BlockStore(
     * Sample-less registered series ([[registerSeries]]) ride along like
     * the reference's head series map entries. */
   def postingsIndex(spark: SparkSession): DataFrame = {
-    val ids = manifest.blocks.map(_.blockId)
+    val ids = indexedBlocks(manifest)
     val hasHead = Files.isDirectory(Paths.get(headDictDir))
-    // a store whose only activity is a rolled-back txn has series but
-    // no blocks: serve the index from the head dictionary alone — the
-    // reference's fresh DB after Rollback still answers LabelNames /
-    // matcher resolution from its head series map (`db.go:100-112`).
-    // A store EMPTIED by delete + tombstone clean (manifest published,
-    // zero live blocks) answers with the empty label set, like the
-    // reference's head after a full-range delete drops the series'
-    // labels and symbols (head_test.go:393-396) — only a store with no
-    // manifest at all (wrong path / never written) fails loudly.
     if (ids.isEmpty && !hasHead) {
-      require(Manifest.currentVersion(root) > 0L,
-        s"block store at $root has no published blocks")
       import spark.implicits._
       return Seq.empty[(String, String, String)]
         .toDF("label_name", "label_value", "series_key")
     }
-    // fail loudly rather than answer from a partial index: a block
-    // written from label-less samples (e.g. a streaming sink) has no
-    // postings, so label/matcher queries over this store are undefined
-    val missing = ids.filterNot(id =>
-      Files.isDirectory(Paths.get(s"$dictDir/block_id=$id")))
-    require(missing.isEmpty,
-      s"store at $root has no label index for blocks ${missing.mkString(",")} " +
-        "(written without a labels column); label/matcher queries unavailable")
     val head =
       if (hasHead)
         Some(spark.read.parquet(headDictDir)
@@ -561,6 +584,33 @@ final class BlockStore(
         .parquet(ids.map(id => s"$dictDir/block_id=$id"): _*)
         .select("label_name", "label_value", "series_key"))
     (blocksIdx ++ head).reduce(_ unionByName _).distinct()
+  }
+
+  /** The live block ids whose dictionaries make up the postings index,
+    * refusing a state the index cannot answer for. A store whose only
+    * activity is a rolled-back txn has series but no blocks: the index
+    * is the head dictionary alone — the reference's fresh DB after
+    * Rollback still answers LabelNames / matcher resolution from its
+    * head series map (`db.go:100-112`). A store EMPTIED by delete +
+    * tombstone clean (manifest published, zero live blocks) answers with
+    * the empty label set, like the reference's head after a full-range
+    * delete drops the series' labels and symbols (head_test.go:393-396)
+    * — only a store with no manifest at all (wrong path / never written)
+    * fails loudly. So does a block written from label-less samples (e.g.
+    * a streaming sink): it has no postings, so label/matcher queries
+    * over the store are undefined rather than answered from a partial
+    * index. */
+  private def indexedBlocks(st: ManifestState): Seq[Long] = {
+    val ids = st.blocks.map(_.blockId)
+    if (ids.isEmpty && !Files.isDirectory(Paths.get(headDictDir)))
+      require(Manifest.currentVersion(root) > 0L,
+        s"block store at $root has no published blocks")
+    val missing = ids.filterNot(id =>
+      Files.isDirectory(Paths.get(s"$dictDir/block_id=$id")))
+    require(missing.isEmpty,
+      s"store at $root has no label index for blocks ${missing.mkString(",")} " +
+        "(written without a labels column); label/matcher queries unavailable")
+    ids
   }
 
   /** One block's postings dictionary, raw — `(series_key, label_name,
@@ -576,26 +626,30 @@ final class BlockStore(
     spark.read.parquet(s"$dictDir/block_id=$blockId")
   }
 
-  /** The `(name, value)` dictionary view of [[postingsIndex]] — what
-    * regex matchers are evaluated against (reference enumerates label
-    * values per matcher, `index/index.go:866-892`), so a regex never
-    * scans sample rows. */
-  def labelDictionary(spark: SparkSession): DataFrame =
-    postingsIndex(spark)
-      .select("label_name", "label_value")
-      .distinct()
-
   /** A1 over the store: distinct label names from the index alone
-    * (reference `querier.go:70-89` reads only index sections). */
-  def labelNames(spark: SparkSession): DataFrame =
-    postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name")
+    * (reference `querier.go:70-89` reads only index sections) — under
+    * the gate a local relation from the [[SeriesIndex]], whose
+    * `collect()` starts no Spark job. */
+  def labelNames(spark: SparkSession): DataFrame = {
+    val st = manifest
+    if (resident(st)) localColumn(spark, "label_name", seriesIndex(spark, st).labelNames)
+    else postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name")
+  }
 
   /** A2 over the store: sorted distinct values of one label, index-only
-    * (reference `querier.go:91-108`). */
-  def labelValues(spark: SparkSession, name: String): DataFrame =
-    postingsIndex(spark)
+    * (reference `querier.go:91-108`), gated like [[labelNames]]. */
+  def labelValues(spark: SparkSession, name: String): DataFrame = {
+    val st = manifest
+    if (resident(st)) localColumn(spark, "label_value", seriesIndex(spark, st).labelValues(name))
+    else postingsIndex(spark)
       .where(col("label_name") === name)
       .select(col("label_value")).distinct().orderBy("label_value")
+  }
+
+  private def localColumn(spark: SparkSession, name: String, xs: Seq[String]): DataFrame = {
+    import spark.implicits._
+    xs.toDF(name)
+  }
 
   /** Record deletion intervals for every series matching the conjunction
     * over `[mint, maxt]` (reference `DB.Delete`, `db.go:1203-1232`):
@@ -1086,4 +1140,9 @@ object BlockStore {
     * is the cross-process truth). */
   private[storage] val syncedVersions =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
+
+  /** Each store's driver-resident postings ([[BlockStore.seriesIndex]]),
+    * per JVM, by catalog table name (one per store root). */
+  private[storage] val seriesIndexes =
+    scala.collection.mutable.HashMap.empty[String, SeriesIndex]
 }

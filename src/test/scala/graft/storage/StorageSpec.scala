@@ -3,6 +3,7 @@ package graft.storage
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -730,10 +731,12 @@ class BlockStoreSpec extends SparkSuite {
   test("label dictionary is materialized per block and unioned on read") {
     val store = freshStore()
     store.write(samples)
-    val dict = store.labelDictionary(spark)
-    val want = graft.query.LabelDictionary.fromSamples(samples)
-    assert(dict.count() == want.count())
-    assert(dict.where(col("label_name") === "name").count() ==
+    val ix = store.seriesIndex(spark, store.manifest)
+    val dict = for (n <- ix.labelNames; v <- ix.labelValues(n)) yield (n, v)
+    val want = graft.query.LabelDictionary.fromSamples(samples).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(dict.size == want.size && dict.toSet == want)
+    assert(dict.count(_._1 == "name") ==
       samples.select(col("labels").getItem("name")).distinct().na.drop().count())
   }
 
@@ -800,12 +803,18 @@ class BlockStoreSpec extends SparkSuite {
   }
 
   test("matched-series broadcast is gated on manifest series count (index/postings.go:297-368)") {
-    // small store (default gate): the semi-join is broadcast-hinted
+    // small store (default gate): the keys resolve on the driver and
+    // reach the one scan as a literal series_key filter — no dict scan
     val store = freshStore()
     store.write(samples)
     val narrow = store.readRange(spark, T0, T0 + 40 * DAY, graft.matchers.Eq("name", "click"))
-    assert(narrow.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-      narrow.queryExecution.optimizedPlan.toString.take(2000))
+    val narrowPlan = narrow.queryExecution.executedPlan.toString
+    assert("FileScan".r.findAllIn(narrowPlan).size == 1, narrowPlan.take(2000))
+    assert(narrow.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+      case In(a: Attribute, _) => a.name == "series_key"
+      case InSet(a: Attribute, _) => a.name == "series_key"
+      case _ => false
+    })), narrow.queryExecution.optimizedPlan.toString.take(2000))
     // a store whose manifest says the worst case can't be broadcast:
     // no hint — a broad matcher (Re ".*" selects every series) must not
     // force a driver-side build; AQE decides from runtime sizes
