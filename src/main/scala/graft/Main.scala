@@ -252,25 +252,23 @@ object Main {
           .collect()
           .foreach(r => println(s"${r.get(0)} ${keyCols.map(c => r.getAs[String](c)).mkString("=")}"))
 
-      if (idx.columns.contains("s_mint")) {
-        // churn: block-range time NOT covered by the series, averaged
-        // over the pair's series (reference weighs by uncovered/duration)
-        val span = math.max(1L, meta.maxt - meta.mint)
-        val uncovered = idx.withColumn("uncov",
-          (lit(span) - (col("s_maxt") - col("s_mint"))).cast("double") / span)
-        println("\nLabel pairs most involved in churning:")
-        printTop(
-          uncovered.groupBy("label_name", "label_value")
-            .agg(round(sum("uncov"), 2).as("churn"))
-            .select("churn", "label_name", "label_value"),
-          "churn", Seq("label_name", "label_value"))
-        println("\nLabel names most involved in churning:")
-        printTop(
-          uncovered.groupBy("label_name")
-            .agg(round(sum("uncov"), 2).as("churn"))
-            .select("churn", "label_name"),
-          "churn", Seq("label_name"))
-      }
+      // churn: block-range time NOT covered by the series, averaged
+      // over the pair's series (reference weighs by uncovered/duration)
+      val span = math.max(1L, meta.maxt - meta.mint)
+      val uncovered = idx.withColumn("uncov",
+        (lit(span) - (col("s_maxt") - col("s_mint"))).cast("double") / span)
+      println("\nLabel pairs most involved in churning:")
+      printTop(
+        uncovered.groupBy("label_name", "label_value")
+          .agg(round(sum("uncov"), 2).as("churn"))
+          .select("churn", "label_name", "label_value"),
+        "churn", Seq("label_name", "label_value"))
+      println("\nLabel names most involved in churning:")
+      printTop(
+        uncovered.groupBy("label_name")
+          .agg(round(sum("uncov"), 2).as("churn"))
+          .select("churn", "label_name"),
+        "churn", Seq("label_name"))
 
       println("\nMost common label pairs:")
       printTop(pairCounts.select("n", "label_name", "label_value"),

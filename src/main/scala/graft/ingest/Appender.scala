@@ -181,19 +181,12 @@ object Appender {
         case (Some(a), Some(b)) => Some(a.unionByName(b))
         case (a, b) => a.orElse(b)
       }
-      all.flatMap { df =>
-        // persist the validated frame: the emptiness probe and the
-        // store write are two actions over the same plan (the validate
-        // windows shuffle the whole staged union) — without the cache
-        // the pipeline runs twice (and addRef's postingsIndex join with
-        // it); mirrors BlockStore.write caching its own input
-        val ok = validate(df, minValidTime)
-          .where(col("status") === "ok").drop("status")
-          .withColumnRenamed("arrival", "sample_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try { if (ok.isEmpty) None else Some(store.write(ok)) }
-        finally ok.unpersist()
-      }
+      // the write caches its input, so the validate windows (and
+      // addRef's postingsIndex join) run once; it publishes nothing when
+      // every sample was rejected
+      all.flatMap(df => store.write(validate(df, minValidTime)
+        .where(col("status") === "ok").drop("status")
+        .withColumnRenamed("arrival", "sample_id")))
     }
 
     /** Drop the staged samples, keep their series (`db.go:100-112`). */

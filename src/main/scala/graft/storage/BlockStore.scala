@@ -3,8 +3,9 @@ package graft.storage
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.functions.rangeForTimestamp
 import graft.matchers.Matcher
@@ -22,10 +23,20 @@ import graft.matchers.Matcher
   *    `tombstones` files). Readers see only manifest-listed blocks, so a
   *    half-written block dir is invisible until published — the tmp +
   *    rename discipline of `compact.go:634-639` at list granularity;
-  *  - every write also materializes the block's `(series_key,
-  *    label_name, label_value)` dictionary under `dict/block_id=<n>/` —
-  *    the postings index of the reference (`index/index.go:113-147`).
-  *    Selectors, label maps and label metadata resolve against it,
+  *  - every block has a dictionary under `dict/block_id=<n>/` — the
+  *    postings index of the reference (`index/index.go:113-147`): one
+  *    parquet row `(series_key, s_mint, s_maxt, label_name,
+  *    label_value)` per label pair of each series the block holds, with
+  *    `[s_mint, s_maxt]` the series' exact sample bounds in the block.
+  *    It is derived from the block's own rows: empty-valued labels are
+  *    stripped (the reference's append-time invariant,
+  *    `head.go:832-833`), and a compaction lists only the series with
+  *    surviving samples (`compact.go:729-872`). Series registered
+  *    without samples ([[registerSeries]]) keep the same format, with
+  *    null bounds, under `dict/head/`. One writer
+  *    ([[BlockStore.writeDict]]) and one reader ([[BlockStore.readDict]])
+  *    own the format. Selectors, label maps and label metadata resolve
+  *    against it,
   *    never against sample rows: while the manifest's series total is
   *    at most [[broadcastLimit]], from a driver-resident
   *    [[SeriesIndex]] that loads each block's dictionary once per JVM
@@ -81,6 +92,7 @@ final class BlockStore(
     * survive an `Appender.Rollback` (`db.go:100-112`). */
   private[storage] def headDictDir = s"$dictDir/head"
   private def blockPath(id: Long) = s"$dataDir/block_id=$id"
+  private def dictPath(id: Long) = s"$dictDir/block_id=$id"
   private def tombPath(id: Long) = s"$tombsDir/ts_id=$id"
 
   /** Current published state (block list + tombstones). */
@@ -217,116 +229,118 @@ final class BlockStore(
     }
   }
 
-  /** Append one immutable block; returns its id. Runs as the store's
-    * exclusive writer (≙ the reference's `db.mtx`-serialized appends):
-    * two concurrent writers can never claim the same block id/dir.
+  /** Append one immutable block; returns its id, or None when `samples`
+    * holds no row (nothing is published — the reference never writes
+    * an empty block). Runs as the store's exclusive writer (≙ the
+    * reference's `db.mtx`-serialized appends): two concurrent writers
+    * can never claim the same block id/dir.
     *
-    * Exactly two Spark jobs. Job 1 inserts into the bucketed table —
-    * one shuffle keyed on (t_bucket, spark-bucket-id) so every executor
-    * writes and each t_bucket dir gets ≤ W bucket files; the writer
-    * applies the table's `SORTED BY (series_key, t)` inside each file,
-    * which is what keeps parquet row-group stats tight. Time/count
-    * stats ride the write itself via `observe` (no post-hoc re-scan).
-    * Job 2 writes the label index from the SAME materialization (the
-    * input is cached for the pair), so a non-deterministic source can
-    * never persist an index disagreeing with the written samples; the
-    * series count rides that job's per-series dedup. The input of one
-    * block is one head-window of data (≪ total corpus), so caching it
-    * is bounded. */
-  def write(samples: DataFrame): Long = Manifest.withLock(root) {
-    val spark = samples.sparkSession
-    persistRange()
-    val st = manifest
-    val id = st.nextBlockId
-    val hasLabels = samples.columns.contains("labels")
+    * Two writes, one for an empty input: [[insertBlock]] writes the
+    * samples, then the dictionary is written from the SAME
+    * materialization (the input is cached for the pair), so a
+    * non-deterministic source can never persist an index disagreeing
+    * with the written samples. Per-series bounds and the series count
+    * ride that job's per-series aggregate. The input of one block is
+    * one head-window of data (≪ total corpus), so caching it is
+    * bounded. Input columns: `(sample_id, series_key, t, v)` and,
+    * optionally, a `labels` map (a label-less input indexes its series
+    * without label pairs). */
+  def write(samples: DataFrame): Option[Long] = {
     val cached = samples.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // a writer that crashed after claiming this id may have left
-      // debris; the dir is unpublished by definition (we hold the lock),
-      // so clear it wholesale before inserting
-      storeTable(spark)
-      scala.reflect.io.Directory(new java.io.File(blockPath(id))).deleteRecursively()
-      // Normalized storage, like the reference's series dictionary
-      // (`index/index.go:113-137`): the per-row labels map is redundant —
-      // label pairs live once per series in the block's postings index,
-      // sample rows carry only the series key (dictionary-encoded by
-      // parquet) + (t, v). Cuts block bytes ~2-3× and every downstream
-      // shuffle of read samples.
-      val dataObs = Observation(s"graft-block-$id-data")
-      cached
-        .select(
-          col("sample_id").cast("long"), col("series_key"),
-          col("t").cast("long"), col("v").cast("double"))
-        .withColumn("block_id", lit(id))
-        .withColumn("t_bucket", rangeForTimestamp(col("t"), blockRangeMs))
-        .observe(dataObs,
-          min(col("t")).as("mint"), max(col("t")).as("maxt"),
-          count(lit(1)).as("n"))
-        // pmod(hash, W) IS Spark's bucket-id expression, so each task
-        // holds whole buckets and writes one file per (t_bucket, bucket)
-        .repartition(col("t_bucket"),
-          pmod(hash(col("series_key")), lit(seriesBuckets)))
-        .write.mode(SaveMode.Append)
-        // no _SUCCESS markers at the table root: readers trust only the
-        // manifest, and stray marker files would pollute partition
-        // discovery and survive vacuum
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .insertInto(tableName)
-      val stats = dataObs.get
-      // a zero-row write may run zero tasks, leaving the observation unfired
-      require(stats.get("n").exists(_.asInstanceOf[Long] > 0L),
-        "refusing to publish an empty block")
-      val numSeries =
-        if (hasLabels) {
-          val dictObs = Observation(s"graft-block-$id-dict")
-          cached
-            .select(col("series_key"), col("labels"), col("t").cast("long"))
-            // per-series time bounds ride the dict job (reference
-            // series.minTime()/maxTime(), head.go:972): the same
-            // series_key hash aggregate dropDuplicates ran, one extra
-            // min/max — these feed the per-series delete clamp with no
-            // extra scan at delete time.
-            // labels ride as a GROUPING KEY (sorted entry array —
-            // constant per series_key), not a first(map) buffer: the
-            // map buffer demoted this sample-grain write-time aggregate
-            // to a partial SortAggregate (r12)
-            .groupBy(col("series_key"),
-              graft.functions.canonicalLabelEntries(col("labels")).as("__le"))
-            .agg(min(col("t")).as("s_mint"), max(col("t")).as("s_maxt"))
-            .withColumn("labels", map_from_entries(col("__le")))
-            .drop("__le")
-            .observe(dictObs, count(lit(1)).as("n_series"))
-            // strip empty-valued labels before indexing (the reference's
-            // append-time invariant, head.go:832-833): series identity
-            // already drops them (functions.seriesKey), so a surviving
-            // (name, "") posting would make labelNames/labelValues claim
-            // a label the identity says is absent — and would wrongly
-            // resolve `label=""` (means ABSENT) as a positive posting
-            .select(col("series_key"), col("s_mint"), col("s_maxt"),
-              explode(map_filter(col("labels"), (_, v) => v.isNotNull && v =!= ""))
-                .as(Seq("label_name", "label_value")))
-            .write.mode(SaveMode.Overwrite)
-            .options(BlockStore.parquetWriteOptions)
-            .parquet(s"$dictDir/block_id=$id")
-          dictObs.get("n_series").asInstanceOf[Long]
-        } else
-          // label-less input (no index to derive the count from): one
-          // column-pruned scan of the just-written series_key column
-          spark.read.parquet(blockPath(id))
-            .agg(countDistinct("series_key")).head().getLong(0)
-      val meta = BlockMeta(
-        blockId = id,
-        mint = stats("mint").asInstanceOf[Long],
-        maxt = stats("maxt").asInstanceOf[Long] + 1, // half-open (db.go:634-641)
-        numSamples = stats("n").asInstanceOf[Long],
-        numSeries = numSeries,
-        numTombstones = 0L,
-        bytes = du(blockPath(id)))
-      Manifest.publish(root, st.copy(blocks = st.blocks :+ meta))
-      markSynced()
-      id
+    val labels =
+      if (cached.columns.contains("labels")) graft.functions.canonicalLabelEntries(col("labels"))
+      else lit(null).cast(BlockStore.LabelEntries)
+    try appendBlock(cached) { _ =>
+      // labels ride as a GROUPING KEY (sorted entry array — constant
+      // per series_key), not a first(map) buffer: the map buffer demoted
+      // this sample-grain aggregate to a partial SortAggregate (r12)
+      cached.groupBy(col("series_key"), labels.as("labels"))
+        .agg(min(col("t").cast("long")).as("s_mint"), max(col("t").cast("long")).as("s_maxt"))
     } finally cached.unpersist()
   }
+
+  /** Publish `rows` as the store's next block, its dictionary written
+    * from `series(id)` (per-series rows, [[BlockStore.writeDict]]'s
+    * input); None, publishing nothing, when `rows` is empty. */
+  private def appendBlock(rows: DataFrame)(series: Long => DataFrame): Option[Long] =
+    Manifest.withLock(root) {
+      persistRange()
+      val st = manifest
+      val id = st.nextBlockId
+      storeTable(rows.sparkSession)
+      insertBlock(id, rows).map { case (mint, maxt, n) =>
+        val numSeries = BlockStore.writeDict(series(id), dictPath(id), SaveMode.Overwrite)
+        Manifest.publish(root, st.copy(blocks = st.blocks :+
+          BlockMeta(id, mint, maxt, n, numSeries, numTombstones = 0L, bytes = du(blockPath(id)))))
+        markSynced()
+        id
+      }
+    }
+
+  /** Insert `rows` into the bucketed table as block `id`: one shuffle
+    * keyed on (t_bucket, spark-bucket-id) so every executor writes and
+    * each t_bucket dir gets ≤ W bucket files; the writer applies the
+    * table's `SORTED BY (series_key, t)` inside each file, which is
+    * what keeps parquet row-group stats tight. Returns the block's
+    * half-open `[mint, maxt)` and sample count, observed by the write
+    * itself (no post-hoc re-scan); None when no row was written. */
+  private def insertBlock(id: Long, rows: DataFrame): Option[(Long, Long, Long)] = {
+    // a writer that crashed after claiming this id may have left
+    // debris; the dir is unpublished by definition (the caller holds
+    // the lock), so clear it wholesale before inserting
+    scala.reflect.io.Directory(new java.io.File(blockPath(id))).deleteRecursively()
+    // Normalized storage, like the reference's series dictionary
+    // (`index/index.go:113-137`): the per-row labels map is redundant —
+    // label pairs live once per series in the block's postings index,
+    // sample rows carry only the series key (dictionary-encoded by
+    // parquet) + (t, v). Cuts block bytes ~2-3× and every downstream
+    // shuffle of read samples.
+    val obs = Observation(s"graft-block-$id")
+    rows
+      .select(
+        col("sample_id").cast("long"), col("series_key"),
+        col("t").cast("long"), col("v").cast("double"))
+      .withColumn("block_id", lit(id))
+      .withColumn("t_bucket", rangeForTimestamp(col("t"), blockRangeMs))
+      .observe(obs,
+        min(col("t")).as("mint"), max(col("t")).as("maxt"),
+        count(lit(1)).as("n"))
+      // pmod(hash, W) IS Spark's bucket-id expression, so each task
+      // holds whole buckets and writes one file per (t_bucket, bucket)
+      .repartition(col("t_bucket"),
+        pmod(hash(col("series_key")), lit(seriesBuckets)))
+      .write.mode(SaveMode.Append)
+      // no _SUCCESS markers at the table root: readers trust only the
+      // manifest, and stray marker files would pollute partition
+      // discovery and survive vacuum
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .insertInto(tableName)
+    val stats = obs.get
+    // a zero-row write may run zero tasks, leaving the observation unfired
+    stats.get("n").map(_.asInstanceOf[Long]).filter(_ > 0L).map(n =>
+      (stats("mint").asInstanceOf[Long], stats("maxt").asInstanceOf[Long] + 1, n)) // half-open (db.go:634-641)
+  }
+
+  /** Per-series rows of block `id` as written — `(series_key, s_mint,
+    * s_maxt)` from one column-pruned scan of its `(series_key, t)`,
+    * grouped on the bucketed scan — with each series' label entries
+    * taken from the dictionaries under `labelDirs` (the blocks it was
+    * made from). A series with no surviving sample is not listed. One
+    * aggregate over both inputs is the left join at series grain: a
+    * broadcast join's driver-side hash relation outlived a forced GC
+    * right after the compaction (ingest_compact, 3 GB heap, 4 cores:
+    * 89 MB used with it, 73 MB without), and a sort-merge join made
+    * the compaction slower. */
+  private def writtenSeries(spark: SparkSession, id: Long, labelDirs: Seq[String]): DataFrame =
+    readBlocks(spark, Seq(id))
+      .groupBy("series_key").agg(min("t").as("s_mint"), max("t").as("s_maxt"))
+      .withColumn("e", lit(null).cast(BlockStore.LabelEntries.elementType))
+      .unionByName(BlockStore.readDict(spark, labelDirs).select(col("series_key"),
+        lit(null).cast("long").as("s_mint"), lit(null).cast("long").as("s_maxt"),
+        struct(col("label_name").as("key"), col("label_value").as("value")).as("e")))
+      .groupBy("series_key")
+      .agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"), collect_set("e").as("labels"))
+      .where(col("s_mint").isNotNull)
 
   private def readBlocks(spark: SparkSession, ids: Seq[Long]): DataFrame =
     storeTable(spark).where(col("block_id").isin(ids: _*))
@@ -538,13 +552,12 @@ final class BlockStore(
     * become redundant (and are absorbed by the index distinct) once a
     * real block first persists the series. */
   def registerSeries(labelled: DataFrame): Unit = Manifest.withLock(root) {
-    labelled
-      .dropDuplicates("series_key")
-      .select(col("series_key"),
-        explode(col("labels")).as(Seq("label_name", "label_value")))
-      .write.mode(SaveMode.Append)
-      .options(BlockStore.parquetWriteOptions)
-      .parquet(headDictDir)
+    BlockStore.writeDict(
+      labelled.dropDuplicates("series_key").select(col("series_key"),
+        map_entries(col("labels")).as("labels"),
+        lit(null).cast("long").as("s_mint"), lit(null).cast("long").as("s_maxt")),
+      headDictDir, SaveMode.Append)
+    ()
   }
 
   /** Head truncation's series GC (reference `Head.gc`,
@@ -565,26 +578,11 @@ final class BlockStore(
     * [[graft.query.Postings.select]] runs matcher set algebra over.
     * Sample-less registered series ([[registerSeries]]) ride along like
     * the reference's head series map entries. */
-  def postingsIndex(spark: SparkSession): DataFrame = {
-    val ids = indexedBlocks(manifest)
-    val hasHead = Files.isDirectory(Paths.get(headDictDir))
-    if (ids.isEmpty && !hasHead) {
-      import spark.implicits._
-      return Seq.empty[(String, String, String)]
-        .toDF("label_name", "label_value", "series_key")
-    }
-    val head =
-      if (hasHead)
-        Some(spark.read.parquet(headDictDir)
-          .select("label_name", "label_value", "series_key"))
-      else None
-    val blocksIdx =
-      if (ids.isEmpty) None
-      else Some(spark.read.option("basePath", dictDir)
-        .parquet(ids.map(id => s"$dictDir/block_id=$id"): _*)
-        .select("label_name", "label_value", "series_key"))
-    (blocksIdx ++ head).reduce(_ unionByName _).distinct()
-  }
+  def postingsIndex(spark: SparkSession): DataFrame =
+    BlockStore.readDict(spark,
+      indexedBlocks(manifest).map(dictPath) ++
+        Some(headDictDir).filter(d => Files.isDirectory(Paths.get(d))))
+      .select("label_name", "label_value", "series_key").distinct()
 
   /** The live block ids whose dictionaries make up the postings index,
     * refusing a state the index cannot answer for. A store whose only
@@ -596,34 +594,27 @@ final class BlockStore(
     * the empty label set, like the reference's head after a full-range
     * delete drops the series' labels and symbols (head_test.go:393-396)
     * — only a store with no manifest at all (wrong path / never written)
-    * fails loudly. So does a block written from label-less samples (e.g.
-    * a streaming sink): it has no postings, so label/matcher queries
-    * over the store are undefined rather than answered from a partial
-    * index. */
+    * fails loudly. So does a live block whose dictionary is missing:
+    * label/matcher queries are refused rather than answered from a
+    * partial index. */
   private def indexedBlocks(st: ManifestState): Seq[Long] = {
     val ids = st.blocks.map(_.blockId)
     if (ids.isEmpty && !Files.isDirectory(Paths.get(headDictDir)))
       require(Manifest.currentVersion(root) > 0L,
         s"block store at $root has no published blocks")
-    val missing = ids.filterNot(id =>
-      Files.isDirectory(Paths.get(s"$dictDir/block_id=$id")))
+    val missing = ids.filterNot(id => Files.isDirectory(Paths.get(dictPath(id))))
     require(missing.isEmpty,
-      s"store at $root has no label index for blocks ${missing.mkString(",")} " +
-        "(written without a labels column); label/matcher queries unavailable")
+      s"store at $root has no label dictionary for blocks ${missing.mkString(",")}")
     ids
   }
 
-  /** One block's postings dictionary, raw — `(series_key, label_name,
-    * label_value)` plus the per-series `(s_mint, s_maxt)` bounds when
-    * the block was written with them (r7+). The `tsdb analyze` CLI's
-    * input (reference reads the same per-block index,
-    * `cmd/tsdb/main.go:464-616`). */
+  /** One block's postings dictionary, raw (the format of the class
+    * doc). The `tsdb analyze` CLI's input (reference reads the same
+    * per-block index, `cmd/tsdb/main.go:464-616`). */
   def blockIndex(spark: SparkSession, blockId: Long): DataFrame = {
     require(manifest.blocks.exists(_.blockId == blockId),
       s"block $blockId is not live in the store at $root")
-    require(Files.isDirectory(Paths.get(s"$dictDir/block_id=$blockId")),
-      s"block $blockId has no label index (written without labels)")
-    spark.read.parquet(s"$dictDir/block_id=$blockId")
+    BlockStore.readDict(spark, Seq(dictPath(blockId)))
   }
 
   /** A1 over the store: distinct label names from the index alone
@@ -646,10 +637,11 @@ final class BlockStore(
       .select(col("label_value")).distinct().orderBy("label_value")
   }
 
-  private def localColumn(spark: SparkSession, name: String, xs: Seq[String]): DataFrame = {
-    import spark.implicits._
-    xs.toDF(name)
-  }
+  /** `xs` as a one-column local relation (`isLocal`: `collect()` runs
+    * no job). */
+  private def localColumn(spark: SparkSession, name: String, xs: Seq[String]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(xs.map(Row(_)): _*),
+      StructType(Seq(StructField(name, StringType))))
 
   /** Record deletion intervals for every series matching the conjunction
     * over `[mint, maxt]` (reference `DB.Delete`, `db.go:1203-1232`):
@@ -674,10 +666,9 @@ final class BlockStore(
       // then per SERIES (head.go:972-977): each matched series clamps
       // to its own [s_mint, s_maxt] recorded in the block dictionaries
       // at write time, so a later append beyond a series' old max also
-      // survives even when it lands inside the store-wide range. A
-      // series the bounds can't cover (pre-bounds dict, or the "{}"
-      // extra-series record the index can't see) keeps the store-level
-      // clamp — the pre-r7 behavior, wider but never past the request.
+      // survives even when it lands inside the store-wide range. The
+      // "{}" extra-series record, which the index can't see, keeps the
+      // store-level clamp: wider, but never past the request.
       val bs = manifest.blocks
       val mint = if (bs.isEmpty) mint0 else math.max(mint0, bs.map(_.mint).min)
       val maxt = if (bs.isEmpty) maxt0 else math.min(maxt0, bs.map(_.maxt).max - 1)
@@ -685,19 +676,17 @@ final class BlockStore(
       val idx = postingsIndex(spark)
       val keys = graft.query.Postings
         .seriesFor(idx, extraSeriesFor(spark, idx, matchers), matchers)
-      val clamped = seriesBounds(spark) match {
-        case Some(b) => keys.join(b, Seq("series_key"), "left")
-          .select(col("series_key"),
-            greatest(lit(mint), org.apache.spark.sql.functions
-              .coalesce(col("s_mint"), lit(mint))).as("mint"),
-            least(lit(maxt), org.apache.spark.sql.functions
-              .coalesce(col("s_maxt"), lit(maxt))).as("maxt"))
-          // a matched series wholly outside the request records nothing
-          // (the reference's `continue` on an empty clamp)
-          .where(col("mint") <= col("maxt"))
-        case None => keys.select(col("series_key"),
-          lit(mint).as("mint"), lit(maxt).as("maxt"))
-      }
+      val bounds = BlockStore.readDict(spark, bs.map(b => dictPath(b.blockId)))
+        .groupBy("series_key").agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
+      val clamped = keys.join(bounds, Seq("series_key"), "left")
+        .select(col("series_key"),
+          greatest(lit(mint), org.apache.spark.sql.functions
+            .coalesce(col("s_mint"), lit(mint))).as("mint"),
+          least(lit(maxt), org.apache.spark.sql.functions
+            .coalesce(col("s_maxt"), lit(maxt))).as("maxt"))
+        // a matched series wholly outside the request records nothing
+        // (the reference's `continue` on an empty clamp)
+        .where(col("mint") <= col("maxt"))
       // probe at most threshold+1 keys: a narrow delete inlines T
       // records; a wide one NEVER materializes its series set on the
       // driver — it spills to a parquet side table referenced by one
@@ -734,25 +723,6 @@ final class BlockStore(
       }
       markSynced()
     }
-
-  /** Per-series time bounds recorded in the block dictionaries at write
-    * time (reference `series.minTime()/maxTime()`, head.go:972): the
-    * union over live blocks, min/max-merged per series. None when no
-    * live dict carries the bounds columns (a pre-bounds store) —
-    * [[delete]] then falls back to the store-level clamp. */
-  private def seriesBounds(spark: SparkSession): Option[DataFrame] = {
-    val ids = manifest.blocks.map(_.blockId)
-      .filter(id => Files.isDirectory(Paths.get(s"$dictDir/block_id=$id")))
-    if (ids.isEmpty) return None
-    val df = spark.read.option("basePath", dictDir)
-      .parquet(ids.map(id => s"$dictDir/block_id=$id"): _*)
-    if (!df.columns.contains("s_mint")) return None
-    // rows from a pre-bounds block surface as nulls; min/max ignore
-    // them, and a series present ONLY in such blocks yields null bounds
-    // that the caller's coalesce turns back into the store-level clamp
-    Some(df.groupBy("series_key")
-      .agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt")))
-  }
 
   /** Per-block tombstone counters feeding the planner's >5% trigger
     * (`compact.go:211-220`). Spilled side tables count via their
@@ -855,72 +825,26 @@ final class BlockStore(
     val newId = st.nextBlockId
     val inputs = st.blocks.filter(b => ids.contains(b.blockId))
     require(inputs.size == ids.size, s"unknown block ids in $ids")
-    val raw = readBlocks(spark, ids)
-    val deduped = Merge.dedupLatest(raw, blockRecency(inputs), col("sample_id"))
+    val deduped = Merge.dedupLatest(readBlocks(spark, ids), blockRecency(inputs), col("sample_id"))
     val nTombs = tombstoneCount(st)
     val cleaned =
       if (nTombs == 0L) deduped
       else Tombstones.applyTo(deduped, tombstoneTable(spark),
         broadcastTombstones = nTombs <= broadcastLimit)
-    // stats ride the rewrite via observe — no post-hoc re-scan job
-    scala.reflect.io.Directory(new java.io.File(blockPath(newId))).deleteRecursively()
-    val obs = Observation(s"graft-compact-$newId")
-    cleaned
-      .select(
-        col("sample_id").cast("long"), col("series_key"),
-        col("t").cast("long"), col("v").cast("double"))
-      .withColumn("block_id", lit(newId))
-      .withColumn("t_bucket", rangeForTimestamp(col("t"), blockRangeMs))
-      .observe(obs,
-        min(col("t")).as("mint"), max(col("t")).as("maxt"),
-        count(lit(1)).as("n"))
-      .repartition(col("t_bucket"),
-        pmod(hash(col("series_key")), lit(seriesBuckets)))
-      .write.mode(SaveMode.Append)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .insertInto(tableName)
-    val stats = obs.get
-    if (Files.isDirectory(Paths.get(dictDir))) {
-      val dictIds = ids.filter(id => Files.isDirectory(Paths.get(s"$dictDir/block_id=$id")))
-      if (dictIds.nonEmpty) {
-        val merged0 = spark.read.option("basePath", dictDir)
-          .parquet(dictIds.map(id => s"$dictDir/block_id=$id"): _*)
-        // carry per-series bounds through the merge (min/max over the
-        // inputs — conservative-wide if tombstones just narrowed the
-        // data, which only weakens the delete clamp toward the
-        // requested interval, never past it); dicts from a pre-bounds
-        // store keep the old 3-column shape
-        val merged =
-          if (merged0.columns.contains("s_mint"))
-            merged0.groupBy("series_key", "label_name", "label_value")
-              .agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
-          else merged0.select("label_name", "label_value", "series_key").distinct()
-        merged.write.mode(SaveMode.Overwrite)
-          .options(BlockStore.parquetWriteOptions)
-          .parquet(s"$dictDir/block_id=$newId")
-      }
+    // None: everything tombstoned away. Otherwise the new block's
+    // dictionary comes from the rows it holds, so its series, bounds
+    // and count are exact however much the tombstones removed
+    val meta = insertBlock(newId, cleaned).map { case (mint, maxt, n) =>
+      val numSeries = BlockStore.writeDict(
+        writtenSeries(spark, newId, ids.map(dictPath)), dictPath(newId), SaveMode.Overwrite)
+      BlockMeta(newId, mint, maxt, n, numSeries, numTombstones = 0L, bytes = du(blockPath(newId)))
     }
-    // an all-tombstoned input writes zero rows and may run zero tasks,
-    // in which case the observation never fires and the map is empty
-    val n = stats.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    // exact series count via one column-pruned scan of the written
-    // block's dictionary-encoded series_key column (the merged input
-    // dicts may still list series the tombstones just removed entirely,
-    // so they can't be the source of truth)
-    val numSeries =
-      if (n == 0L) 0L
-      else spark.read.parquet(blockPath(newId))
-        .agg(countDistinct("series_key")).head().getLong(0)
     val keep = st.blocks.filterNot(b => ids.contains(b.blockId))
     // drop intervals/side tables now fully applied (touch no surviving block)
     val tombs = st.tombstones.filter(t =>
       keep.exists(b => t.mint < b.maxt && t.maxt >= b.mint))
     val files = st.tombstoneFiles.filter(f =>
       keep.exists(b => f.mint < b.maxt && f.maxt >= b.mint))
-    val meta =
-      if (n == 0L) None // everything tombstoned away
-      else Some(BlockMeta(newId, stats("mint").asInstanceOf[Long],
-        stats("maxt").asInstanceOf[Long] + 1, n, numSeries, 0L, du(blockPath(newId))))
     val newBlocks = recount(keep ++ meta, tombs, files)
     // newId enters the high-water even if the compacted block came out
     // empty (everything tombstoned): its id must still never be reused
@@ -1005,13 +929,15 @@ final class BlockStore(
     * table creation: a store that grew 100× re-buckets by compacting
     * into a NEW store (fresh table, new W), not by rewriting in place.
     * Blocks are replayed in recency order (fresh contiguous ids keep
-    * later-block-wins intact), label dictionaries are copied verbatim,
-    * and tombstones (inline + spilled) re-publish under the destination
-    * manifest — so `readRange` over the destination is row-identical
-    * while every per-series stage now runs `newBuckets` wide. The
-    * source store is untouched; cutover is pointing readers at
-    * `destRoot`. One Spark job per block, each a bucketed write at the
-    * new W — the same cost shape as a full compaction. */
+    * later-block-wins intact), each block's dictionary is rewritten from
+    * its replayed rows and its source dictionary's labels (the head
+    * dictionary from itself), and tombstones (inline + spilled)
+    * re-publish under the destination manifest — so `readRange` over
+    * the destination is row-identical while every per-series stage now
+    * runs `newBuckets` wide. The source store is untouched; cutover is
+    * pointing readers at `destRoot`. Per block, a bucketed write at the
+    * new W and its dictionary write — the same cost shape as a full
+    * compaction. */
   def rebucket(spark: SparkSession, destRoot: String, newBuckets: Int): BlockStore =
     Manifest.withLock(root) {
       require(!Files.exists(Paths.get(destRoot, "meta")),
@@ -1020,16 +946,13 @@ final class BlockStore(
         tombstoneSpillThreshold, broadcastLimit)
       val st = manifest
       st.blocks.sortBy(_.blockId).foreach { b =>
-        val newId = dest.write(
-          storeTable(spark)
-            .where(col("block_id") === b.blockId)
-            .drop("block_id", "t_bucket"))
-        val dict = Paths.get(s"$dictDir/block_id=${b.blockId}")
-        if (Files.isDirectory(dict))
-          copyTree(dict, Paths.get(dest.dictDir, s"block_id=$newId"))
+        dest.appendBlock(
+          storeTable(spark).where(col("block_id") === b.blockId).drop("block_id", "t_bucket"))(
+          dest.writtenSeries(spark, _, Seq(dictPath(b.blockId))))
       }
       if (Files.isDirectory(Paths.get(headDictDir)))
-        copyTree(Paths.get(headDictDir), Paths.get(dest.headDictDir))
+        BlockStore.writeDict(BlockStore.dictSeries(spark, Seq(headDictDir)),
+          dest.headDictDir, SaveMode.Overwrite)
       // spilled tombstone side tables get fresh ids in the destination's
       // id space (they share it with block ids)
       var nextId = Manifest.load(destRoot).nextBlockId
@@ -1124,6 +1047,49 @@ object BlockStore {
     // default change would silently move it.
     "parquet.compression.codec.zstd.level" -> "3",
     "parquet.writer.version" -> "v2")
+
+  /** A series' label pairs as [[writeDict]] takes them: the entry array
+    * of [[graft.functions.canonicalLabelEntries]]. */
+  private[storage] val LabelEntries: ArrayType = ArrayType(StructType(Seq(
+    StructField("key", StringType), StructField("value", StringType))))
+
+  /** The dictionary format of the class doc, declared: a read that names
+    * its schema starts no schema-inference job. */
+  private val DictSchema = StructType(Seq(
+    StructField("series_key", StringType), StructField("s_mint", LongType),
+    StructField("s_maxt", LongType), StructField("label_name", StringType),
+    StructField("label_value", StringType)))
+
+  /** The one reader of the dictionary format: the union of the
+    * dictionary directories (or part files) at `paths`. */
+  private[storage] def readDict(spark: SparkSession, paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(java.util.List.of[Row](), DictSchema)
+    else spark.read.schema(DictSchema).parquet(paths: _*)
+
+  /** The one writer of the dictionary format: `series` holds one row per
+    * series, `(series_key, labels, s_mint, s_maxt)` with `labels` in
+    * [[LabelEntries]] form (null for none). Empty-valued labels are
+    * stripped here. Returns the number of series rows — a block's
+    * `numSeries`, counted by the write job itself. */
+  private[storage] def writeDict(series: DataFrame, dir: String, mode: SaveMode): Long = {
+    val obs = Observation()
+    series
+      .observe(obs, count(lit(1)).as("n"))
+      .select(col("series_key"), col("s_mint"), col("s_maxt"),
+        explode(filter(col("labels"), e => e("value").isNotNull && e("value") =!= "")).as("e"))
+      .select(col("series_key"), col("s_mint"), col("s_maxt"),
+        col("e.key").as("label_name"), col("e.value").as("label_value"))
+      .write.mode(mode).options(parquetWriteOptions).parquet(dir)
+    obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+  }
+
+  /** The dictionaries at `paths` as [[writeDict]]'s per-series rows:
+    * a series listed by several keeps the union of their pairs and the
+    * hull of their bounds. */
+  private[storage] def dictSeries(spark: SparkSession, paths: Seq[String]): DataFrame =
+    readDict(spark, paths).groupBy("series_key").agg(
+      collect_set(struct(col("label_name").as("key"), col("label_value").as("value"))).as("labels"),
+      min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
 
   /** [[parquetWriteOptions]] rendered for a `CREATE TABLE ... OPTIONS`
     * clause. */

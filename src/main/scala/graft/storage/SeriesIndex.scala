@@ -16,8 +16,7 @@ import graft.matchers.Matcher
   * a block id reused after `destroy` + a rebuild, or a head dictionary
   * a rollback appended to, never matches a stale entry. Per series: its
   * key, its label map and its `[s_mint, s_maxt]` (`Long.MinValue` /
-  * `Long.MaxValue` where the dictionary records no bounds: the head's,
-  * or a pre-bounds block's). */
+  * `Long.MaxValue` where the dictionary records no bounds: the head's). */
 private[storage] final class DictEntry(
     val files: Seq[String],
     val keys: Array[String],
@@ -168,11 +167,9 @@ private[storage] object SeriesIndex {
       dir: String,
       files: Seq[String],
       intern: (String, Map[String, String]) => (String, Map[String, String])): DictEntry = {
-    val df = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
-    def bound(c: String, none: Long) =
-      if (df.columns.contains(c)) coalesce(col(c), lit(none)) else lit(none)
-    val rows = df.select(col("series_key"), col("label_name"), col("label_value"),
-        bound("s_mint", Long.MinValue), bound("s_maxt", Long.MaxValue))
+    val rows = BlockStore.readDict(spark, files.map(f => s"$dir/$f"))
+      .select(col("series_key"), col("label_name"), col("label_value"),
+        coalesce(col("s_mint"), lit(Long.MinValue)), coalesce(col("s_maxt"), lit(Long.MaxValue)))
       .collect()
     val bySeries = mutable.LinkedHashMap.empty[String, (Map[String, String], Long, Long)]
     for (r <- rows) {

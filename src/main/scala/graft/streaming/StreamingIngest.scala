@@ -127,21 +127,16 @@ object StreamingIngest {
     * into block partitions per micro-batch (ST1 + ST4). Returns the
     * running query; stop it to "close" the appender. Series state
     * expires after two block ranges idle (≙ head truncation window).
-    *
-    * With `indexLabels` (default), each persisted block also gets its
-    * postings index from the samples' label maps, so matcher/label
-    * queries work on streamed stores exactly like batch-written ones —
-    * the reference's head serves matchers the same way
-    * (`head.go:1292-1295`). Pass `false` only for genuinely label-less
-    * streams: their blocks then have no index and matcher queries fail
-    * loudly instead of silently returning nothing. */
+    * Each persisted block gets its postings index from the samples'
+    * label maps, so matcher/label queries work on streamed stores
+    * exactly like batch-written ones — the reference's head serves
+    * matchers the same way (`head.go:1292-1295`). */
   def ingest(
       samples: Dataset[Sample],
       store: BlockStore,
       checkpointDir: String,
       minValidTime: Long,
-      stateTtlMs: Long = -1L,
-      indexLabels: Boolean = true): StreamingQuery = {
+      stateTtlMs: Long = -1L): StreamingQuery = {
     import samples.sparkSession.implicits._
     val ttl = if (stateTtlMs == -1L) 2 * store.blockRangeMs else stateTtlMs
     validated(samples, minValidTime, ttl)
@@ -151,15 +146,10 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Validated], _: Long) =>
-        // a micro-batch can be empty (e.g. timeout-only triggers) — the
-        // reference never writes empty blocks either. (The emptiness
-        // probe is an executeTake(1) — it stops at the first non-empty
-        // partition, so it does NOT re-run the full stateful plan;
-        // caching the batch instead was measured ~8% slower.)
-        if (!batch.isEmpty) {
-          val rows = batch.toDF().withColumnRenamed("arrival", "sample_id").drop("status")
-          store.write(if (indexLabels) rows else rows.drop("labels"))
-        }
+        // a micro-batch can be empty (e.g. timeout-only triggers): the
+        // write then publishes nothing, like the reference, which never
+        // writes empty blocks
+        store.write(batch.toDF().withColumnRenamed("arrival", "sample_id").drop("status"))
         ()
       }
       .start()

@@ -172,6 +172,29 @@ class ApiServerSpec extends SparkSuite
     assert(get("/api/v1/labels?limit=abc")._1 == 400)
   }
 
+  test("on a warm index, /labels and /label/job/values start no Spark job") {
+    assert(get("/api/v1/labels")._1 == 200) // loads the index
+    val sc = spark.sparkContext
+    val fence = s"graft-api-fence-${System.nanoTime}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(get("/api/v1/labels") == (200, """{"status":"success","data":["inst","job"]}"""))
+      assert(get("/api/v1/label/job/values") == (200, """{"status":"success","data":["a","b"]}"""))
+      // a fence job orders every earlier job-start event before it
+      sc.setJobGroup(fence, "fence")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (!groups.contains(fence) && System.nanoTime < deadline) Thread.sleep(10)
+      assert(groups.contains(fence), "fence job never reached the listener")
+      assert(groups.toArray.count(_ != fence) == 0, groups)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("format_query round-trips; parse_query returns the AST tree") {
     val (c1, b1) = get(s"/api/v1/format_query?query=${enc(
       "sum by(job) (rate(m{a=\"b\"}[5m])) / 2")}")

@@ -2,8 +2,9 @@ package graft.storage
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -179,28 +180,44 @@ class SeriesIndexSpec extends SparkSuite {
     assert(sameReads(store, 0L, 1000L, Eq("job", "rare")).size == n / 10)
   }
 
-  /** Job count of `body`, as seen by a listener: a fence job in another
-    * group, run after it, orders every earlier job-start event first. */
-  private def jobsIn(body: => Unit): Int = {
-    val group = s"graft-ix-${System.nanoTime}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** The jobs `body` starts, as seen by a listener, each by the call
+    * site of the SQL query it ran in (None: it ran outside any query).
+    * Jobs are told apart by a local property, which Spark copies into
+    * every job of the thread, broadcast threads included. A fence job,
+    * run after `body`, orders every earlier event first. */
+  private def jobsOf(body: => Unit): Seq[Option[String]] = {
+    val key = "graft.test.jobs"
+    val tag = s"graft-ix-${System.nanoTime}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String])]()
+    val queries = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add((prop(key).getOrElse(""), prop("spark.sql.execution.id")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: SparkListenerSQLExecutionStart => queries.put(q.executionId.toString, q.description)
+        case _ =>
+      }
     }
     val sc = spark.sparkContext
+    def tagged(t: String)(f: => Unit): Unit = {
+      sc.setLocalProperty(key, t)
+      try f finally sc.setLocalProperty(key, null)
+    }
+    def seen = jobs.toArray(Array.empty[(String, Option[String])]).toSeq
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-fence", "fence")
-      try spark.range(1).count() finally sc.clearJobGroup()
+      tagged(tag)(body)
+      tagged(tag + "-fence")(spark.range(1).count())
       val deadline = System.nanoTime + 30000000000L
-      while (!seen.contains(group + "-fence") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(seen.contains(group + "-fence"), "fence job never reached the listener")
-      seen.toArray.count(_ == group)
+      while (!seen.exists(_._1 == tag + "-fence") && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen.exists(_._1 == tag + "-fence"), "fence job never reached the listener")
+      seen.collect { case (t, query) if t == tag => query.map(queries.getOrDefault(_, "")) }
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsIn(body: => Unit): Int = jobsOf(body).size
 
   test("on a warm cache, matcher resolution and label metadata start no Spark job") {
     val store = new BlockStore(tmp("graft-ix-jobs"), 7 * DAY)
@@ -226,7 +243,7 @@ class SeriesIndexSpec extends SparkSuite {
     assert(first.labelValues(spark, "job").as[String].collect().toSeq == Seq("old"))
     first.destroy(spark)
     val again = new BlockStore(root, 1000L)
-    assert(again.write(seriesRows(100L, Seq(Map("job" -> "new")))) == 1L)
+    assert(again.write(seriesRows(100L, Seq(Map("job" -> "new")))) == Some(1L))
     assert(again.labelValues(spark, "job").as[String].collect().toSeq == Seq("new"))
     assert(again.readRange(spark, 0L, 1000L, withLabels = true, Eq("job", "new"))
       .select(col("labels").getItem("job")).as[String].collect().toSeq == Seq("new"))
@@ -271,5 +288,61 @@ class SeriesIndexSpec extends SparkSuite {
     store.truncateHead()
     assert(values == Seq("cpu"))
     assert(BlockStore.seriesIndexes(store.tableName).head.isEmpty)
+  }
+
+  test("a series deleted entirely leaves the compacted dictionary, on both sides of the gate") {
+    val store = new BlockStore(tmp("graft-ix-gone"), 1000L)
+    store.write(seriesRows(100L, Seq(
+      Map("job" -> "a"), Map("job" -> "b", "zone" -> "z"), Map.empty[String, String])))
+    store.write(seriesRows(200L, Seq(Map("job" -> "a"), Map("job" -> "b", "zone" -> "z"))))
+    store.delete(spark, 0L, 1000L, Eq("job", "b"))
+    val id = store.compact(spark, Seq(1L, 2L)).get
+    assert(store.labelNames(spark).as[String].collect().toSeq == Seq("job"))
+    assert(store.labelValues(spark, "job").as[String].collect().toSeq == Seq("a"))
+    sameMetadata(store)
+    // numSeries counts what the block holds: {job="a"} and the label-less
+    // "{}", which owns no dictionary row
+    val Seq(meta) = store.manifest.blocks
+    val dict = store.blockIndex(spark, id)
+    assert(meta.numSeries == 2L)
+    assert(meta.numSeries == dict.select("series_key").distinct().count() + 1)
+    assert(store.readRange(spark, 0L, 1000L).select("series_key").distinct().count() == meta.numSeries)
+    // the bounds are the surviving samples' own
+    assert(dict.select("series_key", "s_mint", "s_maxt").as[(String, Long, Long)].collect().toSeq ==
+      Seq(("{job=\"a\"}", 100L, 200L)))
+  }
+
+  test("a rolled-back series' empty-valued label is no label name, on both sides of the gate") {
+    val store = new BlockStore(tmp("graft-ix-rollback-empty"), 1000L)
+    store.write(seriesRows(100L, Seq(Map("job" -> "a"))))
+    graft.ingest.Appender.txn(store)
+      .add(seriesRows(200L, Seq(Map("job" -> "c", "zone" -> ""))).withColumnRenamed("sample_id", "arrival"))
+      .rollback()
+    assert(store.labelNames(spark).as[String].collect().toSeq == Seq("job"))
+    assert(store.labelValues(spark, "job").as[String].collect().toSeq == Seq("a", "c"))
+    assert(store.labelValues(spark, "zone").collect().isEmpty)
+    sameMetadata(store)
+  }
+
+  test("building the postings index starts no Spark job") {
+    val store = new BlockStore(tmp("graft-ix-declared"), 1000L)
+    store.write(seriesRows(100L, Seq(Map("job" -> "a"))))
+    store.write(seriesRows(1100L, Seq(Map("job" -> "b"))))
+    store.registerSeries(seriesRows(0L, Seq(Map("job" -> "c"))))
+    assert(jobsIn { store.postingsIndex(spark); () } == 0)
+    assert(store.postingsIndex(spark).select("label_value").as[String].collect().sorted.toSeq ==
+      Seq("a", "b", "c"))
+  }
+
+  test("a two-block compact starts no schema-inference job and no count re-scan") {
+    val store = new BlockStore(tmp("graft-ix-compact-jobs"), 1000L)
+    store.write(seriesRows(100L, Seq(Map("job" -> "a"), Map("job" -> "b"))))
+    store.write(seriesRows(200L, Seq(Map("job" -> "a"))))
+    val jobs = jobsOf { store.compact(spark, Seq(1L, 2L)); () }
+    assert(jobs.nonEmpty)
+    // every job serves one of the two writes: a schema inference runs
+    // outside any query, and a count re-scan in a query of its own
+    assert(jobs.forall(_.exists(q => q.startsWith("insertInto at") || q.startsWith("parquet at"))), jobs)
+    assert(store.manifest.blocks.map(_.numSeries) == Seq(2L))
   }
 }

@@ -135,7 +135,7 @@ class BlockStoreSpec extends SparkSuite {
   test("write publishes a block with manifest stats; read round-trips") {
     val store = freshStore()
     val id = store.write(samples)
-    assert(id == 1L)
+    assert(id == Some(1L))
     val Seq(meta) = store.manifest.blocks
     assert(meta.numSamples == samples.count())
     assert(meta.numSeries == samples.select("series_key").distinct().count())

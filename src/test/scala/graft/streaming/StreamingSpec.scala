@@ -435,21 +435,6 @@ class StreamingSpec extends SparkSuite {
     assert(store.labelValues(spark, "host").as[String].collect().toSeq == Seq("h1", "h2"))
     assert(store.readRange(spark, 0, 5000, graft.matchers.Not(graft.matchers.Eq("name", "cpu")))
       .select("t").as[Long].collect().toSeq == Seq(2500L))
-
-    // a genuinely label-less stream (indexLabels = false) still fails
-    // loudly on matcher queries instead of silently returning nothing
-    val root2 = Files.createTempDirectory("graft-stream-noidx").toString
-    val ckpt2 = Files.createTempDirectory("graft-ckpt-noidx").toString
-    val store2 = new BlockStore(root2, blockRangeMs = 1000L)
-    val in2 = MemoryStream[Sample]
-    in2.addData(Sample("s", 100, 1.0, 1))
-    val q2 = StreamingIngest.ingest(in2.toDS(), store2, ckpt2, minValidTime = 0,
-      indexLabels = false)
-    q2.processAllAvailable()
-    q2.stop()
-    assert(store2.read(spark).count() == 1)
-    assertThrows[IllegalArgumentException](
-      store2.readRange(spark, 0, 5000, graft.matchers.Eq("name", "cpu")).count())
   }
 
   test("micro-batch block explosion: compaction folds per-trigger blocks back to one (ST4)") {

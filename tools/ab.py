@@ -9,11 +9,15 @@ alternating which checkout goes first (the first seed starts with the
 base), so a drift in the host's speed lands on both sides. Then, for
 every metric the records carry, prints each side's median and quartiles
 and how many seed pairs the change won, in the direction BENCHMARK.json
-declares for that metric. With --out, every record is also appended to
-FILE as one JSON line {"side", "seed", "record"}.
+declares for that metric. Beside the win count, each end-to-end metric
+gets a verdict against its BENCHMARK.json bound (a relative share):
+"WORSE" when the change's median is worse than the base's by more than
+the bound, "unresolved" when the base's IQR/median exceeds the bound (the
+runs spread too widely to tell), "ok" otherwise. With --out, every record
+is also appended to FILE as one JSON line {"side", "seed", "record"}.
 
 Exits 1 if any run reports "correct": false or "failed" > 0, or ends
-without a record; 0 otherwise. It does not judge the numbers.
+without a record; 0 otherwise. The verdicts do not change the exit code.
 """
 import argparse
 import json
@@ -40,6 +44,18 @@ def directions(checkout):
                    for m in bench["end_to_end"] + bench.get("per_layer", [])}
 
 
+def verdict(base, change, way, bound):
+    """ok / WORSE / unresolved for one end-to-end metric (see the module doc)."""
+    b, c = statistics.median(base), statistics.median(change)
+    lo, hi = quartiles(sorted(base))
+    worse = c - b if way == "lower" else b - c
+    if worse > bound * abs(b):
+        return "WORSE"
+    if hi - lo > bound * abs(b):
+        return "unresolved"
+    return "ok"
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0]
@@ -58,6 +74,7 @@ def main():
     ap.add_argument("--out")
     a = ap.parse_args()
     bench, better = directions(a.change)
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     seconds = a.seconds or bench["run_seconds"]
     seeds = [int(s) for s in a.seeds.split(",") if s]
     sides = {"base": a.base, "change": a.change}
@@ -84,7 +101,7 @@ def main():
             pairs.append((got["base"], got["change"]))
     names = sorted({m for b, _ in pairs for m in b["metrics"]})
     print(f"{'metric':40} {'base median [q1-q3]':>32} {'change median [q1-q3]':>32} "
-          f"{'change wins':>11}")
+          f"{'change wins':>11} {'verdict':>10}")
     for m in names:
         got = [(b["metrics"].get(m), c["metrics"].get(m)) for b, c in pairs]
         got = [(b["value"], c["value"]) for b, c in got if b and c]
@@ -97,7 +114,9 @@ def main():
         way = better.get(m)
         wins = "" if way is None else str(sum(
             1 for b, c in got if (c < b if way == "lower" else c > b))) + f"/{len(got)}"
-        print(f"{m:40} {cols[0]:>32} {cols[1]:>32} {wins:>11}")
+        judged = "" if m not in bounds else verdict(
+            [b for b, _ in got], [c for _, c in got], way, bounds[m])
+        print(f"{m:40} {cols[0]:>32} {cols[1]:>32} {wins:>11} {judged:>10}")
     for line in bad:
         print(f"BAD: {line}", file=sys.stderr)
     return 1 if bad else 0
