@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, lit, map_contains_key, map_keys}
 
 import graft.ingest.Appender
 import graft.matchers.Matcher
@@ -17,6 +18,7 @@ import graft.streaming.StreamingIngest
   * | `db.Appender()`            | [[appender]] (txn: add/commit/rollback) |
   * | `db.Querier(mint, maxt)`   | [[query]] (matcher select, one call)  |
   * | `LabelNames/LabelValues`   | [[labelNames]] / [[labelValues]]      |
+  * | `LabelValuesFor(n, ms…)`   | [[labelValues]] with selectors        |
   * | `db.Delete(mint,maxt,ms…)` | [[delete]]                            |
   * | `db.Blocks()`              | [[blocks]]                            |
   * | `db.Snapshot(dir)`         | [[snapshot]]                          |
@@ -74,6 +76,31 @@ final class Db private (
 
   def labelNames(): DataFrame = store.labelNames(spark)
   def labelValues(name: String): DataFrame = store.labelValues(spark, name)
+
+  /** Sorted distinct label names of the series any of `selectors`
+    * matches with a sample in `[mint, maxt]` — the HTTP API's
+    * `labels?match[]=…`. */
+  def labelNames(selectors: Seq[Seq[Matcher]], mint: Long, maxt: Long): DataFrame =
+    matching(selectors, mint, maxt)
+      .select(explode(map_keys(col("labels"))).as("label_name"))
+      .distinct().orderBy("label_name")
+
+  /** Sorted distinct values of label `name` over the series any of
+    * `selectors` matches with a sample in `[mint, maxt]` — the HTTP
+    * API's `label/<name>/values?match[]=…`, and the reference's
+    * `LabelValuesFor` (`querier.go:110-112`, declared but not
+    * implemented there). Series without the label contribute nothing. */
+  def labelValues(name: String, selectors: Seq[Seq[Matcher]], mint: Long, maxt: Long): DataFrame =
+    matching(selectors, mint, maxt)
+      .where(map_contains_key(col("labels"), lit(name)))
+      .select(col("labels").getItem(name).as("label_value"))
+      .distinct().orderBy("label_value")
+
+  /** The labelled rows in `[mint, maxt]` of the series any of
+    * `selectors` matches: the union of one [[query]] per selector, the
+    * read behind the HTTP API's `match[]` parameters. */
+  def matching(selectors: Seq[Seq[Matcher]], mint: Long, maxt: Long): DataFrame =
+    selectors.map(ms => query(mint, maxt, withLabels = true, ms: _*)).reduce(_ unionByName _)
 
   /** Record deletion intervals for matching series (`db.go:1203-1232`). */
   def delete(mint: Long, maxt: Long, matchers: Matcher*): Unit =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.ingest.Appender
 import graft.llm.{Dedup, Multimodal, Packing, Similarity, TextStats}
 import graft.matchers.{Eq, Matcher, Re}
-import graft.query.{AsOf, Histogram, LabelDictionary, NativeHistogram, PromQl, Rate, Rules, TsdbSource}
+import graft.query.{AsOf, Histogram, NativeHistogram, PromQl, Rate, Rules, TsdbSource}
 import graft.sources.Tables
 import graft.storage.{BlockStore, Merge, Tombstones}
 import graft.{functions => gf}
@@ -227,15 +227,18 @@ object SparkEntry {
     }
   }
 
-  /** The single-block store behind `ts_select_labelled`: the full events
-    * table written once (postings index included). Idempotent — reused
-    * when the manifest already holds exactly that block. */
-  private def labelledStore(s: SparkSession, dir: String): BlockStore = {
-    val store = reusableStore("labelled", dir, 7 * DAY)
+  /** The one-block store of the whole events table (postings index
+    * included) behind every entry that reads the store as it was
+    * written: selection on both sides of the `broadcastLimit` gate,
+    * label metadata, the labelled read, the seek and the store-path
+    * PromQL entry. Idempotent — reused when the manifest already holds
+    * exactly that block. */
+  private def eventsStore(s: SparkSession, dir: String): BlockStore = {
+    val store = reusableStore("events", dir, 7 * DAY)
     if (store.manifest.blocks.map(_.blockId) == Seq(1L)) store
     else {
       store.destroy(s)
-      val fresh = reusableStore("labelled", dir, 7 * DAY)
+      val fresh = reusableStore("events", dir, 7 * DAY)
       fresh.write(TsdbSource.events(s, dir).samples)
       fresh
     }
@@ -288,22 +291,6 @@ object SparkEntry {
     Tombstones.coalesceIntervals(
       resolve(DEL1_LO, DEL1_HI, Eq("name", "click"))
         .unionByName(resolve(DEL2_LO, DEL2_HI, Eq("user", "7"))))
-  }
-
-  /** One-block store of the whole events corpus (labels indexed) behind
-    * the store-path PromQL entry: the bucketed scan hands lagFeats its
-    * series clustering with NO exchange and the selector resolves in
-    * the postings index — the layout the compiler is designed to ride
-    * at 100 TB. Idempotent. */
-  private def promqlStore(s: SparkSession, dir: String): BlockStore = {
-    val store = reusableStore("promqlstore", dir, 7 * DAY)
-    if (store.manifest.blocks.size == 1) store
-    else {
-      store.destroy(s)
-      val fresh = reusableStore("promqlstore", dir, 7 * DAY)
-      fresh.write(TsdbSource.events(s, dir).samples)
-      fresh
-    }
   }
 
   /** Shared Params of the promql_* entries: suite grid + the
@@ -488,17 +475,15 @@ object SparkEntry {
       tsSelect(s, dir, Re("name", "click|view|signup"))),
 
     // S12/P2 scale path: the same regex as ts_select_regex answered
-    // through the label dictionary — the regex runs once per distinct
-    // (name, value), the fact scan receives a pushdown-able IN, never an
-    // RLike (reference `index/index.go:866-892`, SURVEY §7.5.6).
-    "ts_regex_dict" -> ((s, dir) => {
-      val src = TsdbSource.events(s, dir)
-      val dict = LabelDictionary.fromSamples(src.samples)
-      val ms = LabelDictionary.rewrite(dict, Seq(Re("name", "c.*|sig.*")))
-      src.select(MINT, MAXT, ms: _*)
+    // through the store's label dictionary under the gate — the regex
+    // runs once per distinct value on the driver, the fact scan receives
+    // a literal IN of series keys, never an RLike (reference
+    // `index/index.go:866-892`, SURVEY §7.5.6).
+    "ts_regex_dict" -> ((s, dir) =>
+      eventsStore(s, dir)
+        .readRange(s, MINT, MAXT, Re("name", "c.*|sig.*"))
         .select(col("sample_id"), col("series_key"), col("t"), col("v"))
-        .orderBy("sample_id")
-    }),
+        .orderBy("sample_id")),
 
     // U2/U3 through the STORE (reference verticalQuerier auto-selection,
     // `db.go:1185-1195`): write a block, re-ingest an overlapping window
@@ -551,20 +536,18 @@ object SparkEntry {
         .orderBy("series_key", "t", "sample_id")
     }),
 
-    // A1: distinct label names.
-    "ts_label_names" -> ((s, dir) =>
-      new graft.query.Querier(TsdbSource.events(s, dir).samples).labelNames()),
+    // A1: distinct label names, from the store's postings index alone.
+    "ts_label_names" -> ((s, dir) => eventsStore(s, dir).labelNames(s)),
 
-    // A2: distinct label values for one label.
-    "ts_label_values" -> ((s, dir) =>
-      new graft.query.Querier(TsdbSource.events(s, dir).samples).labelValues("name")),
+    // A2: distinct label values for one label, index-only.
+    "ts_label_values" -> ((s, dir) => eventsStore(s, dir).labelValues(s, "name")),
 
-    // A2 with matchers: label values restricted to a selector — the
-    // label-values-with-matchers endpoint (declared but unimplemented in
-    // the reference querier, querier.go:110-112).
+    // A2 with matchers: label values restricted to a selector, over all
+    // time — the label-values-with-matchers endpoint (declared but
+    // unimplemented in the reference querier, querier.go:110-112).
     "ts_label_values_for" -> ((s, dir) =>
-      new graft.query.Querier(TsdbSource.events(s, dir).samples)
-        .labelValuesFor("user", Eq("name", "click"))),
+      graft.Db.open(s, eventsStore(s, dir).root)
+        .labelValues("user", Seq(Seq(Eq("name", "click"))), Long.MinValue, Long.MaxValue)),
 
     // A5: per-series min/max time + sample count.
     "ts_series_stats" -> ((s, dir) =>
@@ -578,25 +561,21 @@ object SparkEntry {
     "ts_select_multi" -> ((s, dir) =>
       tsSelect(s, dir, Eq("name", "click"), Re("user", "1.*"), Matcher.neq("vip", "1"))),
 
-    // P5/J1-J3 through the INVERTED INDEX: the same conjunction answered
-    // by postings set algebra (value match on the index, semi-join
-    // intersect, anti-join for the absent-label branch), fact table
-    // touched once — the reference's PostingsForMatchers architecture
-    // (querier.go:326-396) as joins.
-    "ts_select_postings" -> ((s, dir) => {
-      val samples = TsdbSource.events(s, dir).samples
-      // zero extra exchanges on the probe side: the time clamp pushes
-      // to the scan, the broadcast semi-join preserves the scan's
-      // partitioning, and the sink's in-partition sort is the
-      // distributed read contract (partition-ordered — a global order
-      // would buy nothing but an exchange plus its sampling scan)
-      graft.query.Postings.select(
-          samples, graft.query.Postings.fromSamples(samples),
-          MINT, MAXT,
+    // P5/J1-J3 through the INVERTED INDEX above the gate: the same
+    // conjunction resolved by postings set algebra as one Spark
+    // aggregate over the store's dictionaries (value match, the
+    // absent-label bit, the AND across matchers), fact table touched
+    // once by a semi-join — the reference's PostingsForMatchers
+    // architecture (querier.go:326-396). `broadcastLimit = 0` on the
+    // same root forces that path over a store the driver could hold.
+    "ts_select_postings" -> ((s, dir) =>
+      new BlockStore(eventsStore(s, dir).root, 7 * DAY, broadcastLimit = 0L)
+        .readRange(s, MINT, MAXT,
           Eq("name", "click"), Re("user", "1.*"), Matcher.neq("vip", "1"))
         .select(col("sample_id"), col("series_key"), col("t"), col("v"))
-        .sortWithinPartitions("sample_id")
-    }),
+        // the distributed read contract: partition-ordered, not a
+        // global order (that would buy an exchange and its sampling scan)
+        .sortWithinPartitions("sample_id")),
 
     // A6 (reference Series.Labels(), querier.go:50-57): a store read
     // with each series' label MAP re-attached from the postings index —
@@ -604,7 +583,7 @@ object SparkEntry {
     // `by (label)`). The map itself isn't hash-comparable across
     // engines, so the oracle checks label-derived columns.
     "ts_select_labelled" -> ((s, dir) =>
-      labelledStore(s, dir)
+      eventsStore(s, dir)
         .readRange(s, MINT, MAXT, withLabels = true, Eq("name", "click"))
         .select(
           col("sample_id"), col("series_key"), col("t"), col("v"),
@@ -619,7 +598,7 @@ object SparkEntry {
     // join (plan-asserted in BlockStoreSpec). The dashboard-panel
     // latency floor of the bucketed layout.
     "ts_seek" -> ((s, dir) =>
-      labelledStore(s, dir)
+      eventsStore(s, dir)
         .seek(s, Map("name" -> "click", "user" -> "7"),
           T0 + 7 * DAY, T0 + 21 * DAY)
         .orderBy("t", "sample_id")),
@@ -2344,13 +2323,11 @@ object SparkEntry {
     // from the series dictionary, the bucketed scan feeds the window
     // family its series clustering, and the scan is pruned to the
     // expression's reach. Same closed form, same oracle SQL.
-    "promql_store_rate" -> ((s, dir) => {
-      val st = promqlStore(s, dir)
-      graft.Db.open(s, st.root)
+    "promql_store_rate" -> ((s, dir) =>
+      graft.Db.open(s, eventsStore(s, dir).root)
         .promql("rate({name=\"click\"}[1d])",
           T0 + 2 * DAY, T0 + 3 * DAY, 60000L, nameLabel = "name")
-        .select(col("series_key"), col("t"), round(col("v"), 8).as("v"))
-    }),
+        .select(col("series_key"), col("t"), round(col("v"), 8).as("v"))),
 
     // one-to-one vector matching under the gate: click/view per user —
     // the default match key (labels ignoring the metric name) pairs the

@@ -9,7 +9,6 @@ import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.Db
 import graft.matchers.Matcher
@@ -220,10 +219,8 @@ object ApiServer {
             stepMs = step, lookbackMs = look, nameLabel = nameLabel)
           (ResultJson.render(out, instant = false), Nil)
         case "labels" =>
-          val df = selectedSeries(ps) match {
-            case Some(sel) =>
-              sel.select(explode(map_keys(col("labels"))).as("ln"))
-                .distinct().orderBy("ln")
+          val df = selectors(ps) match {
+            case Some((sels, start, end)) => db.labelNames(sels, start, end)
             case None => db.labelNames()
           }
           val (rows, warns) = bounded(df, limitOf(ps))
@@ -231,11 +228,8 @@ object ApiServer {
             .mkString("[", ",", "]"), warns)
         case p if p.startsWith("label/") && p.endsWith("/values") =>
           val name = p.stripPrefix("label/").stripSuffix("/values")
-          val df = selectedSeries(ps) match {
-            case Some(sel) =>
-              sel.where(map_contains_key(col("labels"), lit(name)))
-                .select(col("labels").getItem(name).as("lv"))
-                .distinct().orderBy("lv")
+          val df = selectors(ps) match {
+            case Some((sels, start, end)) => db.labelValues(name, sels, start, end)
             case None => db.labelValues(name)
           }
           val (rows, warns) = bounded(df, limitOf(ps))
@@ -277,17 +271,21 @@ object ApiServer {
         case other => throw new ApiError(404, "not_found", s"unknown endpoint $other")
       }
 
+    /** The `match[]` selectors with their `[start, end]` (unbounded
+      * where absent); None without any selector. */
+    private def selectors(
+        ps: Map[String, Seq[String]]): Option[(Seq[Seq[Matcher]], Long, Long)] =
+      ps.get("match[]").filter(_.nonEmpty).map { sels =>
+        val start = one(ps, "start").map(parseTimeMs).getOrElse(Long.MinValue)
+        val end = one(ps, "end").map(parseTimeMs).getOrElse(Long.MaxValue)
+        (sels.map(matchersOf(_, nameLabel)), start, end)
+      }
+
     /** The union read for all `match[]` selectors (distinct series
       * resolve downstream); time bounds prune blocks like any read. */
     private def selectedSeries(
         ps: Map[String, Seq[String]]): Option[org.apache.spark.sql.DataFrame] =
-      ps.get("match[]").filter(_.nonEmpty).map { sels =>
-        val start = one(ps, "start").map(parseTimeMs).getOrElse(Long.MinValue)
-        val end = one(ps, "end").map(parseTimeMs).getOrElse(Long.MaxValue)
-        sels.map(s => db.query(start, end, withLabels = true,
-            matchersOf(s, nameLabel): _*))
-          .reduce(_ unionByName _)
-      }
+      selectors(ps).map { case (sels, start, end) => db.matching(sels, start, end) }
 
     def handle(ex: HttpExchange): Unit =
       try {

@@ -1,68 +1,21 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.matchers.Matcher
-
-/** Query surface over the canonical long format
+/** Analysis over the canonical long format
   * `(series_key string, labels map<string,string>, t long, v double, ...)`
-  * — the reference's `Querier` interface (`querier.go:28-57`): select by
-  * matchers + time range, enumerate label names/values, plus the
-  * cardinality analysis of `cmd/tsdb/main.go:464-616`.
+  * — the operations no store read computes: the `tsdb analyze`
+  * cardinality report (`cmd/tsdb/main.go:464-616`), per-series span
+  * stats and downsampling rollups.
   *
-  * This generic map-backed path serves ad-hoc frames that carry a
-  * `labels` map column. [[graft.storage.BlockStore]] data is normalized
-  * (labels live in the block's postings index) — query it through
-  * `BlockStore.readRange(matchers...)` / `labelNames` / `labelValues`,
-  * which resolve in the index. For wide source tables, prefer
-  * [[TsdbSource.select]], which compiles matchers against the source
-  * columns for parquet pushdown.
+  * Selection and label metadata have no path here: store data resolves
+  * them in its postings index ([[graft.storage.BlockStore.readRange]],
+  * `labelNames`, `labelValues`, [[graft.Db]]'s selector-scoped forms),
+  * and wide source tables compile matchers to parquet pushdown
+  * ([[TsdbSource.select]]).
   */
 final class Querier(val samples: DataFrame) {
-
-  private val resolve: String => Column = name => col("labels").getItem(name)
-
-  /** Matcher selection over a closed time range `[mint, maxt]`. */
-  def select(mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
-    samples.where(
-      Matcher.conjunction(matchers, resolve) &&
-        col("t") >= lit(mint) && col("t") <= lit(maxt))
-
-  /** Distinct label names, sorted (reference `querier.go:70-89`). */
-  def labelNames(): DataFrame =
-    samples
-      .select(explode(map_keys(col("labels"))).as("label_name"))
-      .distinct()
-      .orderBy("label_name")
-
-  /** Distinct values of one label, sorted (reference `querier.go:91-108`).
-    * Series without the label contribute nothing (absent ≠ ""). */
-  def labelValues(name: String): DataFrame =
-    samples
-      .select(col("labels").getItem(name).as("label_value"))
-      .where(col("label_value").isNotNull)
-      .distinct()
-      .orderBy("label_value")
-
-  /** Distinct values of one label among series matched by a selector —
-    * the reference's `LabelValuesFor` (`querier.go:110-112`, declared
-    * but `not implemented` there; this is the Prometheus
-    * label-values-with-matchers endpoint consumers actually call).
-    * One scan: the matcher conjunction compiles to a predicate, so
-    * pushdown-capable sources prune before the distinct. */
-  def labelValuesFor(name: String, matchers: Matcher*): DataFrame =
-    samples
-      .where(Matcher.conjunction(matchers, resolve))
-      .select(col("labels").getItem(name).as("label_value"))
-      .where(col("label_value").isNotNull)
-      .distinct()
-      .orderBy("label_value")
-
-  /** Distinct series, as canonical keys, in label-set order — the sorted
-    * SeriesSet invariant (reference `querier.go:519-524`). */
-  def series(): DataFrame =
-    samples.select(col("series_key")).distinct().orderBy("series_key")
 
   /** Top-k (label name, value) pairs by sample frequency — the `tsdb
     * analyze` cardinality report (reference `cmd/tsdb/main.go:464-616`).
@@ -74,16 +27,6 @@ final class Querier(val samples: DataFrame) {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("label_name"), col("label_value"))
       .limit(k)
-
-  /** Counter increase/rate per `(series, bucket)` — see [[Rate.increase]]. */
-  def rate(bucketMs: Long): DataFrame = Rate.increase(samples, bucketMs)
-
-  /** Trailing-window `*_over_time` aggregates — see [[Rate.overTime]]. */
-  def overTime(windowMs: Long): DataFrame = Rate.overTime(samples, windowMs)
-
-  /** le-bucket φ-quantile per `(series, bucket)` — see [[Histogram.quantile]]. */
-  def histogramQuantile(bucketMs: Long, les: Seq[Double], phi: Double): DataFrame =
-    Histogram.quantile(samples, bucketMs, les, phi)
 
   /** Downsampling — the rollup maintenance job a 100 TB metric store
     * runs beyond the reference's raw-resolution-only storage (the

@@ -36,13 +36,13 @@ import graft.matchers.Matcher
   *    null bounds, under `dict/head/`. One writer
   *    ([[BlockStore.writeDict]]) and one reader ([[BlockStore.readDict]])
   *    own the format. Selectors, label maps and label metadata resolve
-  *    against it,
-  *    never against sample rows: while the manifest's series total is
-  *    at most [[broadcastLimit]], from a driver-resident
-  *    [[SeriesIndex]] that loads each block's dictionary once per JVM
-  *    (no Spark job on a warm cache); above it, as Spark jobs over the
-  *    unioned dictionaries ([[postingsIndex]],
-  *    [[graft.query.Postings.seriesFor]]).
+  *    against it, never against sample rows, by one resolver on each
+  *    side of a gate: while the manifest's series total is at most
+  *    [[broadcastLimit]], a driver-resident [[SeriesIndex]] that loads
+  *    each block's dictionary once per JVM (no Spark job on a warm
+  *    cache); above it, Spark jobs over the unioned dictionaries
+  *    ([[postingsIndex]], [[graft.query.Postings.seriesFor]]). Both
+  *    apply one matcher rule, the label-less `"{}"` included.
   *
   * Scale notes: the manifest is O(#blocks) driver-side metadata (the
   * reference holds the same list in memory); retention and compaction
@@ -393,16 +393,14 @@ final class BlockStore(
       if (matchers.isEmpty) raw0
       else if (resident(st)) {
         val keys = seriesIndex(spark, st).resolve(matchers)
-        if (keys.size <= graft.query.LabelDictionary.literalLimit)
+        if (keys.size <= BlockStore.literalLimit)
           raw0.where(col("series_key").isin(keys: _*))
         else {
           import spark.implicits._
           raw0.join(broadcast(keys.toDF("series_key")), Seq("series_key"), "left_semi")
         }
       } else {
-        val idx = postingsIndex(spark)
-        val keys = graft.query.Postings.seriesFor(
-          idx, extraSeriesFor(spark, idx, matchers), matchers)
+        val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
         val totalSeries = live.map(_.numSeries).sum // upper bound on |keys|
         val hinted = if (totalSeries <= broadcastLimit) broadcast(keys) else keys
         raw0.join(hinted, Seq("series_key"), "left_semi")
@@ -529,19 +527,6 @@ final class BlockStore(
     }
   }
 
-  /** The series the postings index can't know, for matches-empty
-    * resolution ([[graft.query.Postings.seriesFor]]'s `extraSeries`):
-    * in the canonical key scheme that is exactly the label-less series
-    * `"{}"` — passed as a phantom row when a matcher matches ""
-    * (neq / notRe / empty-eq; the reference's absent-label rule selects
-    * it too, `db_test.go:1165`). Harmless when no such series exists:
-    * the final fact semi-join drops it. */
-  private def extraSeriesFor(spark: SparkSession, idx: DataFrame, ms: Seq[Matcher]): DataFrame = {
-    import spark.implicits._
-    if (ms.exists(_.matchesValue(""))) Seq("{}").toDF("series_key")
-    else idx.select("series_key").limit(0)
-  }
-
   /** Register series WITHOUT samples — the persistence behind a
     * rolled-back append transaction ([[graft.ingest.Appender.txn]]):
     * the reference's `Rollback` drops the txn's samples but keeps the
@@ -575,7 +560,8 @@ final class BlockStore(
   /** Union of the live blocks' persisted inverted indexes (S12,
     * reference `index/index.go:140-147`): one `(label_name, label_value,
     * series_key)` row per label pair per series — the postings table
-    * [[graft.query.Postings.select]] runs matcher set algebra over.
+    * [[graft.query.Postings.seriesFor]] resolves selectors over above
+    * the [[broadcastLimit]] gate.
     * Sample-less registered series ([[registerSeries]]) ride along like
     * the reference's head series map entries. */
   def postingsIndex(spark: SparkSession): DataFrame =
@@ -667,15 +653,13 @@ final class BlockStore(
       // to its own [s_mint, s_maxt] recorded in the block dictionaries
       // at write time, so a later append beyond a series' old max also
       // survives even when it lands inside the store-wide range. The
-      // "{}" extra-series record, which the index can't see, keeps the
+      // phantom "{}" record, which the index can't see, keeps the
       // store-level clamp: wider, but never past the request.
       val bs = manifest.blocks
       val mint = if (bs.isEmpty) mint0 else math.max(mint0, bs.map(_.mint).min)
       val maxt = if (bs.isEmpty) maxt0 else math.min(maxt0, bs.map(_.maxt).max - 1)
       if (bs.isEmpty || mint > maxt) return
-      val idx = postingsIndex(spark)
-      val keys = graft.query.Postings
-        .seriesFor(idx, extraSeriesFor(spark, idx, matchers), matchers)
+      val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
       val bounds = BlockStore.readDict(spark, bs.map(b => dictPath(b.blockId)))
         .groupBy("series_key").agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
       val clamped = keys.join(bounds, Seq("series_key"), "left")
@@ -1018,6 +1002,14 @@ final class BlockStore(
 }
 
 object BlockStore {
+  /** The most series keys a selector resolved on the driver hands the
+    * scan as a literal `In` ([[BlockStore.readRange]]); past it the read
+    * semi-joins against the keys as a broadcast local relation. Measured
+    * against a 100k-value label (the 5M-series matcher bench), a
+    * 100k-literal `isin` costs seconds of analysis/codegen and beats
+    * the semi-join at nothing. */
+  private[storage] val literalLimit: Int = 1000
+
   /** The block range the store recorded at first write
     * (meta/BLOCK_RANGE) — how read-only tools ([[graft.Main]], a
     * querying session) open an existing store without knowing its

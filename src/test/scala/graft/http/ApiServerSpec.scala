@@ -110,6 +110,28 @@ class ApiServerSpec extends SparkSuite
     assert(scoped == """{"status":"success","data":["1"]}""")
   }
 
+  test("labels?match[] lists the label names of the matched series only") {
+    assert(get(s"/api/v1/labels?match[]=${enc("{job=\"b\"}")}")._2 ==
+      """{"status":"success","data":["inst","job"]}""")
+    assert(get(s"/api/v1/labels?match[]=${enc("{job=\"nope\"}")}")._2 ==
+      """{"status":"success","data":[]}""")
+  }
+
+  test("label values under two match[] selectors are their union") {
+    val both = get(s"/api/v1/label/inst/values?match[]=${enc("{job=\"b\"}")}" +
+      s"&match[]=${enc("{inst=\"2\"}")}")._2
+    assert(both == """{"status":"success","data":["1","2"]}""")
+  }
+
+  test("label values under match[] honour start and end") {
+    val sel = enc("{inst=\"1\"}")
+    assert(get(s"/api/v1/label/job/values?match[]=$sel")._2 ==
+      """{"status":"success","data":["a","b"]}""")
+    // job=a,inst=1 has samples at 100 and 1500 ms, outside [250, 400]
+    assert(get(s"/api/v1/label/job/values?match[]=$sel&start=0.250&end=0.400")._2 ==
+      """{"status":"success","data":["b"]}""")
+  }
+
   test("series returns the matching label sets; no match[] is an error") {
     val (code, body) = get(s"/api/v1/series?match[]=${enc("{inst=\"1\"}")}")
     assert(code == 200)

@@ -1,25 +1,36 @@
 package graft.query
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
-import graft.matchers.{Eq, InSet, Matcher, Not, Re}
+import graft.matchers.{Eq, InSet, Matcher, Re}
+import graft.storage.BlockStore
 
-/** The postings path must agree with the pushdown path on every matcher
-  * shape — the battery mirrors the combinations of the reference's
+/** The store's matcher resolution must agree with the pushdown path on
+  * every matcher shape, on both sides of the `broadcastLimit` gate — the
+  * battery mirrors the combinations of the reference's
   * `TestPostingsForMatchers` (`querier_test.go:1830-2082`). */
 class PostingsSpec extends SparkSuite {
 
   lazy val src = TsdbSource.events(spark, sf)
-  lazy val samples = src.samples
-  lazy val postings = Postings.fromSamples(samples)
 
   private val T0 = 1704067200000L
   private val HI = T0 + 40 * 86400000L
 
-  private def viaPostings(ms: Matcher*): Set[Long] =
-    Postings.select(samples, postings, T0, HI, ms: _*)
-      .select("sample_id").collect().map(_.getLong(0)).toSet
+  /** One block of the events table; the second handle on the same root
+    * resolves through the Spark postings aggregate. */
+  private lazy val stores: Seq[BlockStore] = {
+    val root = java.nio.file.Files.createTempDirectory("graft-postings").toString
+    val store = new BlockStore(root, 7 * 86400000L)
+    store.write(src.samples)
+    Seq(store, new BlockStore(root, 7 * 86400000L, broadcastLimit = 0L))
+  }
+
+  /** The matched sample ids, identical on both sides of the gate. */
+  private def viaPostings(ms: Matcher*): Set[Long] = {
+    val Seq(cached, viaSpark) = stores.map(
+      _.readRange(spark, T0, HI, ms: _*).select("sample_id").collect().map(_.getLong(0)).toSet)
+    assert(cached == viaSpark, s"${ms.toList}: cached ${cached.size} vs Spark path ${viaSpark.size}")
+    cached
+  }
 
   private def viaPushdown(ms: Matcher*): Set[Long] =
     src.select(T0, HI, ms: _*)
@@ -46,18 +57,6 @@ class PostingsSpec extends SparkSuite {
     agree(Eq("name", "purchase"), Matcher.neq("vip", "1"), Re("user", ".*7.*"))
   }
 
-  test("fromSamples derives the index without a SortAggregate (r12)") {
-    // dropDuplicates("series_key") compiled to first(labels) whose MAP
-    // buffer demoted the series dedup to a sample-grain partial
-    // SortAggregate; the entry-array distinct stays in HashAggregate
-    val plan = postings.queryExecution.sparkPlan.toString
-    assert(!plan.contains("SortAggregate"), plan.take(3000))
-    // and the derived index is unchanged: one row per (series, pair)
-    val n = postings.count()
-    val dd = postings.dropDuplicates("series_key", "label_name", "label_value").count()
-    assert(n == dd && n > 0)
-  }
-
   test("matched sample sets are non-trivial (the battery isn't vacuous)") {
     assert(viaPostings(Eq("name", "click")).nonEmpty)
     assert(viaPostings(Matcher.neq("vip", "1")).nonEmpty)
@@ -78,9 +77,8 @@ class PostingsSpec extends SparkSuite {
       ("s2", "l2", "B"), ("s3", "l2", "B"), ("s4", "l2", "B"),
       ("s6", "l2", "D"))
       .toDF("series_key", "label_name", "label_value")
-    val none = idx.select("series_key").limit(0)
     def got(ms: Matcher*): Set[String] =
-      Postings.seriesFor(idx, none, ms).as[String].collect().toSet
+      Postings.seriesFor(idx, ms).as[String].collect().toSet
 
     // J1 intersect: {1,2,3} ∩ {2,3,4} -> {2,3}
     assert(got(Eq("l1", "A"), Eq("l2", "B")) == Set("s2", "s3"))
@@ -93,8 +91,9 @@ class PostingsSpec extends SparkSuite {
     assert(got(Eq("l1", "A"), Eq("l1", "C")).isEmpty)
     // J2 merge: A ∪ C -> {1..5}
     assert(got(Re("l1", "A|C")) == Set("s1", "s2", "s3", "s4", "s5"))
-    // J3 without: all \ A -> value-mismatched ∪ label-absent
-    assert(got(Matcher.neq("l1", "A")) == Set("s4", "s5", "s6"))
+    // J3 without: all \ A -> value-mismatched ∪ label-absent, and the
+    // label-less "{}" the index cannot list (every matcher matches "")
+    assert(got(Matcher.neq("l1", "A")) == Set("s4", "s5", "s6", "{}"))
     // removing a superset of the positive side leaves nothing
     assert(got(Eq("l1", "A"), Matcher.neq("l1", "A")).isEmpty)
     // removing nothing leaves the positive side intact
@@ -114,7 +113,7 @@ class PostingsSpec extends SparkSuite {
         ids.map(i => (s"s$i", name, value)) }
         .toDF("series_key", "label_name", "label_value")
     def got(p: org.apache.spark.sql.DataFrame, ms: Matcher*): Set[Int] =
-      Postings.seriesFor(p, p.select("series_key").limit(0), ms)
+      Postings.seriesFor(p, ms)
         .as[String].collect().map(_.drop(1).toInt).toSet
 
     // TestMultiIntersect case 1
@@ -163,26 +162,5 @@ class PostingsSpec extends SparkSuite {
       ("g", "1", Seq(10, 20, 30)),
       ("g", "2", Seq(15, 26, 30)))
     assert(got(im, Eq("a", "1"), Re("g", "1|2")) == Set(30))
-  }
-
-  test("fact table is touched once, via a broadcast semi-join") {
-    val plan = Postings.select(samples, postings, T0, HI, Eq("name", "click"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      plan.take(2000))
-  }
-
-  test("multi-matcher select scans the source exactly twice: derive once, probe once") {
-    // seriesFor resolves the whole 3-matcher conjunction in ONE
-    // aggregate over the index, so the fact source appears in the plan
-    // exactly twice — the index derivation scan (key + labels only) and
-    // the time-clamped semi-join probe — no matter how many matchers
-    val df = Postings.select(
-      samples, postings, T0, HI,
-      Eq("name", "click"), Re("user", "1.*"), Matcher.neq("vip", "1"))
-    val plan = df.queryExecution.executedPlan.toString
-    val scans = "FileScan".r.findAllIn(plan).size
-    assert(scans == 2, s"expected 2 FileScans, got $scans:\n${plan.take(3000)}")
-    assert(df.count() > 0)
   }
 }

@@ -72,10 +72,18 @@ class QuerierSpec extends SparkSuite {
     assert(src.select(0L, Long.MaxValue / 2, Re("name", "cl.*")).count() > 0)
   }
 
+  /** One block of the events table. */
+  private lazy val store = {
+    val s = new graft.storage.BlockStore(
+      java.nio.file.Files.createTempDirectory("graft-querier").toString, 7L * 86400000L)
+    s.write(src.samples)
+    s
+  }
+
   test("labelNames / labelValues") {
-    val q = new Querier(src.samples)
-    assert(q.labelNames().collect().map(_.getString(0)).toSeq == Seq("name", "user", "vip"))
-    val vals = q.labelValues("name").collect().map(_.getString(0)).toSeq
+    assert(store.labelNames(spark).collect().map(_.getString(0)).toSeq ==
+      Seq("name", "user", "vip"))
+    val vals = store.labelValues(spark, "name").collect().map(_.getString(0)).toSeq
     assert(vals == Seq("click", "error", "purchase", "signup", "view"))
   }
 
@@ -86,58 +94,18 @@ class QuerierSpec extends SparkSuite {
     assert(plan.contains("GreaterThanOrEqual(ts,"), plan.take(2000))
   }
 
-  test("dictionary rewrite: regex becomes InSet with identical semantics") {
-    val dict = LabelDictionary.fromSamples(src.samples)
-    val Seq(rw) = LabelDictionary.rewrite(dict, Seq(Re("name", "c.*|sig.*")))
-    rw match {
-      case graft.matchers.InSet("name", values) =>
-        assert(values == Set("click", "signup")) // regex ran per distinct value
-      case other => fail(s"expected InSet, got $other")
-    }
-    val got = src.select(0L, Long.MaxValue / 2, rw).count()
-    val want = src.select(0L, Long.MaxValue / 2, Re("name", "c.*|sig.*")).count()
-    assert(got == want && got > 0)
-  }
-
-  test("dictionary rewrite preserves matches-empty and negation semantics") {
-    val dict = LabelDictionary.fromSamples(src.samples)
-    // vip=~"" matches absent labels: "" must survive into the set
-    val Seq(rwEmpty) = LabelDictionary.rewrite(dict, Seq(Re("vip", "|9")))
-    assert(rwEmpty.matchesValue("") && !rwEmpty.matchesValue("1"))
-    // !~ routes through Not(rewritten inner)
-    val Seq(rwNot) = LabelDictionary.rewrite(dict, Seq(Matcher.notRe("name", "c.*")))
-    assert(!rwNot.matchesValue("click") && rwNot.matchesValue("view"))
-    val got = src.select(0L, Long.MaxValue / 2, rwNot).count()
-    val want = src.select(0L, Long.MaxValue / 2, Matcher.notRe("name", "c.*")).count()
-    assert(got == want && got > 0)
-  }
-
-  test("rewrite maxValues guard: a high-cardinality label stays a regex (no driver blowup)") {
-    import spark.implicits._
-    // a 100k-value label, the cardinality the 5M-series matcher bench
-    // runs at: the matching set (all 100k values) exceeds maxValues, so
-    // the matcher must come back UNREWRITTEN — the collect is bounded at
-    // maxValues+1 rows and the plan keeps the per-distinct-value regex
-    val bigDict = spark.range(0, 100000L)
-      .select(lit("i").as("label_name"), $"id".cast("string").as("label_value"))
-    val broad = Re("i", ".+")
-    val Seq(kept) = LabelDictionary.rewrite(bigDict, Seq(broad))
-    assert(kept eq broad, s"expected the original regex back, got $kept")
-    // while a selective regex over the same dictionary still rewrites
-    val Seq(narrow) = LabelDictionary.rewrite(bigDict, Seq(Re("i", "123|456")))
-    narrow match {
-      case graft.matchers.InSet("i", values) => assert(values == Set("123", "456"))
-      case other => fail(s"expected InSet, got $other")
-    }
-  }
-
   test("dictionary path pushes In to the fact scan, never RLike (SURVEY 7.5.6)") {
-    val dict = LabelDictionary.fromSamples(src.samples)
-    val ms = LabelDictionary.rewrite(dict, Seq(Re("name", "c.*|sig.*")))
-    val plan = src.select(1704067200000L, 1706745600000L, ms: _*)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("In(event_type"), plan.take(2000))
-    assert(!plan.toLowerCase.contains("rlike"), plan.take(2000))
+    // the store resolves the regex once per distinct value of its
+    // dictionary, on the driver, and hands the scan the matched keys
+    val read = store.readRange(spark, 1704067200000L, 1706745600000L, Re("name", "c.*|sig.*"))
+    val plan = read.queryExecution.executedPlan
+    val pushed = plan.collect {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec => scan.metadata("PushedFilters")
+    }.mkString
+    assert(pushed.contains("In(series_key"), pushed.take(2000))
+    assert(!plan.toString.toLowerCase.contains("rlike"), plan.toString.take(2000))
+    assert(read.count() ==
+      src.select(1704067200000L, 1706745600000L, Re("name", "c.*|sig.*")).count())
     // the naive path, by contrast, does evaluate the regex on the scan
     val naive = src.select(1704067200000L, 1706745600000L, Re("name", "c.*|sig.*"))
       .queryExecution.executedPlan.toString

@@ -56,9 +56,15 @@ class SeriesIndexSpec extends SparkSuite {
         viaSpark.labelValues(spark, n).as[String].collect().toSeq, n)
   }
 
-  test("the matcher battery reads identical rows through the cache and the Spark path") {
+  /** One block of the events table. */
+  private lazy val events: BlockStore = {
     val store = new BlockStore(tmp("graft-ix-battery"), 7 * DAY)
     store.write(TsdbSource.events(spark, sf).samples)
+    store
+  }
+
+  test("the matcher battery reads identical rows through the cache and the Spark path") {
+    val store = events
     val hi = T0 + 40 * DAY
     def same(ms: Matcher*): Int = sameReads(store, T0, hi, ms: _*).size
     assert(same(Eq("name", "click")) > 0)
@@ -74,6 +80,34 @@ class SeriesIndexSpec extends SparkSuite {
     same(Eq("name", "click"), Re("user", "1.*"))
     same(Eq("name", "purchase"), Matcher.neq("vip", "1"), Re("user", ".*7.*"))
     sameMetadata(store)
+  }
+
+  test("both resolvers select the same series keys, the phantom \"{}\" included") {
+    // key level, before the fact semi-join that drops a phantom key
+    val ix = events.seriesIndex(spark, events.manifest)
+    val idx = events.postingsIndex(spark)
+    val allMatchEmpty = Seq(Matcher.neq("vip", "1"), Re("zone", ".*"))
+    val lists: Seq[Seq[Matcher]] = Seq(
+      Seq(Eq("name", "click")),
+      Seq(Eq("name", "missing-value")),
+      Seq(Eq("vip", "")),
+      Seq(Matcher.neq("name", "click")),
+      Seq(Matcher.neq("vip", "1")),
+      Seq(Re("name", "c.*|sig.*")),
+      Seq(Re("name", ".*")),
+      Seq(Re("vip", "|1")),
+      Seq(Matcher.notRe("name", "c.*")),
+      Seq(InSet("name", Set("click", "view"))),
+      Seq(Eq("name", "click"), Re("user", "1.*")),
+      Seq(Eq("name", "purchase"), Matcher.neq("vip", "1"), Re("user", ".*7.*")),
+      allMatchEmpty)
+    for (ms <- lists) {
+      val viaSpark = graft.query.Postings.seriesFor(idx, ms).as[String].collect()
+      assert(viaSpark.length == viaSpark.distinct.length, ms.toList)
+      assert(ix.resolve(ms).toSet == viaSpark.toSet, ms.toList)
+    }
+    assert(ix.resolve(allMatchEmpty).contains("{}"))
+    assert(!ix.resolve(Seq(Eq("name", "click"))).contains("{}"))
   }
 
   test("reference postings vectors through BlockStore.readRange, both sides of the gate " +
@@ -164,7 +198,7 @@ class SeriesIndexSpec extends SparkSuite {
   }
 
   test("past the literal bound the cache resolves to a broadcast semi-join, equal to the Spark path") {
-    val n = graft.query.LabelDictionary.literalLimit + 200
+    val n = BlockStore.literalLimit + 200
     val store = new BlockStore(tmp("graft-ix-wide"), 1000L)
     store.write(seriesRows(100L, (0 until n).map(i =>
       Map("job" -> (if (i % 10 == 0) "rare" else "common"), "i" -> i.toString))))

@@ -733,7 +733,7 @@ class BlockStoreSpec extends SparkSuite {
     store.write(samples)
     val ix = store.seriesIndex(spark, store.manifest)
     val dict = for (n <- ix.labelNames; v <- ix.labelValues(n)) yield (n, v)
-    val want = graft.query.LabelDictionary.fromSamples(samples).collect()
+    val want = samples.select(explode(col("labels"))).distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(dict.size == want.size && dict.toSet == want)
     assert(dict.count(_._1 == "name") ==
