@@ -199,12 +199,10 @@ final class Db private (
           case Some(hf) => mixed(floats, hf)
         }
       },
-      // the manifest's series total bounds every matched set — the
-      // same bound readSelected's semi-join gate uses — so the
-      // compiler's per-series dim broadcasts hint only when the
-      // driver-side build is provably safe
-      seriesEstimate = Some(store.manifest.blocks.map(_.numSeries).sum),
-      broadcastLimit = store.broadcastLimit)
+      // the compiler's per-series dims broadcast exactly when the
+      // store's postings are driver-resident: the same gate every
+      // labelled store read uses
+      broadcastDims = store.resident(store.manifest))
     if (histChannel.nonEmpty) graft.query.PromQl.evalMixed(query, samples, params)
     else graft.query.PromQl.eval(query, samples, params)
   }

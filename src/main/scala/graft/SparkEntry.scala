@@ -832,7 +832,7 @@ object SparkEntry {
       PromQl.eval(
           "histogram_quantile(0.9, rate({name=\"click\"}[3d]))", frame,
           PromQl.Params(T0 + 4 * DAY, T0 + 15 * DAY, DAY, nameLabel = "name",
-            seriesEstimate = Some(100000L)))
+            broadcastDims = true))
         .select(col("series_key"), col("t"),
           (floor(col("v") * 1e4 + 0.5) / 1e4).as("q"))
     }),
@@ -884,7 +884,7 @@ object SparkEntry {
       PromQl.eval(
           "histogram_quantile(0.9, rate({name=\"click\"}[1d]))", frame,
           PromQl.Params(T0 + 2 * DAY, T0 + 3 * DAY, 60000L, nameLabel = "name",
-            seriesEstimate = Some(100000L)))
+            broadcastDims = true))
         .select(col("series_key"), col("t"),
           (floor(col("v") * 1e4 + 0.5) / 1e4).as("q"))
     }),
@@ -924,7 +924,7 @@ object SparkEntry {
       val frame = hs.join(lab, Seq("series_key"))
         .select("series_key", "labels", "t", "v", "h")
       val p = PromQl.Params(T0 + DAY, T0 + 15 * DAY, DAY, nameLabel = "name",
-        seriesEstimate = Some(100000L))
+        broadcastDims = true)
       val q = PromQl.eval(
           "histogram_quantile(0.5, ({name=\"click\"} + {name=\"view\"}) * 2)",
           frame, p)

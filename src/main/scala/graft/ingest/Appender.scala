@@ -23,46 +23,13 @@ import graft.storage.BlockStore
   *                     `head.go:827-830` — the half-chunk-range
   *                     late-data window, ≡ a streaming watermark)
   *
-  * Scale: one window per series over the *batch* (not history); the
-  * per-series high-water mark from prior batches enters as `baseline`.
+  * Scale: one window per series over the *batch*, not over history.
   */
 object Appender {
 
   /** Classify a batch. `samples` needs (series_key, t, v, arrival)
-    * where `arrival` is the ingest order within the batch.
-    * `baseline` (optional) is (series_key, max_t, last_v) from prior
-    * batches.
-    *
-    * `broadcastBaseline` gates the baseline join hint the same way
-    * [[BlockStore.broadcastLimit]] gates matched-series broadcasts: the
-    * baseline is ONE ROW PER SERIES, so at the 10⁸-series design point
-    * an unconditional hint forces a driver-side build that OOMs. Pass
-    * `false` (callers with a store at hand: when the manifest's series
-    * count exceeds `store.broadcastLimit`) to drop the hint and let AQE
-    * pick the join strategy from runtime sizes; the validation windows
-    * are unaffected either way. */
-  def validate(
-      samples: DataFrame,
-      minValidTime: Long,
-      baseline: Option[DataFrame] = None,
-      arrivalCol: String = "arrival",
-      broadcastBaseline: Boolean = true): DataFrame = {
-    val withBase = baseline match {
-      case Some(b) =>
-        val base = b.select(
-          col("series_key").as("__bk"),
-          col("max_t").as("__base_t"),
-          col("last_v").as("__base_v"))
-        samples.join(
-          if (broadcastBaseline) broadcast(base) else base,
-          col("series_key") === col("__bk"), "left")
-          .drop("__bk")
-      case None =>
-        samples
-          .withColumn("__base_t", lit(null).cast("long"))
-          .withColumn("__base_v", lit(null).cast("double"))
-    }
-
+    * where `arrival` is the ingest order within the batch. */
+  def validate(samples: DataFrame, minValidTime: Long): DataFrame = {
     // Running (max t, its value) over previously-arrived samples of the
     // series: a single struct-max window. The reference validates each
     // append against the last SUCCESSFULLY appended sample
@@ -77,34 +44,28 @@ object Appender {
     // (t, -arrival) selects exactly that row in the same single window.
     val w = Window
       .partitionBy("series_key")
-      .orderBy(col(arrivalCol))
+      .orderBy(col("arrival"))
       .rowsBetween(Window.unboundedPreceding, -1)
 
-    val mxT = coalesce(col("__mx.t"), lit(Long.MinValue))
-    val baseT = coalesce(col("__base_t"), lit(Long.MinValue))
+    val prevMax = coalesce(col("__mx.t"), lit(Long.MinValue))
 
-    withBase
+    samples
       .withColumn(
         "__mx",
-        max(struct(col("t"), (lit(0L) - col(arrivalCol)).as("na"), col("v"))).over(w))
-      .withColumn("__prev_max", greatest(mxT, baseT))
-      // strict >: when the batch ties the baseline's max t, the stored
-      // valid value is still the baseline's (the tying in-batch row was
-      // either an idempotent dup of it or an amend that was rejected)
-      .withColumn("__last_v", when(mxT > baseT, col("__mx.v")).otherwise(col("__base_v")))
+        max(struct(col("t"), (lit(0L) - col("arrival")).as("na"), col("v"))).over(w))
       .withColumn(
         "status",
         when(col("t") < lit(minValidTime), lit("out_of_bounds"))
-          .when(col("__prev_max") === Long.MinValue || col("t") > col("__prev_max"), lit("ok"))
+          .when(prevMax === Long.MinValue || col("t") > prevMax, lit("ok"))
           .when(
-            col("t") === col("__prev_max"),
+            col("t") === prevMax,
             // equal values (Spark's <=> treats NaN as self-equal, the
             // engine-level analogue of the reference's bitwise compare)
             // are an idempotent re-append; anything else is an amend
-            when(col("v") <=> col("__last_v"), lit("ok"))
+            when(col("v") <=> col("__mx.v"), lit("ok"))
               .otherwise(lit("amend")))
           .otherwise(lit("out_of_order")))
-      .drop("__mx", "__base_t", "__base_v", "__prev_max", "__last_v")
+      .drop("__mx")
   }
 
   /** Open an append transaction against a store — the reference's

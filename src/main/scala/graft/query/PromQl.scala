@@ -616,24 +616,18 @@ object PromQl {
         * equal by forcing 0 (always window) / MaxValue (always
         * explode). */
       rangeExplodeCapK: Int = 64,
-      /** Upper bound on the matched series count, when the caller can
-        * know it cheaply (a store read knows it from the manifest —
-        * [[graft.Db.promql]] threads it; a raw-parquet eval leaves it
-        * unset). Gates every per-series dimension broadcast the
-        * compiler emits, the same discipline as
-        * `BlockStore.broadcastLimit`: an unconditional `broadcast()`
-        * over 10⁸ series forces a driver-side build that OOMs, so with
-        * no bound (or one over [[broadcastLimit]]) the hint is dropped
-        * and AQE picks the strategy from runtime sizes. */
-      seriesEstimate: Option[Long] = None,
-      /** Max series-dimension rows the compiler will HINT broadcast
-        * (matches `BlockStore.Options.broadcastLimit`'s default). */
-      broadcastLimit: Long = 2000000L) {
+      /** Hint every per-series dimension join the compiler emits as a
+        * broadcast. Only a caller that can bound the matched series set
+        * sets it (a store read: [[graft.Db.promql]] passes the store's
+        * own driver-resident gate); an unconditional `broadcast()` over
+        * 10⁸ series forces a driver-side build that OOMs, so by default
+        * the hint is dropped and AQE picks the strategy from runtime
+        * sizes. */
+      broadcastDims: Boolean = false) {
     /** A per-series dim (one row per series) with the broadcast hint
-      * applied only when the series bound says the driver-side build is
-      * safe. */
+      * applied only when the caller said the driver-side build is safe. */
     private[query] def hintSeriesDim(dim: DataFrame): DataFrame =
-      if (seriesEstimate.exists(_ <= broadcastLimit)) broadcast(dim) else dim
+      if (broadcastDims) broadcast(dim) else dim
   }
 
   /** The per-series labels dimension `(series_key, labels)` every
@@ -666,10 +660,6 @@ object PromQl {
     * on `t` alone (the per-element scalar semantics). */
   private final case class ScalV(df: DataFrame) extends Value // (t, v)
 
-  /** Evaluate `query` as a range query over `samples`
-    * (`series_key, labels: map<string,string>, t, v`). Returns
-    * `(series_key, labels, t, v)`, one row per series per lattice
-    * instant where the expression has a value, ordered. */
   /** True iff `query` is a top-level range vector (`m[5m]`,
     * `expr[r:s]`) — its instant-query result is a MATRIX (the raw
     * window content), the HTTP API's `resultType` switch. */
@@ -933,11 +923,6 @@ object PromQl {
     out.select("series_key", "labels", "t", "v")
   }
 
-  /** `outerStartMs`/`outerEndMs`: the OUTERMOST query's evaluation
-    * range — `@ start()`/`@ end()` resolve against it regardless of
-    * subquery nesting (a nested compiler's own lattice is widened and
-    * step-realigned, so resolving there would drift by up to the
-    * subquery range). */
   /** Range functions that read a previous-sample feature (counter
     * increments, the lag pair) — the ONLY family whose plan needs the
     * per-series sorted window before the candidate explode. Everything
@@ -975,6 +960,12 @@ object PromQl {
     "holt_winters" -> Set.empty,
     "double_exponential_smoothing" -> Set.empty)
 
+  /** Compiles one expression over `samples` on the `p` lattice.
+    * `outerStartMs`/`outerEndMs`: the OUTERMOST query's evaluation
+    * range — `@ start()`/`@ end()` resolve against it regardless of
+    * subquery nesting (a nested compiler's own lattice is widened and
+    * step-realigned, so resolving there would drift by up to the
+    * subquery range). */
   private final class Compiler(
       samples: DataFrame, p: Params,
       outerStartMs: Long, outerEndMs: Long) {
@@ -1020,11 +1011,33 @@ object PromQl {
       else base.withColumn("t", col("t") + s.offsetMs)
     }
 
-    /** The staleness fill: latest sample per series within
-      * `(g − lookback, g]` at every lattice instant — ONE candidate
-      * explode + map-side-combined aggregate ([[AsOf.gridFillWide]];
-      * the `lookback − 1` closed window IS the half-open PromQL one on
-      * integer milliseconds). */
+    /** The staleness fill every instant read shares: the latest
+      * `value` per series within the closed `[g − look, g]` at every
+      * lattice instant `g` (≡ the half-open PromQL window
+      * `(g − look − 1, g]` on integer milliseconds). Lookback < step:
+      * one sample serves at most one instant, so one aggregate per
+      * (series, instant) suffices; otherwise ONE candidate explode +
+      * map-side-combined aggregate ([[AsOf.gridFillWide]]). `carry` columns are per-series
+      * constants riding the aggregate. Returns `(series_key, t, value,
+      * carry…)` for the instants that have a sample. */
+    private def stalenessFill(src: DataFrame, value: String, look: Long,
+        carry: Seq[String] = Nil): DataFrame = {
+      val (filled, v) =
+        if (look < p.stepMs)
+          (AsOf.latestPerInstant(src.withColumnRenamed(value, "r_v"),
+              Seq("series_key"), p.stepMs, look, "r", originMs = p.startMs,
+              carryCols = carry)
+            .where(col("t").between(p.startMs, p.endMs)), "r_v")
+        else
+          (AsOf.gridFillWide(src, Seq("series_key"), p.startMs, p.endMs,
+            p.stepMs, look, Seq(value), carryCols = carry), s"${value}_v")
+      filled.where(col(v).isNotNull)
+        .select(Seq(col("series_key"), col("t"), col(v).as(value)) ++
+          carry.map(col): _*)
+    }
+
+    /** A selector's instant vector: the [[stalenessFill]] of its
+      * samples under the staleness lookback. */
     private def instantVector(s: Selector): DataFrame = {
       // mixed-corpus sources: a series can interleave float and
       // histogram samples, and a NEWER histogram makes the float
@@ -1041,22 +1054,7 @@ object PromQl {
       // narrow (series_key, labels) pass + a gated join at output
       // grain; the fill itself stays whole-stage HashAggregate.
       val sel = selected(s)
-      val src = sel.select("series_key", "t", "v")
-      val look = p.lookbackMs - 1 // closed window ≡ half-open on int ms
-      // lookback < step: one sample serves at most one instant — the
-      // single-instant fast path; otherwise the candidate-explode fill
-      val filled =
-        if (look < p.stepMs)
-          AsOf.latestPerInstant(src.withColumnRenamed("v", "r_v"),
-              Seq("series_key"), p.stepMs, look, "r", originMs = p.startMs)
-            .where(col("r_v").isNotNull && col("t").between(p.startMs, p.endMs))
-            .select(col("series_key"), col("t"), col("r_v").as("v"))
-        else
-          AsOf.gridFillWide(
-            src, Seq("series_key"), p.startMs, p.endMs, p.stepMs, look, Seq("v"))
-            .where(col("v_v").isNotNull)
-            .select(col("series_key"), col("t"), col("v_v").as("v"))
-      filled
+      stalenessFill(sel.select("series_key", "t", "v"), "v", p.lookbackMs - 1)
         .join(p.hintSeriesDim(seriesLabelsDim(sel)), Seq("series_key"))
         .select("series_key", "labels", "t", "v")
     }
@@ -1088,11 +1086,6 @@ object PromQl {
 
     // --- range-vector functions ---------------------------------------
 
-    /** All range functions ride ONE shape: per-sample lag features
-      * (series-keyed window — the same sample-scale sort every window
-      * consumer prices once), a candidate explode onto the ≤
-      * `⌈range/step⌉+1` instants each sample can serve, and ONE
-      * aggregate per `(series, instant)`. */
     /** Resolve a range-vector argument to (labelled sample frame,
       * range): a `[range]` selector reads the corpus; a `[range:step]`
       * subquery evaluates its body on the inner `step` lattice (aligned
@@ -1151,6 +1144,12 @@ object PromQl {
             (col("prev_v").isNotNull && !(col("v") <=> col("prev_v"))).cast("long"))
       }
 
+    /** The candidate frame of the range functions' explode plan:
+      * per-sample lag features (series-keyed window — the same
+      * sample-scale sort every window consumer prices once) and a
+      * candidate explode onto the ≤ `⌈range/step⌉+1` instants each
+      * sample can serve; [[rangeAgg]] takes ONE aggregate per
+      * `(series, instant)` over it. */
     private def rangeFrame(
         src: DataFrame, rangeMs: Long, needLag: Boolean = true): DataFrame = {
       // (t, v) order: Prometheus never has duplicate timestamps per
@@ -2298,24 +2297,12 @@ object PromQl {
       * `(series_key, labels, t, v, h)` — selectors pass the raw
       * selection, subqueries their inner evaluation's two channels
       * ([[mixedSubqueryStream]]). */
-    private def mixedFillFrom(src0: DataFrame, look: Long): DataFrame = {
-      val src = src0.where(col("h").isNotNull || col("v").isNotNull)
-        .select(col("series_key"), col("labels"), col("t"),
-          struct(col("v"), col("h")).as("vh"))
-      if (look < p.stepMs)
-        AsOf.latestPerInstant(src.withColumnRenamed("vh", "r_v"),
-            Seq("series_key"), p.stepMs, look, "r", originMs = p.startMs,
-            carryCols = Seq("labels"))
-          .where(col("t").between(p.startMs, p.endMs))
+    private def mixedFillFrom(src0: DataFrame, look: Long): DataFrame =
+      stalenessFill(
+        src0.where(col("h").isNotNull || col("v").isNotNull)
           .select(col("series_key"), col("labels"), col("t"),
-            col("r_v").as("vh"))
-      else
-        AsOf.gridFillWide(
-          src, Seq("series_key"), p.startMs, p.endMs, p.stepMs, look,
-          Seq("vh"), carryCols = Seq("labels"))
-          .select(col("series_key"), col("labels"), col("t"),
-            col("vh_v").as("vh"))
-    }
+            struct(col("v"), col("h")).as("vh")),
+        "vh", look, carry = Seq("labels"))
 
     /** Staleness fill over the `h` channel: the latest sample per
       * series within the lookback at every lattice instant, kept only
@@ -3229,82 +3216,7 @@ object PromQl {
 
     // --- aggregations --------------------------------------------------
 
-    private val keyableAggs = Set("sum", "min", "max", "avg", "count",
-      "group", "stddev", "stdvar", "quantile")
-
-    /** Fast path for `op by (ls) (selector)`: the grouping labels are
-      * functionally dependent on `series_key`, so they ride the fill as
-      * KEY columns and the aggregate groups on them directly — no
-      * labels re-attach join, no second scan; the compiled plan is the
-      * hand-built by-label entry's (pruned scan → fill aggregate →
-      * group aggregate, two hash exchanges). `without` can't enumerate
-      * its columns statically and keeps the generic path. */
-    private def aggregateKeyed(a: Agg, s: Selector): DataFrame = {
-      // `by (job, job)` must not build a duplicate-key map (Spark's
-      // map-key dedup policy throws by default)
-      val ls = a.grouping.distinct
-      val cols = ls.indices.map(i => s"__l$i")
-      val src = selected(s).select(
-        Seq(col("series_key"), col("t"), col("v")) ++
-          ls.zip(cols).map { case (l, c) => col("labels").getItem(l).as(c) }: _*)
-      val look = p.lookbackMs - 1
-      val keys = "series_key" +: cols
-      val filled =
-        if (look < p.stepMs)
-          AsOf.latestPerInstant(src.withColumnRenamed("v", "r_v"),
-              keys, p.stepMs, look, "r", originMs = p.startMs)
-            .where(col("r_v").isNotNull && col("t").between(p.startMs, p.endMs))
-            .withColumn("v", col("r_v"))
-        else
-          AsOf.gridFillWide(src, keys, p.startMs, p.endMs, p.stepMs, look, Seq("v"))
-            .where(col("v_v").isNotNull)
-            .withColumn("v", col("v_v"))
-      val n = count(lit(1))
-      val aggCol: Column = a.op match {
-        case "sum" => sum("v")
-        case "min" => min("v")
-        case "max" => nanSkipMax(col("v"))
-        case "avg" => avg("v")
-        case "count" => n.cast("double")
-        case "group" => lit(1.0) // PromQL group(): 1 per present group
-        case "stddev" => sqrt(sum(col("v") * col("v")) / n - pow(sum("v") / n, 2))
-        case "stdvar" => sum(col("v") * col("v")) / n - pow(sum("v") / n, 2)
-        case "quantile" =>
-          val phi = scalarOf(a.param.getOrElse(fail("quantile needs φ")))
-          quantileEdge(phi) match {
-            case Some(edge) => min(lit(edge)) // constant per group
-            case None => expr(s"percentile(v, $phi)")
-          }
-        case other => fail(s"internal: $other is not a keyable aggregate")
-      }
-      // result labels rebuilt from the grouped key columns (absent
-      // label values drop out, the PromQL convention)
-      val lbl =
-        if (ls.isEmpty) map().cast("map<string,string>")
-        else map_filter(
-          map(ls.zip(cols).flatMap { case (l, c) => Seq(lit(l), col(c)) }: _*),
-          (_, v) => v.isNotNull)
-      filled
-        .groupBy(cols.map(col) :+ col("t"): _*)
-        .agg(aggCol.as("v"))
-        .withColumn("labels", lbl)
-        .withColumn("series_key", graft.functions.seriesKey(col("labels")))
-        .select("series_key", "labels", "t", "v")
-    }
-
-    private def aggregate(a: Agg): Value = a.body match {
-      // count/group over a mixed corpus must see HISTOGRAM elements too
-      // (upstream counts both sample kinds; the other aggregations
-      // ignore histograms with an annotation, which the float-only
-      // reading models) — route them to the generic path's union
-      case s: Selector if !a.without && s.at.isEmpty &&
-          keyableAggs.contains(a.op) &&
-          !(hasH && (a.op == "count" || a.op == "group")) =>
-        Vec(aggregateKeyed(a, s))
-      case _ => aggregateGeneric(a)
-    }
-
-    private def aggregateGeneric(a: Agg): Value = {
+    private def aggregate(a: Agg): Value = {
       val iv0 = vecOf(a.body)
       // count/group: an instant-vector ELEMENT is a series whose latest
       // in-lookback sample is of either kind; the float and histogram
@@ -3428,99 +3340,7 @@ object PromQl {
 
     // --- binary operators ----------------------------------------------
 
-    /** Shared-fill fast path for `selector ⊕ selector` arithmetic under
-      * one-to-one matching (`{a} / {b}`, the dashboard ratio shape):
-      * the generic path evaluates each operand's staleness fill
-      * separately (two exchanges), window-checks both sides for
-      * duplicate match keys (two more partitionings) and then joins —
-      * ~5 exchanges of lattice-grain rows. Here the two selections
-      * union SIDE-TAGGED into ONE fill pass (per-(side, series) keys —
-      * staleness is per original series), the labels ride a series-
-      * grain dim, and one (match key, instant) pivot aggregate
-      * produces both operands in-row: TWO exchanges total. The
-      * duplicate-match-key execution errors live in the same aggregate
-      * (right dups unconditional, left dups only when matched — the
-      * generic path's exact rule), so semantics are unchanged.
-      * Comparisons keep the generic path (the filter form needs the
-      * lhs's full label set back); mixed-corpus sources too (their
-      * fills are [[mixedFill]]-shaped). */
-    private val arithOps = Set("+", "-", "*", "/", "%", "^", "atan2")
-    private def binarySharedFill(b: Bin): Option[DataFrame] = (b.lhs, b.rhs) match {
-      case (ls: Selector, rs: Selector)
-          if !hasH && arithOps.contains(b.op) &&
-            b.matchOn.forall(_.card == 0) &&
-            ls.at.isEmpty && rs.at.isEmpty =>
-        // side-tagged union; selected() already applied each side's
-        // offset shift, so mixed offsets compose naturally. The match
-        // key is computed AT THE SOURCE (a codegen'd hash of the label
-        // subset, functionally dependent on series_key) so it rides
-        // the fill as an extra key column — no dim join before the
-        // pivot aggregate, and the fill's scan count matches the
-        // generic path's.
-        def side(s: Selector, i: Int) = selected(s)
-          .select(lit(i).as("__side"), col("series_key"), col("labels"),
-            col("t"), col("v"))
-        val union = side(ls, 0).unionByName(side(rs, 1))
-          .withColumn("__mk", matchKey(b.matchOn))
-        val src = union.select("__side", "series_key", "__mk", "t", "v")
-        val keys = Seq("__side", "series_key", "__mk")
-        val look = p.lookbackMs - 1
-        val filled =
-          if (look < p.stepMs)
-            AsOf.latestPerInstant(src.withColumnRenamed("v", "r_v"),
-                keys, p.stepMs, look, "r", originMs = p.startMs)
-              .where(col("r_v").isNotNull && col("t").between(p.startMs, p.endMs))
-              .select(col("__side"), col("__mk"), col("t"),
-                col("r_v").as("v"))
-          else
-            AsOf.gridFillWide(src, keys, p.startMs, p.endMs, p.stepMs, look, Seq("v"))
-              .where(col("v_v").isNotNull)
-              .select(col("__side"), col("__mk"), col("t"),
-                col("v_v").as("v"))
-        // one series-grain dim: match key → result labels (the
-        // one-to-one resultMetric subset — equal keys imply equal
-        // subset maps, so one row per key is canonical). Through
-        // [[seriesLabelsDim]]'s entry-array dedup, not
-        // groupBy+first(map): the MAP buffer form paid a sample-grain
-        // partial SortAggregate over the two-scan union.
-        val mdim = seriesLabelsDim(
-            union.select(col("__mk").as("series_key"),
-              matchLabels(b.matchOn).as("labels")))
-          .withColumnRenamed("series_key", "__mk")
-        val lv = max(when(col("__side") === 0, col("v")))
-        val rv = max(when(col("__side") === 1, col("v")))
-        Some(filled
-          .groupBy("__mk", "t")
-          .agg(
-            sum(when(col("__side") === 0, 1).otherwise(0)).as("__ln"),
-            sum(when(col("__side") === 1, 1).otherwise(0)).as("__rn"),
-            lv.as("__lv"), rv.as("__rv"))
-          .where(
-            when(col("__rn") > 1,
-              raise_error(concat(
-                lit("promql: found duplicate series for the match group "),
-                col("__mk"),
-                lit(" on the right side of the operation"))).cast("boolean"))
-              .when(col("__ln") > 1 && col("__rn") >= 1,
-                raise_error(concat(
-                  lit("promql: found duplicate series for the match group "),
-                  col("__mk"),
-                  lit(" on the left side of the operation"))).cast("boolean"))
-              .otherwise(lit(true)))
-          .where(col("__ln") === 1 && col("__rn") === 1)
-          .withColumn("v", arith(b.op, col("__lv"), col("__rv")))
-          .join(p.hintSeriesDim(mdim), Seq("__mk"))
-          .select(col("__mk").as("series_key"), col("labels"),
-            col("t"), col("v")))
-      case _ => None
-    }
-
-    private def binary(b: Bin): Value = binarySharedFill(b) match {
-      case Some(df) => Vec(df)
-      case None => binaryGeneric(b)
-    }
-
-    private def binaryGeneric(b: Bin): Value = (eval(b.lhs), eval(b.rhs)) match {
+    private def binary(b: Bin): Value = (eval(b.lhs), eval(b.rhs)) match {
       case (Scal(l), Scal(r)) => Scal(scalarScalar(b.op, l, r, b.bool))
       case (Vec(l), Scal(r)) => Vec(vectorScalar(b, l, lit(r), scalarRight = true))
       case (Scal(l), Vec(r)) => Vec(vectorScalar(b, r, lit(l), scalarRight = false))

@@ -509,7 +509,7 @@ final class BlockStore(
     * total (an upper bound on live series, one count per block) within
     * [[broadcastLimit]] — the size the Spark path already builds on the
     * driver, as a broadcast, for every labelled read. */
-  private def resident(st: ManifestState): Boolean =
+  private[graft] def resident(st: ManifestState): Boolean =
     st.blocks.map(_.numSeries).sum <= broadcastLimit
 
   /** This store's driver-resident [[SeriesIndex]] as of `st`, shared
@@ -762,13 +762,6 @@ final class BlockStore(
   def planCompaction(ranges: Seq[Long]): Seq[Long] =
     Compaction.plan(manifest.blocks, ranges).map(_.blockId)
 
-  /** Merge the given blocks into one new block (reference `Compact`,
-    * `compact.go:373-464` + `populateBlock`): vertical dedup
-    * (min-time-order recency, [[blockRecency]]), physical tombstone
-    * drop, one sorted write,
-    * then an atomic manifest swap that retires the inputs. Tombstone
-    * intervals that no longer touch any remaining block are dropped
-    * (`CleanTombstones`, `db.go:1234-1261`). */
   /** Apply pending tombstones physically by rewriting ONLY the blocks
     * that carry them, each by itself — the reference's
     * `db.CleanTombstones()` (`db.go:1234-1261`): block boundaries are
@@ -803,6 +796,13 @@ final class BlockStore(
     rewritten
   }
 
+  /** Merge the given blocks into one new block (reference `Compact`,
+    * `compact.go:373-464` + `populateBlock`): vertical dedup
+    * (min-time-order recency, [[blockRecency]]), physical tombstone
+    * drop, one sorted write,
+    * then an atomic manifest swap that retires the inputs. Tombstone
+    * intervals that no longer touch any remaining block are dropped
+    * (`CleanTombstones`, `db.go:1234-1261`). */
   def compact(spark: SparkSession, ids: Seq[Long]): Option[Long] = Manifest.withLock(root) {
     if (ids.size < 1) return None
     val st = manifest

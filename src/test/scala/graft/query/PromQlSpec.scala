@@ -182,7 +182,7 @@ class PromQlSpec extends SparkSuite {
     assert(vals(q) == Map("{}" -> 150.0))
     val cv = PromQl.eval("count_values(\"val\", http_requests)", counters, p)
     assert(vals(cv) == Map("{val=\"100\"}" -> 1.0, "{val=\"200\"}" -> 1.0))
-    // group(): 1 per present group, both the keyed and generic paths
+    // group(): 1 per present group, under by and without alike
     assert(vals(PromQl.eval("group by (job) (http_requests)", counters, p)) ==
       Map("{job=\"api\"}" -> 1.0))
     assert(vals(PromQl.eval("group without (instance) (http_requests)", counters, p)) ==
@@ -384,14 +384,7 @@ class PromQlSpec extends SparkSuite {
     assert(out.select("v").as[Double].collect().forall(_ == 1.0))
   }
 
-  test("by-aggregation fast path plans without a labels re-attach join") {
-    // sum by (job) over a plain selector rides the keyed fill: the
-    // grouping label is a key COLUMN through the fill, so the plan has
-    // no Join at all — the hand-built by-label entries' shape
-    val plan = PromQl.eval("sum by (job) (http_requests)", counters, at(50 * M))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan.take(2500))
-    // the generic path (without) still answers identically
+  test("sum by (job) equals sum without the other labels") {
     val a = vals(PromQl.eval("sum by (job) (http_requests)", counters, at(50 * M)))
     val b = vals(PromQl.eval("sum without (instance, __name__) (http_requests)",
       counters, at(50 * M)))
@@ -615,10 +608,10 @@ class PromQlSpec extends SparkSuite {
 
   test("windowRangeAgg labels broadcast is gated on the caller's series bound") {
     // force the RANGE-frame window plan (capK = 0) so the per-series
-    // labels dim join is in the plan, then flip only the series bound
-    def planOf(est: Option[Long]): String = {
+    // labels dim join is in the plan, then flip only the caller's gate
+    def planOf(broadcastDims: Boolean): String = {
       val p = PromQl.Params(50 * M, 50 * M, M, rangeExplodeCapK = 0,
-        seriesEstimate = est)
+        broadcastDims = broadcastDims)
       PromQl.eval("rate(http_requests[30m])", counters, p)
         .queryExecution.sparkPlan.toString
     }
@@ -627,18 +620,14 @@ class PromQlSpec extends SparkSuite {
     val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(planOf(Some(2L)).contains("BroadcastHashJoin"),
-        planOf(Some(2L)).take(2000))
-      // unbounded (raw-parquet eval) and over-bound (wide fleet) both
-      // drop the hint — AQE picks from runtime sizes
-      assert(!planOf(None).contains("BroadcastHashJoin"),
-        planOf(None).take(2000))
-      assert(!planOf(Some(3000000L)).contains("BroadcastHashJoin"),
-        planOf(Some(3000000L)).take(2000))
+      assert(planOf(true).contains("BroadcastHashJoin"), planOf(true).take(2000))
+      // the default (a raw-parquet eval, a fleet over the store's limit)
+      // drops the hint — AQE picks from runtime sizes
+      assert(!planOf(false).contains("BroadcastHashJoin"), planOf(false).take(2000))
       // and the gated plan still answers correctly both ways
       val p0 = PromQl.Params(50 * M, 50 * M, M, rangeExplodeCapK = 0)
       val hinted = vals(PromQl.eval("rate(http_requests[30m])", counters,
-        p0.copy(seriesEstimate = Some(2L))))
+        p0.copy(broadcastDims = true)))
       val aqe = vals(PromQl.eval("rate(http_requests[30m])", counters, p0))
       assert(hinted == aqe && hinted.nonEmpty)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)

@@ -1008,15 +1008,6 @@ class AppenderSpec extends SparkSuite {
     assert(got == Seq("ok", "amend", "amend"))
   }
 
-  test("batch tying the baseline's max t compares against the BASELINE value") {
-    val baseline = Seq(("s", 100L, 9.0)).toDF("series_key", "max_t", "last_v")
-    val got = statuses(Appender.validate(
-      batch(("s", 100, 7.0, 1), ("s", 100, 7.0, 2)),
-      minValidTime = 0, baseline = Some(baseline)))
-    // stored valid value at t=100 is the baseline's 9.0 throughout
-    assert(got == Seq("amend", "amend"))
-  }
-
   test("invalid values are skipped, valid ones in the same txn commit " +
     "(TestSkippingInvalidValuesInSameTxn db_test.go:399-441)") {
     val root = java.nio.file.Files.createTempDirectory("graft-txn-skip").toString
@@ -1050,14 +1041,6 @@ class AppenderSpec extends SparkSuite {
     val got = statuses(Appender.validate(
       batch(("s", 5, 1.0, 1), ("s", 50, 2.0, 2)), minValidTime = 10))
     assert(got == Seq("out_of_bounds", "ok"))
-  }
-
-  test("baseline high-water mark from prior batches is honored") {
-    val baseline = Seq(("s", 100L, 9.0)).toDF("series_key", "max_t", "last_v")
-    val got = statuses(Appender.validate(
-      batch(("s", 50, 1.0, 1), ("s", 100, 9.0, 2), ("s", 100, 8.0, 3), ("s", 150, 2.0, 4)),
-      minValidTime = 0, baseline = Some(baseline)))
-    assert(got == Seq("out_of_order", "ok", "amend", "ok"))
   }
 
   test("series are independent") {
@@ -1145,23 +1128,6 @@ class AppenderSpec extends SparkSuite {
       .commit()
     assert(id.nonEmpty)
     assert(store.readRange(spark, 0, 5000, graft.matchers.Eq("name", "cpu")).count() == 1)
-  }
-
-  test("baseline broadcast hint is gated: broadcastBaseline=false leaves the strategy to the planner") {
-    val baseline = Seq(("s", 100L, 9.0)).toDF("series_key", "max_t", "last_v")
-    val b = batch(("s", 150, 2.0, 1), ("s", 160, 3.0, 2))
-    def planOf(broadcastHint: Boolean): String = {
-      val df = Appender.validate(b, 0, Some(baseline), broadcastBaseline = broadcastHint)
-      df.queryExecution.sparkPlan.toString
-    }
-    // with auto-broadcast disabled, only the explicit hint can produce a
-    // broadcast join — proving the gate controls the plan, not size luck
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(planOf(true).contains("BroadcastHashJoin"), planOf(true).take(2000))
-      assert(!planOf(false).contains("BroadcastHashJoin"), planOf(false).take(2000))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
   }
 
   test("txn commit with nothing acceptable is a no-op (empty commit)") {
