@@ -56,7 +56,8 @@ final class Db private (
     * total is within [[BlockStore.broadcastLimit]] (the scan gets a
     * literal key filter, no Spark job resolves it), and as a Spark
     * aggregate over the unioned dictionaries above it
-    * ([[BlockStore.readRange]]). */
+    * ([[BlockStore.readRange]]). [[delete]] and by-ref appends resolve
+    * through the same gate. */
   def query(mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
     store.readRange(spark, mint, maxt, matchers: _*)
 
@@ -102,7 +103,9 @@ final class Db private (
   def matching(selectors: Seq[Seq[Matcher]], mint: Long, maxt: Long): DataFrame =
     selectors.map(ms => query(mint, maxt, withLabels = true, ms: _*)).reduce(_ unionByName _)
 
-  /** Record deletion intervals for matching series (`db.go:1203-1232`). */
+  /** Record deletion intervals for matching series (`db.go:1203-1232`),
+    * resolved through [[query]]'s gate: on the driver below it, with no
+    * Spark job for an inline record ([[BlockStore.delete]]). */
   def delete(mint: Long, maxt: Long, matchers: Matcher*): Unit =
     store.delete(spark, mint, maxt, matchers: _*)
 

@@ -122,15 +122,11 @@ object Appender {
       requireOpen()
       closed = true
       val resolved = stagedByRef.map { byRef =>
-        val spark = byRef.sparkSession
-        // rebuild the label maps from the store's index so the new
-        // block's dictionary stays complete (matcher queries must keep
-        // working when a block holds only by-ref samples)
-        val known = store.postingsIndex(spark)
-          .groupBy("series_key")
-          .agg(map_from_entries(
-            collect_list(struct(col("label_name"), col("label_value")))).as("labels"))
-        val withLabels = byRef.join(known, Seq("series_key"), "left")
+        // take the label maps from the store's index (the relation a
+        // labelled read joins, resolved on the store's side of its gate)
+        // so the new block's dictionary stays complete: matcher queries
+        // must keep working when a block holds only by-ref samples
+        val withLabels = byRef.join(store.seriesLabels(byRef.sparkSession), Seq("series_key"), "left")
         val unknown = withLabels.where(col("labels").isNull)
           .select("series_key").distinct().limit(5)
           .collect().map(_.getString(0))
@@ -138,12 +134,9 @@ object Appender {
           s"addRef with unknown series refs (ErrNotFound): ${unknown.mkString(", ")}")
         withLabels
       }
-      val all = (staged, resolved) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b))
-        case (a, b) => a.orElse(b)
-      }
+      val all = (staged ++ resolved).reduceOption(_ unionByName _)
       // the write caches its input, so the validate windows (and
-      // addRef's postingsIndex join) run once; it publishes nothing when
+      // addRef's labels join) run once; it publishes nothing when
       // every sample was rejected
       all.flatMap(df => store.write(validate(df, minValidTime)
         .where(col("status") === "ok").drop("status")

@@ -19,10 +19,11 @@ import graft.matchers.Matcher
   *    per-series "has the label" bit;
   *  - J1 Intersect (matcher conjunction) = the AND across matchers.
   *
-  * [[graft.storage.BlockStore.readRange]] resolves selectors here above
-  * its `broadcastLimit` gate (below it, the driver-resident
-  * [[graft.storage.SeriesIndex]] applies the same rule) and touches the
-  * fact table with one semi-join on the resolved keys. Ad-hoc frames
+  * [[graft.storage.BlockStore]] resolves here above its
+  * `broadcastLimit` gate — selectors for `readRange`, which touches the
+  * fact table with one semi-join on the resolved keys, and the series a
+  * `delete` records; below it the driver-resident
+  * [[graft.storage.SeriesIndex]] applies the same rule to both. Ad-hoc frames
   * with wide source columns take the pushdown path instead
   * ([[TsdbSource.select]]), where matchers compile to scan filters.
   */

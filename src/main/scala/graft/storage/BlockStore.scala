@@ -35,9 +35,10 @@ import graft.matchers.Matcher
   *    without samples ([[registerSeries]]) keep the same format, with
   *    null bounds, under `dict/head/`. One writer
   *    ([[BlockStore.writeDict]]) and one reader ([[BlockStore.readDict]])
-  *    own the format. Selectors, label maps and label metadata resolve
-  *    against it, never against sample rows, by one resolver on each
-  *    side of a gate: while the manifest's series total is at most
+  *    own the format. Selectors, label maps, label metadata, deletes
+  *    and by-ref appends resolve against it, never against sample
+  *    rows, by one resolver on each side of a gate taken in one place
+  *    ([[residentIndex]]): while the manifest's series total is at most
   *    [[broadcastLimit]], a driver-resident [[SeriesIndex]] that loads
   *    each block's dictionary once per JVM (no Spark job on a warm
   *    cache); above it, Spark jobs over the unioned dictionaries
@@ -76,8 +77,9 @@ final class BlockStore(
     val tombstoneSpillThreshold: Int = 10000,
     /** The most series the driver holds: under this manifest-derived
       * worst case (every series matched) the postings index is resident
-      * on the driver ([[SeriesIndex]]) and matched-series / tombstone
-      * sets are broadcast; past it selectors and labels resolve as
+      * on the driver ([[SeriesIndex]]) — selectors, label maps, deletes
+      * and by-ref appends resolve there — and matched-series /
+      * tombstone sets are broadcast; past it all of them resolve as
       * Spark jobs, the hints are dropped and AQE picks the join
       * strategy from actual runtime sizes — a matcher like `Re(".*")`
       * over 10⁸ series must never force a driver-side build (the
@@ -91,6 +93,8 @@ final class BlockStore(
     * appends, [[registerSeries]]) — the head's series map entries that
     * survive an `Appender.Rollback` (`db.go:100-112`). */
   private[storage] def headDictDir = s"$dictDir/head"
+  /** [[headDictDir]] when some series are registered there. */
+  private def headDict = Some(headDictDir).filter(d => Files.isDirectory(Paths.get(d)))
   private def blockPath(id: Long) = s"$dataDir/block_id=$id"
   private def dictPath(id: Long) = s"$dictDir/block_id=$id"
   private def tombPath(id: Long) = s"$tombsDir/ts_id=$id"
@@ -391,19 +395,20 @@ final class BlockStore(
     // strategy from runtime sizes
     readSelected(spark, mint, maxt) { (raw0, st, live) =>
       if (matchers.isEmpty) raw0
-      else if (resident(st)) {
-        val keys = seriesIndex(spark, st).resolve(matchers)
-        if (keys.size <= BlockStore.literalLimit)
-          raw0.where(col("series_key").isin(keys: _*))
-        else {
-          import spark.implicits._
-          raw0.join(broadcast(keys.toDF("series_key")), Seq("series_key"), "left_semi")
-        }
-      } else {
-        val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
-        val totalSeries = live.map(_.numSeries).sum // upper bound on |keys|
-        val hinted = if (totalSeries <= broadcastLimit) broadcast(keys) else keys
-        raw0.join(hinted, Seq("series_key"), "left_semi")
+      else residentIndex(spark, st) match {
+        case Some(ix) =>
+          val keys = ix.resolve(matchers)
+          if (keys.size <= BlockStore.literalLimit)
+            raw0.where(col("series_key").isin(keys: _*))
+          else {
+            import spark.implicits._
+            raw0.join(broadcast(keys.toDF("series_key")), Seq("series_key"), "left_semi")
+          }
+        case None =>
+          val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
+          val totalSeries = live.map(_.numSeries).sum // upper bound on |keys|
+          val hinted = if (totalSeries <= broadcastLimit) broadcast(keys) else keys
+          raw0.join(hinted, Seq("series_key"), "left_semi")
       }
     }
 
@@ -476,12 +481,9 @@ final class BlockStore(
     * normalized (sample rows carry only the series key; label pairs
     * live once per series in the postings index), so consumers doing
     * per-label grouping downstream (the PromQL `by (label)` shape) get
-    * the map back from one `(series_key, labels)` relation joined to the
-    * read once: under the gate the [[SeriesIndex]]'s local relation,
-    * broadcast (built once per index, reused by every query); above it
-    * one pivot of the index — `map_from_entries` over a per-series
-    * collect — left to AQE. The label-less series `"{}"` owns no index
-    * rows and surfaces an empty map, the reference's `labels.Labels{}`. */
+    * the map back from [[seriesLabels]] joined to the read once. The
+    * label-less series `"{}"` owns no index rows and surfaces an empty
+    * map, the reference's `labels.Labels{}`. */
   def readRange(
       spark: SparkSession,
       mint: Long,
@@ -490,20 +492,21 @@ final class BlockStore(
       matchers: Matcher*): DataFrame = {
     val rows = readRange(spark, mint, maxt, matchers: _*)
     if (!withLabels) rows
-    else {
-      val st = manifest
-      val lab =
-        if (resident(st)) broadcast(seriesIndex(spark, st).labelsFrame(spark))
-        else postingsIndex(spark)
-          .groupBy("series_key")
-          .agg(map_from_entries(
-            collect_list(struct(col("label_name"), col("label_value")))).as("labels"))
-      rows.join(lab, Seq("series_key"), "left")
-        .withColumn("labels",
-          org.apache.spark.sql.functions.coalesce(
-            col("labels"), map().cast("map<string,string>")))
-    }
+    else rows.join(seriesLabels(spark), Seq("series_key"), "left")
+      .withColumn("labels",
+        org.apache.spark.sql.functions.coalesce(col("labels"), map().cast("map<string,string>")))
   }
+
+  /** `(series_key, labels)` of every indexed series: the one relation
+    * that a labelled read ([[readRange]]) and a by-ref append
+    * ([[graft.ingest.Appender.Txn.addRef]]) join. Under the gate it is
+    * the [[SeriesIndex]]'s local relation, broadcast (built once per
+    * index, reused by every query); above it, one pivot of the index —
+    * `map_from_entries` over a per-series collect — left to AQE. */
+  private[graft] def seriesLabels(spark: SparkSession): DataFrame =
+    residentIndex(spark, manifest).map(ix => broadcast(ix.labelsFrame(spark)))
+      .getOrElse(postingsIndex(spark).groupBy("series_key").agg(map_from_entries(
+        collect_list(struct(col("label_name"), col("label_value")))).as("labels")))
 
   /** The gate between the two resolution paths: the manifest's series
     * total (an upper bound on live series, one count per block) within
@@ -512,20 +515,23 @@ final class BlockStore(
   private[graft] def resident(st: ManifestState): Boolean =
     st.blocks.map(_.numSeries).sum <= broadcastLimit
 
-  /** This store's driver-resident [[SeriesIndex]] as of `st`, shared
-    * by every `BlockStore` on the same root in this JVM: reused while
-    * its dictionaries' part files are unchanged, refreshed (reading
-    * only the new dictionaries, dropping the retired ones) otherwise. */
-  private[storage] def seriesIndex(spark: SparkSession, st: ManifestState): SeriesIndex = {
-    val blockDirs = indexedBlocks(st).map(id => id -> s"$dictDir/block_id=$id")
-    val headDir = Some(headDictDir).filter(d => Files.isDirectory(Paths.get(d)))
-    BlockStore.seriesIndexes.synchronized {
-      val ix = SeriesIndex.refresh(
-        spark, BlockStore.seriesIndexes.get(tableName), blockDirs, headDir)
-      BlockStore.seriesIndexes(tableName) = ix
-      ix
+  /** The gate, taken here for every postings consumer — reads, label
+    * maps, label metadata, [[delete]] and by-ref appends. While
+    * [[resident]], this store's driver-resident [[SeriesIndex]] as of
+    * `st`, shared by every `BlockStore` on the same root in this JVM:
+    * reused while its dictionaries' part files are unchanged, refreshed
+    * (reading only the new dictionaries, dropping the retired ones)
+    * otherwise. None above it, where the consumer runs its Spark path. */
+  private[storage] def residentIndex(spark: SparkSession, st: ManifestState): Option[SeriesIndex] =
+    if (!resident(st)) None
+    else {
+      val blockDirs = indexedBlocks(st).map(id => id -> dictPath(id))
+      BlockStore.seriesIndexes.synchronized {
+        val ix = SeriesIndex.refresh(spark, BlockStore.seriesIndexes.get(tableName), blockDirs, headDict)
+        BlockStore.seriesIndexes(tableName) = ix
+        Some(ix)
+      }
     }
-  }
 
   /** Register series WITHOUT samples — the persistence behind a
     * rolled-back append transaction ([[graft.ingest.Appender.txn]]):
@@ -565,9 +571,7 @@ final class BlockStore(
     * Sample-less registered series ([[registerSeries]]) ride along like
     * the reference's head series map entries. */
   def postingsIndex(spark: SparkSession): DataFrame =
-    BlockStore.readDict(spark,
-      indexedBlocks(manifest).map(dictPath) ++
-        Some(headDictDir).filter(d => Files.isDirectory(Paths.get(d))))
+    BlockStore.readDict(spark, indexedBlocks(manifest).map(dictPath) ++ headDict)
       .select("label_name", "label_value", "series_key").distinct()
 
   /** The live block ids whose dictionaries make up the postings index,
@@ -585,7 +589,7 @@ final class BlockStore(
     * partial index. */
   private def indexedBlocks(st: ManifestState): Seq[Long] = {
     val ids = st.blocks.map(_.blockId)
-    if (ids.isEmpty && !Files.isDirectory(Paths.get(headDictDir)))
+    if (ids.isEmpty && headDict.isEmpty)
       require(Manifest.currentVersion(root) > 0L,
         s"block store at $root has no published blocks")
     val missing = ids.filterNot(id => Files.isDirectory(Paths.get(dictPath(id))))
@@ -607,21 +611,16 @@ final class BlockStore(
     * (reference `querier.go:70-89` reads only index sections) — under
     * the gate a local relation from the [[SeriesIndex]], whose
     * `collect()` starts no Spark job. */
-  def labelNames(spark: SparkSession): DataFrame = {
-    val st = manifest
-    if (resident(st)) localColumn(spark, "label_name", seriesIndex(spark, st).labelNames)
-    else postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name")
-  }
+  def labelNames(spark: SparkSession): DataFrame =
+    residentIndex(spark, manifest).map(ix => localColumn(spark, "label_name", ix.labelNames))
+      .getOrElse(postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name"))
 
   /** A2 over the store: sorted distinct values of one label, index-only
     * (reference `querier.go:91-108`), gated like [[labelNames]]. */
-  def labelValues(spark: SparkSession, name: String): DataFrame = {
-    val st = manifest
-    if (resident(st)) localColumn(spark, "label_value", seriesIndex(spark, st).labelValues(name))
-    else postingsIndex(spark)
-      .where(col("label_name") === name)
-      .select(col("label_value")).distinct().orderBy("label_value")
-  }
+  def labelValues(spark: SparkSession, name: String): DataFrame =
+    residentIndex(spark, manifest).map(ix => localColumn(spark, "label_value", ix.labelValues(name)))
+      .getOrElse(postingsIndex(spark).where(col("label_name") === name)
+        .select(col("label_value")).distinct().orderBy("label_value"))
 
   /** `xs` as a one-column local relation (`isLocal`: `collect()` runs
     * no job). */
@@ -632,9 +631,11 @@ final class BlockStore(
   /** Record deletion intervals for every series matching the conjunction
     * over `[mint, maxt]` (reference `DB.Delete`, `db.go:1203-1232`):
     * series resolve in the postings index alone — no sample data is
-    * read — then the intervals (coalesced per series) publish in the
-    * next manifest version. Per-block tombstone counters feed the
-    * compaction planner's >5% trigger (`compact.go:211-220`).
+    * read; under the gate on the resident index with no Spark job for
+    * an inline record, above it as Spark jobs — then the intervals
+    * (coalesced per series) publish in the next manifest version.
+    * Per-block tombstone counters feed the compaction planner's >5%
+    * trigger (`compact.go:211-220`).
     *
     * A matches-empty matcher (neq/notRe/empty-eq) also records an
     * interval for the label-less series `"{}"` whether or not it exists
@@ -652,39 +653,46 @@ final class BlockStore(
       // then per SERIES (head.go:972-977): each matched series clamps
       // to its own [s_mint, s_maxt] recorded in the block dictionaries
       // at write time, so a later append beyond a series' old max also
-      // survives even when it lands inside the store-wide range. The
-      // phantom "{}" record, which the index can't see, keeps the
-      // store-level clamp: wider, but never past the request.
-      val bs = manifest.blocks
+      // survives even when it lands inside the store-wide range. Only
+      // block dictionaries record bounds: head-only series and the
+      // phantom "{}" record, which the index can't see, keep the
+      // store-level clamp — wider, but never past the request. Under the
+      // gate the keys and bounds come from the resident index, on the
+      // driver; above it from Spark jobs over the dictionaries.
+      val st = manifest
+      val bs = st.blocks
       val mint = if (bs.isEmpty) mint0 else math.max(mint0, bs.map(_.mint).min)
       val maxt = if (bs.isEmpty) maxt0 else math.min(maxt0, bs.map(_.maxt).max - 1)
       if (bs.isEmpty || mint > maxt) return
-      val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
-      val bounds = BlockStore.readDict(spark, bs.map(b => dictPath(b.blockId)))
-        .groupBy("series_key").agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
-      val clamped = keys.join(bounds, Seq("series_key"), "left")
-        .select(col("series_key"),
-          greatest(lit(mint), org.apache.spark.sql.functions
-            .coalesce(col("s_mint"), lit(mint))).as("mint"),
-          least(lit(maxt), org.apache.spark.sql.functions
-            .coalesce(col("s_maxt"), lit(maxt))).as("maxt"))
+      val clamped = (residentIndex(spark, st) match {
+        case Some(ix) =>
+          import spark.implicits._
+          ix.resolve(matchers).map { k =>
+            val (lo, hi) = ix.bounds(k).getOrElse((mint, maxt))
+            (k, math.max(mint, lo), math.min(maxt, hi))
+          }.toDF("series_key", "mint", "maxt")
+        case None =>
+          val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
+          val bounds = BlockStore.readDict(spark, bs.map(b => dictPath(b.blockId)))
+            .groupBy("series_key").agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
+          keys.join(bounds, Seq("series_key"), "left").select(col("series_key"),
+            greatest(lit(mint), col("s_mint")).as("mint"), least(lit(maxt), col("s_maxt")).as("maxt"))
+      })
         // a matched series wholly outside the request records nothing
         // (the reference's `continue` on an empty clamp)
         .where(col("mint") <= col("maxt"))
       // probe at most threshold+1 keys: a narrow delete inlines T
       // records; a wide one NEVER materializes its series set on the
       // driver — it spills to a parquet side table referenced by one
-      // manifest F record (count via observe, no extra job)
+      // manifest F record (count via observe, no extra job). On a local
+      // relation (under the gate) the probe starts no job
       val probe = clamped.limit(tombstoneSpillThreshold + 1).collect()
       if (probe.length <= tombstoneSpillThreshold) {
         val added = probe.map(r =>
           TombstoneInterval(r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-        Manifest.update(root) { st =>
-          val all = coalesce(st.tombstones ++ added)
-          st.copy(blocks = recount(st.blocks, all, st.tombstoneFiles), tombstones = all)
-        }
+        Manifest.update(root)(cur => recount(cur.copy(tombstones = coalesce(cur.tombstones ++ added))))
       } else {
-        val fid = manifest.nextBlockId
+        val fid = st.nextBlockId
         val obs = Observation(s"graft-tomb-$fid")
         clamped
           // the file's manifest record carries the COVERING interval of
@@ -699,28 +707,32 @@ final class BlockStore(
         val n = stats.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
         val lo = stats.get("lo").map(_.asInstanceOf[Long]).getOrElse(mint)
         val hi = stats.get("hi").map(_.asInstanceOf[Long]).getOrElse(maxt)
-        Manifest.update(root) { st =>
-          val fs = st.tombstoneFiles :+ TombstoneFile(fid, lo, hi, n)
-          st.copy(blocks = recount(st.blocks, st.tombstones, fs),
-            tombstoneFiles = fs, highWater = math.max(st.highWater, fid))
-        }
+        Manifest.update(root)(cur => recount(cur.copy(highWater = math.max(cur.highWater, fid),
+          tombstoneFiles = cur.tombstoneFiles :+ TombstoneFile(fid, lo, hi, n))))
       }
       markSynced()
     }
 
-  /** Per-block tombstone counters feeding the planner's >5% trigger
-    * (`compact.go:211-220`). Spilled side tables count via their
-    * covering interval × row count — an upper bound, which only makes
-    * the trigger conservative-eager, never blind. */
-  private def recount(
-      blocks: Seq[BlockMeta],
-      tombs: Seq[TombstoneInterval],
-      files: Seq[TombstoneFile]): Seq[BlockMeta] =
-    blocks.map { b =>
-      val inline = tombs.count(t => t.mint < b.maxt && t.maxt >= b.mint)
-      val spilled = files.filter(f => f.mint < b.maxt && f.maxt >= b.mint).map(_.count).sum
+  /** `st` with its per-block tombstone counters, which feed the
+    * planner's >5% trigger (`compact.go:211-220`), counted from its own
+    * tombstones. Spilled side tables count via their covering interval
+    * × row count — an upper bound, which only makes the trigger
+    * conservative-eager, never blind. */
+  private def recount(st: ManifestState): ManifestState =
+    st.copy(blocks = st.blocks.map { b =>
+      val inline = st.tombstones.count(t => b.overlaps(t.mint, t.maxt))
+      val spilled = st.tombstoneFiles.filter(f => b.overlaps(f.mint, f.maxt)).map(_.count).sum
       b.copy(numTombstones = inline + spilled)
-    }
+    })
+
+  /** `st` with `keep` as its block list and without the tombstone
+    * records that touch none of those blocks: fully applied by a
+    * rewrite, or retired with the blocks they covered. */
+  private def retaining(st: ManifestState, keep: Seq[BlockMeta]): ManifestState = {
+    def touches(mint: Long, maxt: Long) = keep.exists(_.overlaps(mint, maxt))
+    st.copy(blocks = keep, tombstones = st.tombstones.filter(t => touches(t.mint, t.maxt)),
+      tombstoneFiles = st.tombstoneFiles.filter(f => touches(f.mint, f.maxt)))
+  }
 
   /** Driver-side interval coalescing per series (reference
     * `Intervals.add`, `tombstones.go:259-304`) — the tombstone set is
@@ -786,11 +798,8 @@ final class BlockStore(
     // same blocks on the next call.
     if (entryTombs.nonEmpty || entryFiles.nonEmpty) {
       val st1 = manifest
-      val tombs = st1.tombstones.filterNot(entryTombs)
-      val files = st1.tombstoneFiles.filterNot(f => entryFiles(f.fileId))
-      Manifest.publish(root, st1.copy(
-        blocks = recount(st1.blocks, tombs, files),
-        tombstones = tombs, tombstoneFiles = files))
+      Manifest.publish(root, recount(st1.copy(tombstones = st1.tombstones.filterNot(entryTombs),
+        tombstoneFiles = st1.tombstoneFiles.filterNot(f => entryFiles(f.fileId)))))
       markSynced()
     }
     rewritten
@@ -823,17 +832,12 @@ final class BlockStore(
         writtenSeries(spark, newId, ids.map(dictPath)), dictPath(newId), SaveMode.Overwrite)
       BlockMeta(newId, mint, maxt, n, numSeries, numTombstones = 0L, bytes = du(blockPath(newId)))
     }
-    val keep = st.blocks.filterNot(b => ids.contains(b.blockId))
-    // drop intervals/side tables now fully applied (touch no surviving block)
-    val tombs = st.tombstones.filter(t =>
-      keep.exists(b => t.mint < b.maxt && t.maxt >= b.mint))
-    val files = st.tombstoneFiles.filter(f =>
-      keep.exists(b => f.mint < b.maxt && f.maxt >= b.mint))
-    val newBlocks = recount(keep ++ meta, tombs, files)
-    // newId enters the high-water even if the compacted block came out
-    // empty (everything tombstoned): its id must still never be reused
-    Manifest.publish(root, st.copy(blocks = newBlocks, tombstones = tombs,
-      tombstoneFiles = files, highWater = math.max(st.highWater, newId)))
+    // drop intervals/side tables now fully applied (touch no surviving
+    // block). newId enters the high-water even if the compacted block
+    // came out empty (everything tombstoned): it must never be reused
+    val kept = retaining(st, st.blocks.filterNot(b => ids.contains(b.blockId)))
+    Manifest.publish(root, recount(kept.copy(blocks = kept.blocks ++ meta,
+      highWater = math.max(st.highWater, newId))))
     markSynced()
     meta.map(_.blockId)
   }
@@ -863,12 +867,7 @@ final class BlockStore(
     else {
       val (gone, keep) = st.blocks.partition(b => drop.contains(b.blockId))
       // retire tombstones that touched only the dropped blocks
-      val tombs = st.tombstones.filter(t =>
-        keep.exists(b => t.mint < b.maxt && t.maxt >= b.mint))
-      val files = st.tombstoneFiles.filter(f =>
-        keep.exists(b => f.mint < b.maxt && f.maxt >= b.mint))
-      Manifest.publish(root, st.copy(blocks = recount(keep, tombs, files),
-        tombstones = tombs, tombstoneFiles = files))
+      Manifest.publish(root, recount(retaining(st, keep)))
       markSynced()
       gone
     }
@@ -934,9 +933,8 @@ final class BlockStore(
           storeTable(spark).where(col("block_id") === b.blockId).drop("block_id", "t_bucket"))(
           dest.writtenSeries(spark, _, Seq(dictPath(b.blockId))))
       }
-      if (Files.isDirectory(Paths.get(headDictDir)))
-        BlockStore.writeDict(BlockStore.dictSeries(spark, Seq(headDictDir)),
-          dest.headDictDir, SaveMode.Overwrite)
+      headDict.foreach(d =>
+        BlockStore.writeDict(BlockStore.dictSeries(spark, Seq(d)), dest.headDictDir, SaveMode.Overwrite))
       // spilled tombstone side tables get fresh ids in the destination's
       // id space (they share it with block ids)
       var nextId = Manifest.load(destRoot).nextBlockId
@@ -947,13 +945,8 @@ final class BlockStore(
           Paths.get(dest.tombsDir, s"ts_id=$nid"))
         f.copy(fileId = nid)
       }
-      Manifest.update(destRoot) { d =>
-        d.copy(
-          blocks = recount(d.blocks, st.tombstones, newFiles),
-          tombstones = st.tombstones,
-          tombstoneFiles = newFiles,
-          highWater = newFiles.map(_.fileId).foldLeft(d.highWater)(math.max))
-      }
+      Manifest.update(destRoot)(d => recount(d.copy(tombstones = st.tombstones,
+        tombstoneFiles = newFiles, highWater = newFiles.map(_.fileId).foldLeft(d.highWater)(math.max))))
       dest.markSynced()
       dest
     }
@@ -988,8 +981,7 @@ final class BlockStore(
       copyTree(Paths.get(tombPath(f.fileId)),
         Paths.get(destRoot, "tombs", s"ts_id=${f.fileId}"))
     }
-    if (Files.isDirectory(Paths.get(headDictDir)))
-      copyTree(Paths.get(headDictDir), Paths.get(destRoot, "dict", "head"))
+    headDict.foreach(d => copyTree(Paths.get(d), Paths.get(destRoot, "dict", "head")))
     // the range marker rides along so the snapshot opens correctly
     val rangeFile = Paths.get(root, "meta", "BLOCK_RANGE")
     if (Files.exists(rangeFile)) {
@@ -1099,7 +1091,7 @@ object BlockStore {
   private[storage] val syncedVersions =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
-  /** Each store's driver-resident postings ([[BlockStore.seriesIndex]]),
+  /** Each store's driver-resident postings ([[BlockStore.residentIndex]]),
     * per JVM, by catalog table name (one per store root). */
   private[storage] val seriesIndexes =
     scala.collection.mutable.HashMap.empty[String, SeriesIndex]

@@ -15,8 +15,9 @@ import graft.matchers.Matcher
   * part-file names. Spark writes a fresh UUID into every part file, so
   * a block id reused after `destroy` + a rebuild, or a head dictionary
   * a rollback appended to, never matches a stale entry. Per series: its
-  * key, its label map and its `[s_mint, s_maxt]` (`Long.MinValue` /
-  * `Long.MaxValue` where the dictionary records no bounds: the head's). */
+  * key, its label map and its `[s_mint, s_maxt]` (`Long.MaxValue` /
+  * `Long.MinValue`, an empty interval, where the dictionary records no
+  * bounds: the head's). */
 private[storage] final class DictEntry(
     val files: Seq[String],
     val keys: Array[String],
@@ -38,16 +39,19 @@ private[storage] final class SeriesIndex(
     val blocks: Map[Long, DictEntry],
     val head: Option[DictEntry]) {
 
-  /** Every indexed series in key order, with its label map; a series in
-    * several dictionaries keeps the union of their pairs (they agree:
-    * the key is a function of the label set). */
-  private val (keys, labels): (Array[String], Array[Map[String, String]]) = {
-    val byKey = new java.util.HashMap[String, Map[String, String]]()
+  /** Every indexed series in key order, with its label map and bounds;
+    * a series in several dictionaries keeps the union of their pairs
+    * (they agree: the key is a function of the label set) and the hull
+    * of their bounds. */
+  private val (keys, labels, mints, maxts) = {
+    val byKey = new java.util.HashMap[String, (Map[String, String], Long, Long)]()
     for (e <- blocks.values ++ head; i <- e.keys.indices)
-      byKey.merge(e.keys(i), e.labels(i),
-        (a, b) => if ((a eq b) || a == b) a else a ++ b)
+      byKey.merge(e.keys(i), (e.labels(i), e.mint(i), e.maxt(i)), (a, b) =>
+        (if ((a._1 eq b._1) || a._1 == b._1) a._1 else a._1 ++ b._1,
+          math.min(a._2, b._2), math.max(a._3, b._3)))
     val ks = byKey.keySet.asScala.toArray.sorted
-    (ks, ks.map(byKey.get))
+    val vs = ks.map(byKey.get)
+    (ks, vs.map(_._1), vs.map(_._2), vs.map(_._3))
   }
 
   /** label name → label value → ordinals of the series carrying it. */
@@ -71,11 +75,24 @@ private[storage] final class SeriesIndex(
   /** Distinct values of one label, in [[labelNames]]' order. */
   def labelValues(name: String): Seq[String] = values.getOrElse(name, Nil)
 
+  private def ordinal(key: String): Int =
+    java.util.Arrays.binarySearch(keys.asInstanceOf[Array[AnyRef]], key)
+
   /** The label map of an indexed series, for sharing one instance
     * between the dictionaries that list it. */
   def labelsOf(key: String): Option[(String, Map[String, String])] = {
-    val i = java.util.Arrays.binarySearch(keys.asInstanceOf[Array[AnyRef]], key)
+    val i = ordinal(key)
     if (i >= 0) Some((keys(i), labels(i))) else None
+  }
+
+  /** The sample bounds of a series as the block dictionaries record
+    * them (the reference's in-memory series bounds, `head.go:972-977`);
+    * None for a series no block lists — a head-only one, or the
+    * label-less `"{}"`, which owns no dictionary row. The head records
+    * no bounds, so it never widens a series that also lives in a block. */
+  def bounds(key: String): Option[(Long, Long)] = {
+    val i = ordinal(key)
+    if (i >= 0 && mints(i) <= maxts(i)) Some((mints(i), maxts(i))) else None
   }
 
   /** The series keys a matcher conjunction selects — the rule of
@@ -133,8 +150,8 @@ private[storage] object SeriesIndex {
       .filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
 
   /** `prev` brought up to the given dictionaries: entries whose files
-    * are unchanged are kept as they are, the others are read (one Spark
-    * read per new dictionary), and entries no longer listed are dropped
+    * are unchanged are kept as they are, the others are read (all of
+    * them in one Spark read), and entries no longer listed are dropped
     * — `prev` itself when nothing changed. Label maps of series `prev`
     * or an earlier new dictionary already holds are shared, so the heap
     * grows with live series, not with series × blocks. */
@@ -143,6 +160,40 @@ private[storage] object SeriesIndex {
       prev: Option[SeriesIndex],
       blockDirs: Seq[(Long, String)],
       headDir: Option[String]): SeriesIndex = {
+    val files = (blockDirs.map(_._2) ++ headDir).map(d => d -> partFiles(d)).toMap
+    val kept = (blockDirs.flatMap { case (id, d) => prev.flatMap(_.blocks.get(id)).map(d -> _) } ++
+      headDir.flatMap(d => prev.flatMap(_.head).map(d -> _)))
+      .filter { case (d, e) => e.files == files(d) }.toMap
+    val entries = kept ++ load(spark, files.filter { case (d, _) => !kept.contains(d) }, prev)
+    val blocks = blockDirs.map { case (id, d) => id -> entries(d) }.toMap
+    val head = headDir.map(entries)
+    prev.filter(p => p.blocks == blocks && p.head == head)
+      .getOrElse(new SeriesIndex(blocks, head))
+  }
+
+  /** The dictionaries `dirs` (directory → its part files) as entries,
+    * read by one Spark job; a row finds its dictionary by the name of
+    * its file's directory (`block_id=<n>` or `head`). */
+  private def load(
+      spark: SparkSession,
+      dirs: Map[String, Seq[String]],
+      prev: Option[SeriesIndex]): Map[String, DictEntry] = {
+    val paths = for ((d, fs) <- dirs.toSeq; f <- fs) yield s"$d/$f"
+    val rows =
+      if (paths.isEmpty) Array.empty[Row]
+      else BlockStore.readDict(spark, paths)
+        .select(col("_metadata.file_path"), col("series_key"), col("label_name"), col("label_value"),
+          coalesce(col("s_mint"), lit(Long.MaxValue)), coalesce(col("s_maxt"), lit(Long.MinValue)))
+        .collect()
+    val byDir = mutable.HashMap.empty[String, mutable.LinkedHashMap[String, (Map[String, String], Long, Long)]]
+    for (r <- rows) {
+      val path = r.getString(0).split('/')
+      val bySeries = byDir.getOrElseUpdate(path(path.length - 2), mutable.LinkedHashMap.empty)
+      val k = r.getString(1)
+      val (m, lo, hi) = bySeries.getOrElse(k, (Map.empty[String, String], Long.MaxValue, Long.MinValue))
+      bySeries(k) = (m + (r.getString(2) -> r.getString(3)),
+        math.min(lo, r.getLong(4)), math.max(hi, r.getLong(5)))
+    }
     val loaded = new java.util.HashMap[String, (String, Map[String, String])]()
     def intern(k: String, m: Map[String, String]): (String, Map[String, String]) =
       Option(loaded.get(k)).orElse(prev.flatMap(_.labelsOf(k))) match {
@@ -151,35 +202,11 @@ private[storage] object SeriesIndex {
           loaded.put(k, (k, m))
           (k, m)
       }
-    def entry(old: Option[DictEntry], dir: String): DictEntry = {
-      val files = partFiles(dir)
-      old.filter(_.files == files).getOrElse(load(spark, dir, files, intern))
+    dirs.map { case (d, fs) =>
+      val bySeries = byDir.getOrElse(new java.io.File(d).getName, mutable.LinkedHashMap.empty)
+      val shared = bySeries.iterator.map { case (k, (m, _, _)) => intern(k, m) }.toArray
+      d -> new DictEntry(fs, shared.map(_._1), shared.map(_._2),
+        bySeries.valuesIterator.map(_._2).toArray, bySeries.valuesIterator.map(_._3).toArray)
     }
-    val blocks = blockDirs.map { case (id, dir) =>
-      id -> entry(prev.flatMap(_.blocks.get(id)), dir) }.toMap
-    val head = headDir.map(entry(prev.flatMap(_.head), _))
-    prev.filter(p => p.blocks == blocks && p.head == head)
-      .getOrElse(new SeriesIndex(blocks, head))
-  }
-
-  private def load(
-      spark: SparkSession,
-      dir: String,
-      files: Seq[String],
-      intern: (String, Map[String, String]) => (String, Map[String, String])): DictEntry = {
-    val rows = BlockStore.readDict(spark, files.map(f => s"$dir/$f"))
-      .select(col("series_key"), col("label_name"), col("label_value"),
-        coalesce(col("s_mint"), lit(Long.MinValue)), coalesce(col("s_maxt"), lit(Long.MaxValue)))
-      .collect()
-    val bySeries = mutable.LinkedHashMap.empty[String, (Map[String, String], Long, Long)]
-    for (r <- rows) {
-      val k = r.getString(0)
-      val (m, lo, hi) = bySeries.getOrElse(k, (Map.empty[String, String], Long.MaxValue, Long.MinValue))
-      bySeries(k) = (m + (r.getString(1) -> r.getString(2)),
-        math.min(lo, r.getLong(3)), math.max(hi, r.getLong(4)))
-    }
-    val shared = bySeries.iterator.map { case (k, (m, _, _)) => intern(k, m) }.toArray
-    new DictEntry(files, shared.map(_._1), shared.map(_._2),
-      bySeries.valuesIterator.map(_._2).toArray, bySeries.valuesIterator.map(_._3).toArray)
   }
 }

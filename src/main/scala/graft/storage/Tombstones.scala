@@ -1,10 +1,8 @@
 package graft.storage
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.matchers.Matcher
 
 /** Deletion markers — the reference's tombstones (`tombstones.go:33-55`):
   * per-series lists of **closed** `[mint, maxt]` intervals whose samples
@@ -13,6 +11,9 @@ import graft.matchers.Matcher
   * Schema of a tombstone DataFrame: `(series_key string, mint long,
   * maxt long)`.
   *
+  * [[BlockStore.delete]] records them; this object holds the operators
+  * over tombstone frames.
+  *
   * Scale notes: tombstones are tiny relative to data (a side table), so
   * [[applyTo]] broadcasts them — the read-time filter is a broadcast
   * range anti-join, no shuffle of the fact table. [[coalesceIntervals]]
@@ -20,24 +21,6 @@ import graft.matchers.Matcher
   * tombstone table itself.
   */
 object Tombstones {
-
-  /** Tombstones for every series matching `matchers` over `[mint, maxt]`
-    * — the reference's `Delete(mint, maxt, ms...)` (`db.go:1203-1232`,
-    * `head.go:964-1004`): resolve matchers to series, then record one
-    * interval per series. */
-  def forMatchers(
-      samples: DataFrame,
-      mint: Long,
-      maxt: Long,
-      matchers: Matcher*): DataFrame = {
-    val resolve: String => Column = name => col("labels").getItem(name)
-    samples
-      .where(Matcher.conjunction(matchers, resolve))
-      .select(col("series_key"))
-      .distinct()
-      .withColumn("mint", lit(mint))
-      .withColumn("maxt", lit(maxt))
-  }
 
   /** Read-time tombstone filter (reference `deletedIterator`,
     * `querier.go:1166-1204`): drop samples falling inside any deleted

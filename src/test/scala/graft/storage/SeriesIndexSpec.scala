@@ -34,7 +34,8 @@ class SeriesIndexSpec extends SparkSuite {
 
   /** The same root read through the cache and through the Spark path. */
   private def bothSides(store: BlockStore): (BlockStore, BlockStore) =
-    (store, new BlockStore(store.root, store.blockRangeMs, broadcastLimit = 0L))
+    (store, new BlockStore(store.root, store.blockRangeMs, store.seriesBuckets,
+      store.tombstoneSpillThreshold, broadcastLimit = 0L))
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -84,7 +85,7 @@ class SeriesIndexSpec extends SparkSuite {
 
   test("both resolvers select the same series keys, the phantom \"{}\" included") {
     // key level, before the fact semi-join that drops a phantom key
-    val ix = events.seriesIndex(spark, events.manifest)
+    val ix = events.residentIndex(spark, events.manifest).get
     val idx = events.postingsIndex(spark)
     val allMatchEmpty = Seq(Matcher.neq("vip", "1"), Re("zone", ".*"))
     val lists: Seq[Seq[Matcher]] = Seq(
@@ -378,5 +379,71 @@ class SeriesIndexSpec extends SparkSuite {
     // outside any query, and a count re-scan in a query of its own
     assert(jobs.forall(_.exists(q => q.startsWith("insertInto at") || q.startsWith("parquet at"))), jobs)
     assert(store.manifest.blocks.map(_.numSeries) == Seq(2L))
+  }
+
+  /** Store range [100, 300]: `a` at 100 and 300, `b` at 100 and 150, the
+    * label-less `{}` at 100, `c` at 300 and also registered by a
+    * rollback, `d` registered only. */
+  private def deleteFixture(spillAt: Int): BlockStore = {
+    val store = new BlockStore(tmp("graft-ix-delete"), 1000L, tombstoneSpillThreshold = spillAt)
+    def s(i: String) = Map("job" -> "x", "i" -> i)
+    store.write(seriesRows(100L, Seq(s("a"), s("b"), Map.empty[String, String])))
+    store.write(seriesRows(150L, Seq(s("b"))))
+    store.write(seriesRows(300L, Seq(s("a"), s("c"))))
+    store.registerSeries(seriesRows(0L, Seq(s("c"), s("d"))))
+    store
+  }
+
+  /** What a delete publishes: the manifest's inline records, side-table
+    * records and per-block counters, and the intervals readers apply. */
+  private def tombstones(store: BlockStore): (Seq[Any], Seq[Row]) = {
+    val st = store.manifest
+    (Seq(st.tombstones, st.tombstoneFiles, st.blocks.map(_.numTombstones)),
+      rows(store.tombstoneTable(spark)))
+  }
+
+  test("a delete under the gate and one above it publish identical tombstones, inline and spilled") {
+    for (spillAt <- Seq(10000, 2)) {
+      val below = deleteFixture(spillAt)
+      val above = bothSides(deleteFixture(spillAt))._2
+      for (store <- Seq(below, above))
+        store.delete(spark, 200L, 1000L, Matcher.neq("job", "y"))
+      assert(tombstones(below) == tombstones(above), s"spill at $spillAt")
+      // b's bounds miss the request; c clamps to its block bounds, not to
+      // the open ones of its head registration; d and "{}" take the store's
+      val want = Seq(("{}", 200L, 300L), ("{i=\"a\",job=\"x\"}", 200L, 300L),
+        ("{i=\"c\",job=\"x\"}", 300L, 300L), ("{i=\"d\",job=\"x\"}", 200L, 300L))
+      assert(tombstones(below)._2.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet == want.toSet)
+      assert(below.manifest.tombstoneFiles.size == (if (spillAt == 2) 1 else 0))
+    }
+  }
+
+  test("on a warm index, an inline delete starts no Spark job") {
+    val store = deleteFixture(10000)
+    store.labelNames(spark).collect()
+    assert(jobsIn(store.delete(spark, 200L, 1000L, Eq("i", "a"))) == 0)
+    assert(store.manifest.tombstones.map(_.seriesKey) == Seq("{i=\"a\",job=\"x\"}"))
+    // the control: the Spark path's delete does start jobs
+    assert(jobsIn(bothSides(store)._2.delete(spark, 200L, 1000L, Eq("i", "c"))) > 0)
+  }
+
+  test("addRef writes the same block dictionary on both sides of the gate; " +
+    "an unknown ref fails with ErrNotFound on both") {
+    def refs(t: Long, sets: Map[String, String]*): DataFrame =
+      seriesRows(t, sets).drop("labels").withColumnRenamed("sample_id", "arrival")
+    val below = deleteFixture(10000)
+    val above = bothSides(deleteFixture(10000))._2
+    val dicts = for (store <- Seq(below, above)) yield {
+      val id = graft.ingest.Appender.txn(store, minValidTime = 0L)
+        .addRef(refs(400L, Map("job" -> "x", "i" -> "a"), Map("job" -> "x", "i" -> "d")))
+        .commit().get
+      val e = intercept[IllegalArgumentException](graft.ingest.Appender.txn(store, minValidTime = 0L)
+        .addRef(refs(500L, Map("job" -> "x", "i" -> "a"), Map("job" -> "nope"))).commit())
+      assert(e.getMessage.contains("ErrNotFound") && e.getMessage.contains("{job=\"nope\"}"), e.getMessage)
+      rows(store.blockIndex(spark, id))
+    }
+    assert(dicts.head == dicts(1))
+    assert(dicts.head.map(_.getString(0)).distinct ==
+      Seq("{i=\"a\",job=\"x\"}", "{i=\"d\",job=\"x\"}"))
   }
 }

@@ -66,14 +66,6 @@ class TombstonesSpec extends SparkSuite {
       .select("t").as[Long].collect().sorted
     assert(left.toSeq == Seq(0L, 4L, 5L, 7L, 8L, 9L))
   }
-
-  test("forMatchers records one interval per matching series") {
-    val samples = TsdbSource.events(spark, sf).samples
-    val tombs = Tombstones.forMatchers(samples, 100L, 200L, graft.matchers.Eq("name", "click"))
-    assert(tombs.columns.toSeq == Seq("series_key", "mint", "maxt"))
-    assert(tombs.count() == samples.where($"series_key".contains("name=\"click\""))
-      .select("series_key").distinct().count())
-  }
 }
 
 class MergeSpec extends SparkSuite {
@@ -131,6 +123,15 @@ class BlockStoreSpec extends SparkSuite {
     Files.createTempDirectory("graft-blocks").toString, 7 * DAY)
 
   lazy val samples: DataFrame = TsdbSource.events(spark, sf).samples
+
+  /** Registers `body` twice: on the store it builds, and on the same
+    * root opened with `broadcastLimit = 0L`, so its deletes resolve
+    * through the Spark postings path instead of the resident index. */
+  private def bothGates(name: String)(body: (BlockStore => BlockStore) => Unit): Unit = {
+    test(name)(body(identity))
+    test(s"$name, above the gate")(body(s => new BlockStore(s.root, s.blockRangeMs,
+      s.seriesBuckets, s.tombstoneSpillThreshold, broadcastLimit = 0L)))
+  }
 
   test("write publishes a block with manifest stats; read round-trips") {
     val store = freshStore()
@@ -242,8 +243,8 @@ class BlockStoreSpec extends SparkSuite {
     assert(math.abs(sumGot - want) < 1e-6 * math.max(1.0, math.abs(want)))
   }
 
-  test("delete records coalesced tombstones; readRange filters them (db.go:1203-1232)") {
-    val store = freshStore()
+  bothGates("delete records coalesced tombstones; readRange filters them (db.go:1203-1232)") { side =>
+    val store = side(freshStore())
     store.write(samples)
     val lo = T0 + 2 * DAY
     val hi = T0 + 5 * DAY
@@ -265,8 +266,8 @@ class BlockStoreSpec extends SparkSuite {
     assert(got.count() == want.count())
   }
 
-  test("stacked deletes over one series: the TestHeadDeleteSimple table " +
-    "(head_test.go:362-397)") {
+  bothGates("stacked deletes over one series: the TestHeadDeleteSimple table " +
+    "(head_test.go:362-397)") { side =>
     import spark.implicits._
     def rows(ts: Seq[Long]): DataFrame =
       ts.map(i => ("{a=\"b\"}", i, i * 1.0, i, Map("a" -> "b")))
@@ -279,8 +280,8 @@ class BlockStoreSpec extends SparkSuite {
       Seq(1L -> 3L, 4L -> 700L) -> Seq(0L),
       Seq(0L -> 9L) -> Seq())
     for (((dranges, exp), i) <- cases.zipWithIndex) {
-      val store = new BlockStore(
-        Files.createTempDirectory(s"graft-headdel$i").toString, 1000L)
+      val store = side(new BlockStore(
+        Files.createTempDirectory(s"graft-headdel$i").toString, 1000L))
       store.write(rows(0L to 9L))
       for ((lo, hi) <- dranges)
         store.delete(spark, lo, hi, graft.matchers.Eq("a", "b"))
@@ -299,11 +300,11 @@ class BlockStoreSpec extends SparkSuite {
     }
   }
 
-  test("delete clamps to the store's current range: later appends inside the " +
-    "requested range survive (TestDeleteUntilCurMax head_test.go:530-568)") {
+  bothGates("delete clamps to the store's current range: later appends inside the " +
+    "requested range survive (TestDeleteUntilCurMax head_test.go:530-568)") { side =>
     import spark.implicits._
-    val store = new BlockStore(
-      Files.createTempDirectory("graft-delclamp").toString, 1000L)
+    val store = side(new BlockStore(
+      Files.createTempDirectory("graft-delclamp").toString, 1000L))
     def rows(ts: Seq[Long]): DataFrame =
       ts.map(i => ("s", i, i * 1.0, i, Map("a" -> "b")))
         .toDF("series_key", "t", "v", "sample_id", "labels")
@@ -318,21 +319,21 @@ class BlockStoreSpec extends SparkSuite {
     assert(store.readRange(spark, 0, 100000)
       .select("t").as[Long].collect().toSeq == Seq(11L))
     // delete on an empty store records nothing
-    val empty = new BlockStore(
-      Files.createTempDirectory("graft-delempty").toString, 1000L)
+    val empty = side(new BlockStore(
+      Files.createTempDirectory("graft-delempty").toString, 1000L))
     empty.delete(spark, 0, 100, graft.matchers.Eq("a", "b"))
     assert(empty.manifest.tombstones.isEmpty)
   }
 
-  test("delete clamps per SERIES: an append beyond one series' old max " +
-    "survives even inside the store-wide range (head.go:972-977)") {
+  bothGates("delete clamps per SERIES: an append beyond one series' old max " +
+    "survives even inside the store-wide range (head.go:972-977)") { side =>
     // Reference semantics: Head.Delete clamps each matched series to its
     // own [minTime, maxTime], not just the store's. Pre-r7 this was a
     // documented divergence (store-level only); the bounds now ride the
     // block dictionaries.
     import spark.implicits._
-    val store = new BlockStore(
-      Files.createTempDirectory("graft-delseries").toString, 1000L)
+    val store = side(new BlockStore(
+      Files.createTempDirectory("graft-delseries").toString, 1000L))
     def rows(key: String, ts: Seq[Long]): DataFrame =
       ts.map(i => (key, i, i * 1.0, i, Map("job" -> "x", "inst" -> key)))
         .toDF("series_key", "t", "v", "sample_id", "labels")
@@ -353,8 +354,8 @@ class BlockStoreSpec extends SparkSuite {
       .select("series_key", "t").as[(String, Long)].collect().toSeq == Seq(("b", 6L)))
   }
 
-  test("delete interval table: unions, beyond-range clamp, full deletion " +
-    "(TestDeleteSimple db_test.go:242-346)") {
+  bothGates("delete interval table: unions, beyond-range clamp, full deletion " +
+    "(TestDeleteSimple db_test.go:242-346)") { side =>
     import spark.implicits._
     val cases = Seq(
       Seq((0L, 3L)) -> Seq(4L, 5L, 6L, 7L, 8L, 9L),
@@ -363,8 +364,8 @@ class BlockStoreSpec extends SparkSuite {
       Seq((1L, 3L), (4L, 700L)) -> Seq(0L),
       Seq((0L, 9L)) -> Seq.empty[Long])
     for ((ivs, remain) <- cases) {
-      val store = new BlockStore(
-        Files.createTempDirectory("graft-delsimple").toString, 1000L)
+      val store = side(new BlockStore(
+        Files.createTempDirectory("graft-delsimple").toString, 1000L))
       val rows = (0L until 10L).map(i =>
         ("s", i, i * 1.5, i, Map("a" -> "b")))
         .toDF("series_key", "t", "v", "sample_id", "labels")
@@ -731,7 +732,7 @@ class BlockStoreSpec extends SparkSuite {
   test("label dictionary is materialized per block and unioned on read") {
     val store = freshStore()
     store.write(samples)
-    val ix = store.seriesIndex(spark, store.manifest)
+    val ix = store.residentIndex(spark, store.manifest).get
     val dict = for (n <- ix.labelNames; v <- ix.labelValues(n)) yield (n, v)
     val want = samples.select(explode(col("labels"))).distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
@@ -827,10 +828,10 @@ class BlockStoreSpec extends SparkSuite {
       store.readRange(spark, T0, T0 + 40 * DAY, graft.matchers.Re("name", ".*")).count())
   }
 
-  test("wide deletes spill to a parquet side table; narrow ones stay inline") {
-    val store = new BlockStore(
+  bothGates("wide deletes spill to a parquet side table; narrow ones stay inline") { side =>
+    val store = side(new BlockStore(
       Files.createTempDirectory("graft-spill").toString, 7 * DAY,
-      tombstoneSpillThreshold = 3)
+      tombstoneSpillThreshold = 3))
     store.write(samples)
     val nSeries = store.manifest.blocks.head.numSeries
     val lo = T0 + 2 * DAY
@@ -936,10 +937,10 @@ class BlockStoreSpec extends SparkSuite {
     assert(store.manifest.blocks.map(_.numSamples).sum == 2L)
   }
 
-  test("deletes that touch no samples succeed as no-ops " +
-    "(TestHeadDeleteSeriesWithoutSamples head_test.go:325-360)") {
+  bothGates("deletes that touch no samples succeed as no-ops " +
+    "(TestHeadDeleteSeriesWithoutSamples head_test.go:325-360)") { side =>
     import spark.implicits._
-    val store = freshStore()
+    val store = side(freshStore())
     val rows = Seq(
       ("{a=\"2\"}", Map("a" -> "2"), 50L, 80L, 1.0),
       ("{a=\"2\"}", Map("a" -> "2"), 51L, 90L, 1.0))

@@ -4,7 +4,10 @@ run graft.Verify first (dumps each query's result parquet + oracle_sql.json),
 then this script replays every oracle SQL in DuckDB over the same sf dir and
 compares. Dev tool only — not part of the library.
 
-usage: check.py [sfDir] [outDir]
+usage: check.py [sfDir] [outDir] [names]
+
+names: comma-separated entry names to check (default: every entry of
+oracle_sql.json). A named entry without oracle SQL is reported and skipped.
 """
 import glob
 import json
@@ -16,6 +19,7 @@ import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify"
+NAMES = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -27,8 +31,13 @@ for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{OUT}/oracle_sql.json"))
-failures = 0
-for name in sorted(oracle):
+names = sorted(NAMES if NAMES is not None else oracle)
+failures = skipped = 0
+for name in names:
+    if name not in oracle:
+        print(f"SKIP {name}: no oracle SQL")
+        skipped += 1
+        continue
     try:
         files = sorted(glob.glob(f"{OUT}/{name}/*.parquet"))
         if not files:
@@ -75,5 +84,6 @@ for name in sorted(oracle):
         print(f"FAIL {name}: {type(e).__name__}: {e}")
         failures += 1
 
-print(f"\n{len(oracle) - failures}/{len(oracle)} queries match")
+checked = len(names) - skipped
+print(f"\n{checked - failures}/{checked} queries match")
 sys.exit(1 if failures else 0)
