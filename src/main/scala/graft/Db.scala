@@ -98,10 +98,12 @@ final class Db private (
       .distinct().orderBy("label_value")
 
   /** The labelled rows in `[mint, maxt]` of the series any of
-    * `selectors` matches: the union of one [[query]] per selector, the
-    * read behind the HTTP API's `match[]` parameters. */
-  def matching(selectors: Seq[Seq[Matcher]], mint: Long, maxt: Long): DataFrame =
-    selectors.map(ms => query(mint, maxt, withLabels = true, ms: _*)).reduce(_ unionByName _)
+    * `selectors` matches: the union of one [[query]] per selector over
+    * one manifest state, the read behind the HTTP API's `match[]`. */
+  def matching(selectors: Seq[Seq[Matcher]], mint: Long, maxt: Long): DataFrame = {
+    val st = store.manifest
+    selectors.map(store.readAt(spark, st, mint, maxt, withLabels = true, _)).reduce(_ unionByName _)
+  }
 
   /** Record deletion intervals for matching series (`db.go:1203-1232`),
     * resolved through [[query]]'s gate: on the driver below it, with no
@@ -156,8 +158,8 @@ final class Db private (
     * front-end ([[graft.query.PromQl]]) on the label-carrying read
     * path: each selector resolves through [[query]]'s postings path and
     * the store read attaches each series' label map from the postings
-    * index. `nameLabel` defaults to `__name__`, the
-    * Prometheus convention. The frame is unordered;
+    * index, all at one manifest state per request. `nameLabel` defaults
+    * to `__name__`, the Prometheus convention. The frame is unordered;
     * [[graft.query.ResultJson.render]] orders what it serves. */
   def promql(
       query: String,
@@ -172,9 +174,10 @@ final class Db private (
     // any readRange; each SELECTOR fetches through the pushdown hook,
     // so its matchers resolve in the postings index (never on sample
     // rows) like every other read
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, lit, map}
     val (mint, maxt) =
       graft.query.PromQl.scanBoundsMs(query, startMs, endMs, lookbackMs)
+    val st = store.manifest
     // float rows gain a typed-null h / histogram rows a null v, so the
     // union is the canonical mixed frame the corridor reads
     def mixed(floats: DataFrame, hist: DataFrame): DataFrame =
@@ -185,18 +188,19 @@ final class Db private (
     def histIn(ms: Seq[Matcher]): Option[DataFrame] = histChannel.map(hf =>
       hf.where(col("t").between(mint, maxt) &&
         Matcher.conjunction(ms, k => col("labels").getItem(k))))
-    val base = store.readRange(spark, mint, maxt, withLabels = true)
-    val samples = histChannel match {
-      case None => base
-      case Some(hf) => mixed(base, hf.where(col("t").between(mint, maxt)))
-    }
+    // every selector reads through `pushdown`: the compiler takes only
+    // the session and row schema of `samples`, which reads no store
+    val shape = spark.emptyDataFrame.select(lit(null).cast("string").as("series_key"),
+      map().cast("map<string,string>").as("labels"), lit(null).cast("long").as("t"),
+      lit(null).cast("double").as("v"))
+    val samples = histChannel.fold(shape)(mixed(shape, _))
     val params = graft.query.PromQl.Params(startMs, endMs, stepMs, lookbackMs,
       nameLabel = nameLabel,
       // the float half keeps its postings-index pushdown; the
       // histogram channel filters its (corridor-sized) frame on the
       // labels map with the same matcher set
       pushdown = Some { ms =>
-        val floats = store.readRange(spark, mint, maxt, withLabels = true, ms: _*)
+        val floats = store.readAt(spark, st, mint, maxt, withLabels = true, ms)
         histIn(ms) match {
           case None => floats
           case Some(hf) => mixed(floats, hf)
@@ -205,7 +209,7 @@ final class Db private (
       // the compiler's per-series dims broadcast exactly when the
       // store's postings are driver-resident: the same gate every
       // labelled store read uses
-      broadcastDims = store.resident(store.manifest))
+      broadcastDims = store.resident(st))
     if (histChannel.nonEmpty) graft.query.PromQl.evalMixed(query, samples, params)
     else graft.query.PromQl.eval(query, samples, params)
   }

@@ -155,7 +155,7 @@ object Main {
       val t0 = System.nanoTime()
       val a = f
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f" > complete stage=$stage duration=$sec%.3fs")
+      println(" > complete stage=%s duration=%.3fs".formatLocal(java.util.Locale.ROOT, stage, sec))
       (a, sec)
     }
 
@@ -201,7 +201,7 @@ object Main {
     sets.unpersist()
     val total = store.manifest.blocks.map(_.numSamples).sum
     println(s" > total samples: $total")
-    println(f" > samples/sec: ${total / sec}%.1f")
+    println(" > samples/sec: %.1f".formatLocal(java.util.Locale.ROOT, total / sec))
     println(s" > series: $nSeries")
     println(s" > out: $outPath")
   }

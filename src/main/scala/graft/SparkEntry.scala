@@ -171,8 +171,7 @@ object SparkEntry {
   /** The suite corpus's samples per (series, day) — the raw-parquet
     * density estimate fed to [[Rate.preAgg]] (events: ~2 per
     * user-series-day at every sf, where the clustered no-partial plan
-    * wins). Store readers never use this: they derive the estimate
-    * from manifest stats (`BlockStore.samplesPerSeries`). */
+    * wins). */
   private val RAW_DENSITY = 2.0
   /** Per-source sampling rates for doc_sample_mix (default 0.25). */
   private val MIX_RATES = Seq("src0" -> 0.8, "src1" -> 0.8, "src2" -> 0.5)

@@ -105,11 +105,11 @@ object ApiServer {
   private def required(ps: Map[String, Seq[String]], k: String): String =
     one(ps, k).getOrElse(badData(s"missing parameter $k"))
 
-  /** Prometheus time params: unix seconds (float) or RFC 3339
-    * (including numeric UTC offsets, e.g. `+05:30`). */
+  /** Prometheus time params: unix seconds (float, exponent allowed) or
+    * RFC 3339 (including numeric UTC offsets, e.g. `+05:30`). */
   private[http] def parseTimeMs(s: String): Long =
     try {
-      if (s.exists(c => c == 'T' || c == 'Z' || c == '-') && !s.matches("-?[0-9.]+"))
+      if (s.exists(c => c == 'T' || c == 'Z' || c == '-') && !s.matches("-?[0-9.]+([eE][-+]?[0-9]+)?"))
         java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
       else math.round(s.toDouble * 1000.0)
     } catch {
@@ -157,8 +157,7 @@ object ApiServer {
 
     // instant queries default to the store's max time (a static store
     // has no "now"); range params are explicit per the API contract
-    private def storeMaxMs: Long =
-      if (db.blocks.nonEmpty) db.blocks.map(_.maxt).max else 0L
+    private def storeMaxMs: Long = db.blocks.map(_.maxt).maxOption.getOrElse(0L)
 
     /** The `limit` parameter (Prometheus: 0 or absent = unlimited).
       * Applied as `limit(n+1)` BEFORE the rows reach the driver so a
@@ -211,7 +210,8 @@ object ApiServer {
           one(ps, "timeout").foreach(parseDurationMs) // validated, unused
           if (end < start) badData("end timestamp must not be before start time")
           if (step <= 0) badData("zero or negative query resolution step")
-          if ((end - start) / step > 11000)
+          // in BigInt: a Long `end - start` wraps past ±9.2e18 ms
+          if ((BigInt(end) - start) / step > 11000)
             badData("exceeded maximum resolution of 11,000 points per timeseries")
           val look = one(ps, "lookback_delta").map(parseDurationMs)
             .getOrElse(lookbackMs)

@@ -71,12 +71,8 @@ object Rate {
 
   /** Density-gated pre-pass for the family's pure-aggregate members:
     * the [[seriesClustered]]-vs-plain choice derived from a
-    * samples-per-group estimate instead of baked per call site. Store
-    * readers derive the estimate from manifest stats
-    * (`BlockStore.samplesPerSeries` scaled to the aggregate's bucket
-    * grain); raw-parquet callers pass their corpus's known grid
-    * density — at 100 TB the store path decides from data, never from
-    * a constant tuned to one corpus. */
+    * samples-per-group estimate instead of baked per call site: the
+    * raw-parquet callers pass their corpus's known grid density. */
   def preAgg(samples: DataFrame, samplesPerGroup: Double): DataFrame =
     if (samplesPerGroup < PartialAggDensity) seriesClustered(samples)
     else samples

@@ -45,6 +45,14 @@ import graft.matchers.Matcher
   *    ([[postingsIndex]], [[graft.query.Postings.seriesFor]]). Both
   *    apply one matcher rule, the label-less `"{}"` included.
   *
+  * One manifest state per call: each public entry loads [[manifest]]
+  * once (a writer under the lock) and passes it to every helper, so a
+  * read takes blocks, tombstones, matched keys and label maps from one
+  * version and one [[residentIndex]] refresh (the reference's querier
+  * over one block set, `db.go:1150-1196`); [[graft.Db]] gives all reads
+  * of a request one state ([[readAt]]). States are not leased: [[vacuum]]
+  * may delete an older state's blocks while a frame still reads them.
+  *
   * Scale notes: the manifest is O(#blocks) driver-side metadata (the
   * reference holds the same list in memory); retention and compaction
   * planning read ONLY the manifest, never the data. Reads prune on the
@@ -101,22 +109,6 @@ final class BlockStore(
 
   /** Current published state (block list + tombstones). */
   def manifest: ManifestState = Manifest.load(root)
-
-  /** Average samples per series per block range, from manifest stats
-    * alone — the density that decides whether a pure aggregate keeps
-    * its map-side partial stage (`Rate.preAgg`): a scrape-shaped store
-    * (hundreds of samples per series-block) must keep partial combine,
-    * an event-shaped one (a few) wins by clustering first. Callers
-    * aggregating at a different grain scale by `grainMs /
-    * blockRangeMs`. 0 on an empty store (callers treat it as sparse). */
-  def samplesPerSeries: Double = {
-    val m = manifest
-    // numSeries is PER BLOCK (a series living in k blocks counts k
-    // times), so the ratio is already per (series, block)
-    val series = m.blocks.map(_.numSeries).sum
-    if (series == 0) 0.0
-    else m.blocks.map(_.numSamples).sum.toDouble / series
-  }
 
   /** Record the store's block range on first write (meta/BLOCK_RANGE)
     * and refuse a writer opened with a DIFFERENT range: `t_bucket`
@@ -254,32 +246,37 @@ final class BlockStore(
     val labels =
       if (cached.columns.contains("labels")) graft.functions.canonicalLabelEntries(col("labels"))
       else lit(null).cast(BlockStore.LabelEntries)
-    try appendBlock(cached) { _ =>
-      // labels ride as a GROUPING KEY (sorted entry array — constant
-      // per series_key), not a first(map) buffer: the map buffer demoted
-      // this sample-grain aggregate to a partial SortAggregate (r12)
-      cached.groupBy(col("series_key"), labels.as("labels"))
-        .agg(min(col("t").cast("long")).as("s_mint"), max(col("t").cast("long")).as("s_maxt"))
+    try Manifest.withLock(root) {
+      val st = manifest
+      appendBlock(st, cached) { _ =>
+        // labels ride as a GROUPING KEY (sorted entry array — constant
+        // per series_key), not a first(map) buffer: the map buffer demoted
+        // this sample-grain aggregate to a partial SortAggregate (r12)
+        cached.groupBy(col("series_key"), labels.as("labels"))
+          .agg(min(col("t").cast("long")).as("s_mint"), max(col("t").cast("long")).as("s_maxt"))
+      }.map(_ => st.nextBlockId)
     } finally cached.unpersist()
   }
 
-  /** Publish `rows` as the store's next block, its dictionary written
-    * from `series(id)` (per-series rows, [[BlockStore.writeDict]]'s
-    * input); None, publishing nothing, when `rows` is empty. */
-  private def appendBlock(rows: DataFrame)(series: Long => DataFrame): Option[Long] =
-    Manifest.withLock(root) {
-      persistRange()
-      val st = manifest
-      val id = st.nextBlockId
-      storeTable(rows.sparkSession)
-      insertBlock(id, rows).map { case (mint, maxt, n) =>
-        val numSeries = BlockStore.writeDict(series(id), dictPath(id), SaveMode.Overwrite)
-        Manifest.publish(root, st.copy(blocks = st.blocks :+
-          BlockMeta(id, mint, maxt, n, numSeries, numTombstones = 0L, bytes = du(blockPath(id)))))
-        markSynced()
-        id
-      }
+  /** Publish `rows` as the next block of `st`, the state its caller
+    * loaded under the store's lock, its dictionary written from
+    * `series(id)` (per-series rows, [[BlockStore.writeDict]]'s input);
+    * the published state, or None, publishing nothing, when `rows` is
+    * empty. */
+  private def appendBlock(st: ManifestState, rows: DataFrame)(
+      series: Long => DataFrame): Option[ManifestState] = {
+    persistRange()
+    val id = st.nextBlockId
+    storeTable(rows.sparkSession)
+    insertBlock(id, rows).map { case (mint, maxt, n) =>
+      val numSeries = BlockStore.writeDict(series(id), dictPath(id), SaveMode.Overwrite)
+      val next = st.copy(blocks = st.blocks :+
+        BlockMeta(id, mint, maxt, n, numSeries, numTombstones = 0L, bytes = du(blockPath(id))))
+      Manifest.publish(root, next)
+      markSynced()
+      next
     }
+  }
 
   /** Insert `rows` into the bucketed table as block `id`: one shuffle
     * keyed on (t_bucket, spark-bucket-id) so every executor writes and
@@ -356,11 +353,10 @@ final class BlockStore(
     readBlocks(spark, ids)
   }
 
-  /** Tombstones of the current manifest as a DataFrame: inline T-record
-    * intervals plus any spilled side tables (wide deletes). */
-  def tombstoneTable(spark: SparkSession): DataFrame = {
+  /** Tombstones of `st` as a DataFrame: inline T-record intervals plus
+    * any spilled side tables (wide deletes). */
+  private[storage] def tombstoneTable(spark: SparkSession, st: ManifestState): DataFrame = {
     import spark.implicits._
-    val st = manifest
     val inline = st.tombstones
       .map(t => (t.seriesKey, t.mint, t.maxt))
       .toDF("series_key", "mint", "maxt")
@@ -370,10 +366,14 @@ final class BlockStore(
     }
   }
 
-  /** Total interval count across inline and spilled tombstones — the
-    * manifest-stats gate for broadcasting the tombstone side. */
-  private def tombstoneCount(st: ManifestState): Long =
-    st.tombstones.size.toLong + st.tombstoneFiles.map(_.count).sum
+  /** `rows` without the samples `st`'s tombstones cover, the tombstone
+    * side broadcast while its interval count (inline and spilled) is
+    * within [[broadcastLimit]]. */
+  private def withoutTombstones(spark: SparkSession, st: ManifestState, rows: DataFrame): DataFrame = {
+    val n = st.tombstones.size.toLong + st.tombstoneFiles.map(_.count).sum
+    if (n == 0L) rows
+    else Tombstones.applyTo(rows, tombstoneTable(spark, st), broadcastTombstones = n <= broadcastLimit)
+  }
 
   /** The read path (reference `db.Querier`, `db.go:1150-1196`): select
     * manifest blocks overlapping the closed `[mint, maxt]`, and apply
@@ -383,6 +383,14 @@ final class BlockStore(
     * semantics. Tombstoned intervals are filtered via broadcast range
     * anti-join when any exist. */
   def readRange(spark: SparkSession, mint: Long, maxt: Long, matchers: Matcher*): DataFrame =
+    readAt(spark, manifest, mint, maxt, withLabels = false, matchers)
+
+  /** Both [[readRange]] forms over `st`, a state the caller loaded once:
+    * blocks, tombstones, matched keys and label maps all come from `st`
+    * and from one refresh of its resident index. */
+  private[graft] def readAt(spark: SparkSession, st: ManifestState, mint: Long, maxt: Long,
+      withLabels: Boolean, matchers: Seq[Matcher]): DataFrame = {
+    lazy val ix = residentIndex(spark, st)
     // matcher selection resolves ENTIRELY in the postings index — the
     // reference's Select never evaluates matchers on sample data
     // (`querier.go:326-396`). Under the gate the keys resolve on the
@@ -393,11 +401,11 @@ final class BlockStore(
     // range bound the matched set safely (a broad matcher over 10⁸
     // series must not OOM the driver), otherwise AQE picks the
     // strategy from runtime sizes
-    readSelected(spark, mint, maxt) { (raw0, st, live) =>
+    val rows = readSelected(spark, st, mint, maxt) { (raw0, live) =>
       if (matchers.isEmpty) raw0
-      else residentIndex(spark, st) match {
-        case Some(ix) =>
-          val keys = ix.resolve(matchers)
+      else ix match {
+        case Some(resident) =>
+          val keys = resident.resolve(matchers)
           if (keys.size <= BlockStore.literalLimit)
             raw0.where(col("series_key").isin(keys: _*))
           else {
@@ -405,12 +413,17 @@ final class BlockStore(
             raw0.join(broadcast(keys.toDF("series_key")), Seq("series_key"), "left_semi")
           }
         case None =>
-          val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
+          val keys = graft.query.Postings.seriesFor(postingsIndex(spark, st), matchers)
           val totalSeries = live.map(_.numSeries).sum // upper bound on |keys|
           val hinted = if (totalSeries <= broadcastLimit) broadcast(keys) else keys
           raw0.join(hinted, Seq("series_key"), "left_semi")
       }
     }
+    if (!withLabels) rows
+    else rows.join(seriesLabels(spark, st, ix), Seq("series_key"), "left")
+      .withColumn("labels",
+        org.apache.spark.sql.functions.coalesce(col("labels"), map().cast("map<string,string>")))
+  }
 
   /** Point lookup — the reference's seek shape
     * (`querier_test.go:1555-1644`, the narrow-range single-series read
@@ -426,23 +439,17 @@ final class BlockStore(
     * file reads of one series' row groups — the latency floor of the
     * layout (plan-asserted in BlockStoreSpec, measured as the `ts_seek`
     * bench row). */
-  def seek(
-      spark: SparkSession,
-      labels: Map[String, String],
-      mint: Long,
-      maxt: Long): DataFrame = {
+  def seek(spark: SparkSession, labels: Map[String, String], mint: Long, maxt: Long): DataFrame = {
     val key = graft.model.Labels.fromMap(labels).canonical
-    readSelected(spark, mint, maxt) { (raw0, _, _) =>
-      raw0.where(col("series_key") === lit(key))
-    }
+    readSelected(spark, manifest, mint, maxt)((raw0, _) => raw0.where(col("series_key") === lit(key)))
   }
 
-  /** Shared read-path scaffolding: manifest block pruning, t_bucket
+  /** Shared read-path scaffolding over `st`: block pruning, t_bucket
     * bounds, sample-grain time clamp, then `select` (the series
-    * restriction), then overlap dedup + tombstones. */
-  private def readSelected(spark: SparkSession, mint: Long, maxt: Long)(
-      select: (DataFrame, ManifestState, Seq[BlockMeta]) => DataFrame): DataFrame = {
-    val st = manifest
+    * restriction, given the blocks in range), then overlap dedup +
+    * tombstones. */
+  private def readSelected(spark: SparkSession, st: ManifestState, mint: Long, maxt: Long)(
+      select: (DataFrame, Seq[BlockMeta]) => DataFrame): DataFrame = {
     val live = st.blocks.filter(_.overlaps(mint, maxt))
     // no overlapping block — including a store with no published blocks
     // at all (e.g. only rolled-back txns): an empty result, not an
@@ -463,17 +470,12 @@ final class BlockStore(
         case _ => lit(true)
       })
       .where(col("t") >= lit(mint) && col("t") <= lit(maxt))
-    val raw = select(raw0, st, live)
+    val raw = select(raw0, live)
     val vertical = Compaction.overlappingGroups(live).nonEmpty
     val merged =
       if (vertical) Merge.dedupLatest(raw, blockRecency(live), col("sample_id"))
       else raw
-    val nTombs = tombstoneCount(st)
-    val withTombs =
-      if (nTombs == 0L) merged
-      else Tombstones.applyTo(merged, tombstoneTable(spark),
-        broadcastTombstones = nTombs <= broadcastLimit)
-    withTombs.drop("block_id", "t_bucket")
+    withoutTombstones(spark, st, merged).drop("block_id", "t_bucket")
   }
 
   /** [[readRange]] with each series' label map re-attached — the
@@ -484,28 +486,25 @@ final class BlockStore(
     * the map back from [[seriesLabels]] joined to the read once. The
     * label-less series `"{}"` owns no index rows and surfaces an empty
     * map, the reference's `labels.Labels{}`. */
-  def readRange(
-      spark: SparkSession,
-      mint: Long,
-      maxt: Long,
-      withLabels: Boolean,
-      matchers: Matcher*): DataFrame = {
-    val rows = readRange(spark, mint, maxt, matchers: _*)
-    if (!withLabels) rows
-    else rows.join(seriesLabels(spark), Seq("series_key"), "left")
-      .withColumn("labels",
-        org.apache.spark.sql.functions.coalesce(col("labels"), map().cast("map<string,string>")))
+  def readRange(spark: SparkSession, mint: Long, maxt: Long, withLabels: Boolean,
+      matchers: Matcher*): DataFrame = readAt(spark, manifest, mint, maxt, withLabels, matchers)
+
+  /** [[seriesLabels]] of the current state: the label maps a by-ref
+    * append ([[graft.ingest.Appender.Txn.addRef]]) joins. */
+  private[graft] def seriesLabels(spark: SparkSession): DataFrame = {
+    val st = manifest
+    seriesLabels(spark, st, residentIndex(spark, st))
   }
 
-  /** `(series_key, labels)` of every indexed series: the one relation
-    * that a labelled read ([[readRange]]) and a by-ref append
-    * ([[graft.ingest.Appender.Txn.addRef]]) join. Under the gate it is
-    * the [[SeriesIndex]]'s local relation, broadcast (built once per
-    * index, reused by every query); above it, one pivot of the index —
+  /** `(series_key, labels)` of every series indexed at `st`, `ix` its
+    * [[residentIndex]]: the one relation that a labelled read
+    * ([[readAt]]) and a by-ref append join. Under the gate it is the
+    * [[SeriesIndex]]'s local relation, broadcast (built once per index,
+    * reused by every query); above it, one pivot of the index —
     * `map_from_entries` over a per-series collect — left to AQE. */
-  private[graft] def seriesLabels(spark: SparkSession): DataFrame =
-    residentIndex(spark, manifest).map(ix => broadcast(ix.labelsFrame(spark)))
-      .getOrElse(postingsIndex(spark).groupBy("series_key").agg(map_from_entries(
+  private def seriesLabels(spark: SparkSession, st: ManifestState, ix: Option[SeriesIndex]): DataFrame =
+    ix.map(resident => broadcast(resident.labelsFrame(spark)))
+      .getOrElse(postingsIndex(spark, st).groupBy("series_key").agg(map_from_entries(
         collect_list(struct(col("label_name"), col("label_value")))).as("labels")))
 
   /** The gate between the two resolution paths: the manifest's series
@@ -570,8 +569,11 @@ final class BlockStore(
     * the [[broadcastLimit]] gate.
     * Sample-less registered series ([[registerSeries]]) ride along like
     * the reference's head series map entries. */
-  def postingsIndex(spark: SparkSession): DataFrame =
-    BlockStore.readDict(spark, indexedBlocks(manifest).map(dictPath) ++ headDict)
+  def postingsIndex(spark: SparkSession): DataFrame = postingsIndex(spark, manifest)
+
+  /** [[postingsIndex]] of the blocks `st` lists. */
+  private def postingsIndex(spark: SparkSession, st: ManifestState): DataFrame =
+    BlockStore.readDict(spark, indexedBlocks(st).map(dictPath) ++ headDict)
       .select("label_name", "label_value", "series_key").distinct()
 
   /** The live block ids whose dictionaries make up the postings index,
@@ -612,21 +614,22 @@ final class BlockStore(
     * the gate a local relation from the [[SeriesIndex]], whose
     * `collect()` starts no Spark job. */
   def labelNames(spark: SparkSession): DataFrame =
-    residentIndex(spark, manifest).map(ix => localColumn(spark, "label_name", ix.labelNames))
-      .getOrElse(postingsIndex(spark).select(col("label_name")).distinct().orderBy("label_name"))
+    labelColumn(spark, manifest, "label_name")(_.labelNames, identity)
 
   /** A2 over the store: sorted distinct values of one label, index-only
     * (reference `querier.go:91-108`), gated like [[labelNames]]. */
   def labelValues(spark: SparkSession, name: String): DataFrame =
-    residentIndex(spark, manifest).map(ix => localColumn(spark, "label_value", ix.labelValues(name)))
-      .getOrElse(postingsIndex(spark).where(col("label_name") === name)
-        .select(col("label_value")).distinct().orderBy("label_value"))
+    labelColumn(spark, manifest, "label_value")(_.labelValues(name), _.where(col("label_name") === name))
 
-  /** `xs` as a one-column local relation (`isLocal`: `collect()` runs
-    * no job). */
-  private def localColumn(spark: SparkSession, name: String, xs: Seq[String]): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(xs.map(Row(_)): _*),
-      StructType(Seq(StructField(name, StringType))))
+  /** The sorted distinct `column` of `st`'s postings: under the gate
+    * `resident`'s answer as a one-column local relation (`isLocal`:
+    * `collect()` runs no job), above it `rows` of the Spark index. */
+  private def labelColumn(spark: SparkSession, st: ManifestState, column: String)(
+      resident: SeriesIndex => Seq[String], rows: DataFrame => DataFrame): DataFrame =
+    residentIndex(spark, st).map(ix => spark.createDataFrame(
+      java.util.Arrays.asList(resident(ix).map(Row(_)): _*),
+      StructType(Seq(StructField(column, StringType)))))
+      .getOrElse(rows(postingsIndex(spark, st)).select(col(column)).distinct().orderBy(column))
 
   /** Record deletion intervals for every series matching the conjunction
     * over `[mint, maxt]` (reference `DB.Delete`, `db.go:1203-1232`):
@@ -672,7 +675,7 @@ final class BlockStore(
             (k, math.max(mint, lo), math.min(maxt, hi))
           }.toDF("series_key", "mint", "maxt")
         case None =>
-          val keys = graft.query.Postings.seriesFor(postingsIndex(spark), matchers)
+          val keys = graft.query.Postings.seriesFor(postingsIndex(spark, st), matchers)
           val bounds = BlockStore.readDict(spark, bs.map(b => dictPath(b.blockId)))
             .groupBy("series_key").agg(min("s_mint").as("s_mint"), max("s_maxt").as("s_maxt"))
           keys.join(bounds, Seq("series_key"), "left").select(col("series_key"),
@@ -690,7 +693,7 @@ final class BlockStore(
       if (probe.length <= tombstoneSpillThreshold) {
         val added = probe.map(r =>
           TombstoneInterval(r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-        Manifest.update(root)(cur => recount(cur.copy(tombstones = coalesce(cur.tombstones ++ added))))
+        Manifest.publish(root, recount(st.copy(tombstones = coalesce(st.tombstones ++ added))))
       } else {
         val fid = st.nextBlockId
         val obs = Observation(s"graft-tomb-$fid")
@@ -707,8 +710,8 @@ final class BlockStore(
         val n = stats.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
         val lo = stats.get("lo").map(_.asInstanceOf[Long]).getOrElse(mint)
         val hi = stats.get("hi").map(_.asInstanceOf[Long]).getOrElse(maxt)
-        Manifest.update(root)(cur => recount(cur.copy(highWater = math.max(cur.highWater, fid),
-          tombstoneFiles = cur.tombstoneFiles :+ TombstoneFile(fid, lo, hi, n))))
+        Manifest.publish(root, recount(st.copy(highWater = math.max(st.highWater, fid),
+          tombstoneFiles = st.tombstoneFiles :+ TombstoneFile(fid, lo, hi, n))))
       }
       markSynced()
     }
@@ -785,10 +788,11 @@ final class BlockStore(
     val st0 = manifest
     val entryTombs = st0.tombstones.toSet
     val entryFiles = st0.tombstoneFiles.map(_.fileId).toSet
-    val rewritten = st0.blocks
-      .filter(_.numTombstones > 0)
-      .map(_.blockId)
-      .flatMap(id => compact(spark, Seq(id)))
+    val (st1, rewritten) = st0.blocks.filter(_.numTombstones > 0).map(_.blockId)
+      .foldLeft((st0, Seq.empty[Long])) { case ((st, done), id) =>
+        val (next, newId) = compactAt(spark, st, Seq(id))
+        (next, done ++ newId)
+      }
     // Every interval present at entry has now been physically applied to
     // every block that carried it (numTombstones is a time-overlap upper
     // bound, so numTombstones == 0 blocks carry none). compact()'s own
@@ -797,7 +801,6 @@ final class BlockStore(
     // multi-block clean never clears the manifest and re-rewrites the
     // same blocks on the next call.
     if (entryTombs.nonEmpty || entryFiles.nonEmpty) {
-      val st1 = manifest
       Manifest.publish(root, recount(st1.copy(tombstones = st1.tombstones.filterNot(entryTombs),
         tombstoneFiles = st1.tombstoneFiles.filterNot(f => entryFiles(f.fileId)))))
       markSynced()
@@ -813,17 +816,18 @@ final class BlockStore(
     * intervals that no longer touch any remaining block are dropped
     * (`CleanTombstones`, `db.go:1234-1261`). */
   def compact(spark: SparkSession, ids: Seq[Long]): Option[Long] = Manifest.withLock(root) {
-    if (ids.size < 1) return None
-    val st = manifest
+    if (ids.isEmpty) None else compactAt(spark, manifest, ids)._2
+  }
+
+  /** [[compact]] over `st`, the current state its caller loaded under
+    * the lock: the published state and the new block's id. */
+  private def compactAt(
+      spark: SparkSession, st: ManifestState, ids: Seq[Long]): (ManifestState, Option[Long]) = {
     val newId = st.nextBlockId
     val inputs = st.blocks.filter(b => ids.contains(b.blockId))
     require(inputs.size == ids.size, s"unknown block ids in $ids")
-    val deduped = Merge.dedupLatest(readBlocks(spark, ids), blockRecency(inputs), col("sample_id"))
-    val nTombs = tombstoneCount(st)
-    val cleaned =
-      if (nTombs == 0L) deduped
-      else Tombstones.applyTo(deduped, tombstoneTable(spark),
-        broadcastTombstones = nTombs <= broadcastLimit)
+    val cleaned = withoutTombstones(spark, st,
+      Merge.dedupLatest(readBlocks(spark, ids), blockRecency(inputs), col("sample_id")))
     // None: everything tombstoned away. Otherwise the new block's
     // dictionary comes from the rows it holds, so its series, bounds
     // and count are exact however much the tombstones removed
@@ -836,10 +840,10 @@ final class BlockStore(
     // block). newId enters the high-water even if the compacted block
     // came out empty (everything tombstoned): it must never be reused
     val kept = retaining(st, st.blocks.filterNot(b => ids.contains(b.blockId)))
-    Manifest.publish(root, recount(kept.copy(blocks = kept.blocks ++ meta,
-      highWater = math.max(st.highWater, newId))))
+    val next = recount(kept.copy(blocks = kept.blocks ++ meta, highWater = math.max(st.highWater, newId)))
+    Manifest.publish(root, next)
     markSynced()
-    meta.map(_.blockId)
+    (next, meta.map(_.blockId))
   }
 
   /** Manifest-only retention (reference `db.go:847-906`): blocks wholly
@@ -873,10 +877,12 @@ final class BlockStore(
     }
   }
 
-  /** Physically delete block/tombstone dirs no longer referenced by the
-    * current manifest (deferred deletion ≙ the reference draining
-    * pendingReaders before removing dirs, `db.go:908-940`), and trim old
-    * manifest versions. */
+  /** Physically delete, at once, the block, dictionary and tombstone
+    * dirs the current manifest no longer lists, and trim old manifest
+    * versions. Unlike the reference, which removes a retired block only
+    * after its pending readers drain (`db.go:908-940`), nothing here
+    * waits for readers: a frame built over an older state and run after
+    * a maintain pass can answer empty, until reads lease their state. */
   def vacuum(): Unit = Manifest.withLock(root) {
     val st = manifest
     val live = st.blocks.map(_.blockId).toSet
@@ -928,25 +934,26 @@ final class BlockStore(
       val dest = new BlockStore(destRoot, blockRangeMs, newBuckets,
         tombstoneSpillThreshold, broadcastLimit)
       val st = manifest
-      st.blocks.sortBy(_.blockId).foreach { b =>
-        dest.appendBlock(
-          storeTable(spark).where(col("block_id") === b.blockId).drop("block_id", "t_bucket"))(
-          dest.writtenSeries(spark, _, Seq(dictPath(b.blockId))))
+      Manifest.withLock(destRoot) {
+        val copied = st.blocks.sortBy(_.blockId).foldLeft(dest.manifest) { (d, b) =>
+          dest.appendBlock(d,
+            storeTable(spark).where(col("block_id") === b.blockId).drop("block_id", "t_bucket"))(
+            dest.writtenSeries(spark, _, Seq(dictPath(b.blockId)))).getOrElse(d)
+        }
+        headDict.foreach(d =>
+          BlockStore.writeDict(BlockStore.dictSeries(spark, Seq(d)), dest.headDictDir, SaveMode.Overwrite))
+        // spilled tombstone side tables get fresh ids in the destination's
+        // id space (they share it with block ids)
+        var nextId = copied.nextBlockId
+        val newFiles = st.tombstoneFiles.map { f =>
+          val nid = nextId
+          nextId += 1
+          copyTree(Paths.get(tombPath(f.fileId)), Paths.get(dest.tombsDir, s"ts_id=$nid"))
+          f.copy(fileId = nid)
+        }
+        Manifest.publish(destRoot, recount(copied.copy(tombstones = st.tombstones, tombstoneFiles = newFiles,
+          highWater = newFiles.map(_.fileId).foldLeft(copied.highWater)(math.max))))
       }
-      headDict.foreach(d =>
-        BlockStore.writeDict(BlockStore.dictSeries(spark, Seq(d)), dest.headDictDir, SaveMode.Overwrite))
-      // spilled tombstone side tables get fresh ids in the destination's
-      // id space (they share it with block ids)
-      var nextId = Manifest.load(destRoot).nextBlockId
-      val newFiles = st.tombstoneFiles.map { f =>
-        val nid = nextId
-        nextId += 1
-        copyTree(Paths.get(tombPath(f.fileId)),
-          Paths.get(dest.tombsDir, s"ts_id=$nid"))
-        f.copy(fileId = nid)
-      }
-      Manifest.update(destRoot)(d => recount(d.copy(tombstones = st.tombstones,
-        tombstoneFiles = newFiles, highWater = newFiles.map(_.fileId).foldLeft(d.highWater)(math.max))))
       dest.markSynced()
       dest
     }

@@ -81,7 +81,9 @@ object Manifest {
   private def lockKey(root: String): String =
     Paths.get(root).toAbsolutePath.normalize.toString
 
-  /** Run `body` as the store's exclusive writer (reentrant). */
+  /** Run `body` as the store's exclusive writer (reentrant): every
+    * [[graft.storage.BlockStore]] mutation publishes a state it loaded
+    * inside `body`, so no other writer can interleave. */
   def withLock[A](root: String)(body: => A): A = {
     val k = lockKey(root)
     val l = jvmLocks.computeIfAbsent(k, _ => new java.util.concurrent.locks.ReentrantLock())
@@ -103,16 +105,6 @@ object Manifest {
       }
     } finally l.unlock()
   }
-
-  /** Atomic read-modify-write of the store state — the only safe way to
-    * mutate a shared store (every [[graft.storage.BlockStore]] mutation
-    * goes through here or runs under the same [[withLock]]). */
-  def update(root: String)(f: ManifestState => ManifestState): ManifestState =
-    withLock(root) {
-      val next = f(load(root))
-      publish(root, next)
-      next
-    }
 
   private def versionOf(p: Path): Option[Long] = {
     val n = p.getFileName.toString

@@ -75,10 +75,17 @@ class MainSpec extends SparkSuite {
 
   test("bench write ingests a synthesized label-set corpus and reports throughput") {
     val out = Files.createTempDirectory("graft-cli-bench").toString
-    val text = capture("bench", "write",
-      "--out", out, "--metrics", "50", "--scrapes", "3")
+    // under a comma-decimal default locale the figures still print with '.'
+    val locale = java.util.Locale.getDefault
+    val text =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.GERMANY)
+        capture("bench", "write", "--out", out, "--metrics", "50", "--scrapes", "3")
+      } finally java.util.Locale.setDefault(locale)
     assert(text.contains("stage=readData"))
     assert(text.contains("stage=ingestScrapes"))
+    assert("""duration=\d+\.\d{3}s""".r.findAllIn(text).size == 2, text)
+    assert("""(?m)samples/sec: \d+\.\d$""".r.findFirstIn(text).nonEmpty, text)
     assert(text.contains(" > total samples: 150"))
     assert(text.contains(" > series: 50"))
     // the written store is a real store: ls sees its block

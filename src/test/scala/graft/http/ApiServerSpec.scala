@@ -93,6 +93,9 @@ class ApiServerSpec extends SparkSuite
     assert(c3 == 400 && b3.contains("11,000"), b3)
     val (c4, _) = get(s"/api/v1/query_range?query=$q&start=0&end=1")
     assert(c4 == 400)
+    // end - start overflows a Long: the guard must still count 3e14 points
+    val (c5, b5) = get(s"/api/v1/query_range?query=$q&start=-9e15&end=9e15&step=60")
+    assert(c5 == 400 && b5.contains(""""errorType":"bad_data"""") && b5.contains("11,000"), b5)
   }
 
   test("query: a PromQL parse error is a bad_data 400") {

@@ -207,7 +207,11 @@ class ManifestSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-manifest-lock").toString
     val threads = (1 to 8).map { _ =>
       new Thread(() => {
-        Manifest.update(root)(st => st.copy(highWater = st.highWater + 1)); ()
+        // the store's mutation shape: load and publish inside the lock
+        Manifest.withLock(root) {
+          val st = Manifest.load(root)
+          Manifest.publish(root, st.copy(highWater = st.highWater + 1))
+        }; ()
       })
     }
     threads.foreach(_.start())

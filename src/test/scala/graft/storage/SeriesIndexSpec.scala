@@ -399,7 +399,7 @@ class SeriesIndexSpec extends SparkSuite {
   private def tombstones(store: BlockStore): (Seq[Any], Seq[Row]) = {
     val st = store.manifest
     (Seq(st.tombstones, st.tombstoneFiles, st.blocks.map(_.numTombstones)),
-      rows(store.tombstoneTable(spark)))
+      rows(store.tombstoneTable(spark, store.manifest)))
   }
 
   test("a delete under the gate and one above it publish identical tombstones, inline and spilled") {

@@ -140,10 +140,6 @@ class BlockStoreSpec extends SparkSuite {
     val Seq(meta) = store.manifest.blocks
     assert(meta.numSamples == samples.count())
     assert(meta.numSeries == samples.select("series_key").distinct().count())
-    // the manifest-derived density that gates Rate.preAgg at 100 TB —
-    // pure stats, no data pass
-    assert(store.samplesPerSeries ==
-      meta.numSamples.toDouble / meta.numSeries)
     assert(meta.bytes > 0)
     val (mint, maxt) = {
       val r = samples.agg(min("t"), max("t")).head(); (r.getLong(0), r.getLong(1))
@@ -436,6 +432,32 @@ class BlockStoreSpec extends SparkSuite {
     assert(store.readRange(spark, 0, 1000)
       .select("t").as[Long].collect().sorted.toSeq ==
       ((0L to 3L) ++ (200L to 209L)))
+  }
+
+  bothGates("a labelled read at a state taken before cleanTombstones answers from that " +
+    "state: its tombstones, its blocks, its label maps") { side =>
+    import spark.implicits._
+    val store = side(new BlockStore(Files.createTempDirectory("graft-onestate").toString, 1000L))
+    def rows(job: String, ts: Seq[Long]): DataFrame =
+      ts.map(i => (s"{job=\"$job\"}", i, i * 1.0, i, Map("job" -> job)))
+        .toDF("series_key", "t", "v", "sample_id", "labels")
+    store.write(Seq("a", "b", "c").map(rows(_, 0L until 10L)).reduce(_ unionByName _))
+    store.delete(spark, 0, 9, graft.matchers.Eq("job", "b"))
+    store.delete(spark, 0, 3, graft.matchers.Eq("job", "a"))
+    val st = store.manifest
+    // after the state: c is deleted, and the clean rewrites block 1 into
+    // one holding a's 4..9 alone, whose manifest lists no tombstone and
+    // whose dictionary lists neither b nor c; no vacuum runs
+    store.delete(spark, 0, 9, graft.matchers.Eq("job", "c"))
+    store.cleanTombstones(spark)
+    assert(store.manifest.blocks.map(_.blockId) == Seq(2L) && store.manifest.tombstones.isEmpty)
+    val got = store.readAt(spark, st, 0, 1000, withLabels = true, Seq(graft.matchers.Re("job", ".+")))
+      .select("series_key", "t", "labels").as[(String, Long, Map[String, String])].collect()
+    // st's tombstones hide b and a's 0..3; c, live at st, keeps every
+    // sample, and every row carries the label map st's dictionaries give it
+    assert(got.map(r => (r._1, r._2)).sorted.toSeq ==
+      (4L until 10L).map("{job=\"a\"}" -> _) ++ (0L until 10L).map("{job=\"c\"}" -> _))
+    assert(got.forall(r => r._3 == Map("job" -> r._1.stripPrefix("{job=\"").stripSuffix("\"}"))))
   }
 
   test("labelNames unions blocks with later writes, sorted distinct " +
