@@ -225,12 +225,15 @@ object Main {
   private[graft] def analyze(
       spark: SparkSession, path: String, blockId: Option[Long], limit: Int): Unit = {
     val db = Db.open(spark, path)
-    require(db.blocks.nonEmpty, s"no live blocks at $path")
+    // one manifest load: a retention pass between two loads could empty
+    // the list after the check
+    val blocks = db.blocks
+    require(blocks.nonEmpty, s"no live blocks at $path")
     // default: the last block in query (mint) order, like the reference
     val meta = blockId match {
-      case Some(id) => db.blocks.find(_.blockId == id)
+      case Some(id) => blocks.find(_.blockId == id)
         .getOrElse(throw new IllegalArgumentException(s"block not found: $id"))
-      case None => db.blocks.last
+      case None => blocks.last
     }
     val idx = db.store.blockIndex(spark, meta.blockId)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -315,9 +318,10 @@ object Main {
       nameLabel: String,
       json: Boolean): Unit = {
     val db = Db.open(spark, path)
-    require(db.blocks.nonEmpty || (start.isDefined && end.isDefined),
+    val blocks = db.blocks // one manifest load, as in analyze
+    require(blocks.nonEmpty || (start.isDefined && end.isDefined),
       s"no live blocks at $path (pass --start/--end to query anyway)")
-    val endMs = end.getOrElse(db.blocks.map(_.maxt).max)
+    val endMs = end.getOrElse(blocks.map(_.maxt).max)
     val startMs = start.getOrElse(endMs)
     val out = db.promql(expr, startMs, endMs, stepMs, lookbackMs, nameLabel)
     // a top-level range vector's instant result is a matrix (the raw

@@ -2,7 +2,7 @@ package graft.catalyst
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
-  And, Attribute, AttributeReference, CreateNamedStruct, EqualTo,
+  And, AttributeReference, CreateNamedStruct, EqualTo,
   Expression, GreaterThan, If, IsNull, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.types.{DataType, StructField, StructType}

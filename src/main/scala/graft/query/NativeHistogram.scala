@@ -39,9 +39,6 @@ import graft.functions.rangeForTimestamp
   */
 object NativeHistogram {
 
-  /** Bucket width exponent factor: boundaries are `2^(i · 2^-schema)`. */
-  private def widthOf(schema: Int): Double = math.pow(2.0, -schema)
-
   /** Fractional-scale digit cut as PURE IEEE ops: `⌊x·10ˢ + 0.5⌋/10ˢ`.
     * NOT `round(x, s)`: when an exact rational result lands ON the
     * half-grid (common here — integer-scaled sums divided by small

@@ -142,8 +142,6 @@ object PromQl {
   private val aggOps = Set("sum", "min", "max", "avg", "count", "group",
     "stddev", "stdvar", "quantile", "topk", "bottomk", "count_values",
     "limitk", "limit_ratio")
-  private val keywords = Set("by", "without", "on", "ignoring", "bool",
-    "offset", "and", "or", "unless", "group_left", "group_right")
 
   private def unitMs(q: String, at: Int): Option[(Long, Int)] =
     if (at >= q.length) None
@@ -749,7 +747,7 @@ object PromQl {
       }
       val step = if (sq.stepMs == 0) "" else durStr(sq.stepMs)
       body + s"[${durStr(sq.rangeMs)}:$step]" + selMods(sq.offsetMs, sq.at)
-    case b @ Bin(op, lhs, rhs, bool, matching) =>
+    case Bin(op, lhs, rhs, bool, matching) =>
       val p = precOf(op)
       def side(e: Expr, right: Boolean): String = {
         val needs = e match {
@@ -973,11 +971,46 @@ object PromQl {
     private val spark = samples.sparkSession
     private def mapResolve: String => Column = n => col("labels").getItem(n)
 
-    private def resolveAt(at: At): Long = at match {
-      case AtStart => outerStartMs
-      case AtEnd => outerEndMs
-      case AtMs(ms) => ms
+    /** This query's compiler pinned to the one instant `at` resolves
+      * to — the evaluation point of the `@` modifier. */
+    private def pinned(at: At): Compiler = {
+      val t = at match {
+        case AtStart => outerStartMs
+        case AtEnd => outerEndMs
+        case AtMs(ms) => ms
+      }
+      new Compiler(samples, p.copy(startMs = t, endMs = t),
+        outerStartMs, outerEndMs)
     }
+
+    /** A pinned one-instant result replicated across this compiler's
+      * lattice — each lattice instant reads the same fixed-time value
+      * (the `@` contract). */
+    private def relattice(one: DataFrame): DataFrame =
+      one.drop("t").crossJoin(latticeDf)
+        .select("series_key", "labels", "t", "v")
+
+    /** The compiler of a subquery's inner evaluation. `[range:]`
+      * defaults to the configured evaluation interval (Prometheus's
+      * query.default-evaluation-interval), NOT the outer query step. A
+      * subquery offset shifts the whole inner window back (negative:
+      * forward), exactly like a selector offset: the inner lattice
+      * stays aligned to absolute step multiples in the SHIFTED window,
+      * and [[onOuterTime]] shifts the results forward again. */
+    private def innerOf(sq: Subquery): Compiler = {
+      val stepIn = if (sq.stepMs > 0) sq.stepMs else p.defaultEvalMs
+      val raw = p.startMs - sq.rangeMs - sq.offsetMs
+      val rem = math.floorMod(raw, stepIn)
+      val start0 = if (rem == 0L) raw else raw + stepIn - rem
+      new Compiler(samples,
+        p.copy(startMs = start0, endMs = p.endMs - sq.offsetMs, stepMs = stepIn),
+        outerStartMs, outerEndMs)
+    }
+
+    /** An [[innerOf]] result on outer time. */
+    private def onOuterTime(sq: Subquery, inner: DataFrame): DataFrame =
+      if (sq.offsetMs == 0L) inner
+      else inner.withColumn("t", col("t") + sq.offsetMs)
 
     def eval(e: Expr): Value = e match {
       case NumberLit(v) => Scal(v)
@@ -1062,23 +1095,14 @@ object PromQl {
     /** `selector @ T`: the instant vector evaluated ONCE at the pinned
       * time, replicated across the output lattice — each lattice
       * instant reads the same fixed-time value (the `@` contract). */
-    private def atVector(s: Selector): DataFrame = {
-      val T = resolveAt(s.at.get)
-      val one = new Compiler(samples, p.copy(startMs = T, endMs = T),
-          outerStartMs, outerEndMs)
-        .eval(s.copy(at = None)) match {
-        case Vec(df) => df
-        case _ => fail("internal: selector must evaluate to a vector")
-      }
-      one.drop("t").crossJoin(latticeDf)
-        .select("series_key", "labels", "t", "v")
-    }
+    private def atVector(s: Selector): DataFrame =
+      relattice(pinned(s.at.get).vecOf(s.copy(at = None)))
 
     /** PromQL functions/operators drop the metric name from result
       * label sets; the canonical key is recomputed from the remaining
       * labels. */
     private def dropName(df: DataFrame): DataFrame =
-      relabel(df, map_filter(col("labels"), (k, _) => k =!= p.nameLabel))
+      relabel(df, labelSubset(Nil, keep = false))
 
     private def relabel(df: DataFrame, newLabels: Column): DataFrame =
       df.withColumn("labels", newLabels)
@@ -1100,29 +1124,11 @@ object PromQl {
         val sel = selected(r.sel)
         (sel.select("series_key", "labels", "t", "v"), r.rangeMs)
       case sq: Subquery =>
-        // `[range:]` defaults to the configured evaluation interval
-        // (Prometheus's query.default-evaluation-interval), NOT the
-        // outer query step
-        val stepIn = if (sq.stepMs > 0) sq.stepMs else p.defaultEvalMs
-        // a subquery offset shifts the whole inner evaluation window
-        // back (negative: forward), exactly like a selector offset: the
-        // inner lattice stays aligned to absolute step multiples in the
-        // SHIFTED window, and results shift forward onto outer time
-        val raw = p.startMs - sq.rangeMs - sq.offsetMs
-        val rem = math.floorMod(raw, stepIn)
-        val start0 = if (rem == 0L) raw else raw + stepIn - rem
-        val inner = new Compiler(samples,
-          p.copy(startMs = start0, endMs = p.endMs - sq.offsetMs,
-            stepMs = stepIn),
-          outerStartMs, outerEndMs)
-          .eval(sq.body) match {
+        val inner = innerOf(sq).eval(sq.body) match {
           case Vec(df) => df
           case _ => fail("subquery body must be an instant vector")
         }
-        val shifted =
-          if (sq.offsetMs == 0L) inner
-          else inner.withColumn("t", col("t") + sq.offsetMs)
-        (shifted.select("series_key", "labels", "t", "v"), sq.rangeMs)
+        (onOuterTime(sq, inner).select("series_key", "labels", "t", "v"), sq.rangeMs)
       case _ => fail(
         "expected a range vector ([range] selector or [range:step] subquery)")
     }
@@ -1151,7 +1157,7 @@ object PromQl {
       * sample can serve; [[rangeAgg]] takes ONE aggregate per
       * `(series, instant)` over it. */
     private def rangeFrame(
-        src: DataFrame, rangeMs: Long, needLag: Boolean = true): DataFrame = {
+        src: DataFrame, rangeMs: Long, needLag: Boolean): DataFrame = {
       // (t, v) order: Prometheus never has duplicate timestamps per
       // series, but a relational corpus can — the deterministic
       // convention is "duplicates are separate samples, larger value
@@ -1186,7 +1192,7 @@ object PromQl {
       * and the regression sums for deriv/predict_linear. */
     private def rangeAgg(
         src: DataFrame, rangeMs: Long, extra: Seq[Column] = Nil,
-        need: Set[String] = RangeAggAll, needLag: Boolean = true,
+        need: Set[String], needLag: Boolean,
         carryLabels: Boolean = false,
         labelsByJoin: Boolean = false): DataFrame = {
       val x = (col("t") - col("g")).cast("double") / 1000.0 // seconds rel. instant
@@ -1420,7 +1426,7 @@ object PromQl {
         buckets.columns.foldLeft(df) { (d, c) =>
           if (d.columns.contains(c)) d
           else d.withColumn(c, lit(null).cast(buckets.schema(c).dataType))
-        }.select(buckets.columns.map(col): _*)
+        }.select(buckets.columns.toIndexedSeq.map(col): _*)
       val endA = pad(anchors0.drop("labels")
         .withColumn("pa", col("g")).withColumn("pd", col("g"))
         .withColumn("blk", blkOf(col("g")))
@@ -1614,15 +1620,9 @@ object PromQl {
       * shifts them back). `@` pins the window end first. */
     def rangeLiteral(e: Expr): DataFrame = e match {
       case r: RangeSel if r.sel.at.isDefined =>
-        val T = resolveAt(r.sel.at.get)
-        new Compiler(samples, p.copy(startMs = T, endMs = T),
-            outerStartMs, outerEndMs)
-          .rangeLiteral(RangeSel(r.sel.copy(at = None), r.rangeMs))
+        pinned(r.sel.at.get).rangeLiteral(RangeSel(r.sel.copy(at = None), r.rangeMs))
       case sq: Subquery if sq.at.isDefined =>
-        val T = resolveAt(sq.at.get)
-        new Compiler(samples, p.copy(startMs = T, endMs = T),
-            outerStartMs, outerEndMs)
-          .rangeLiteral(sq.copy(at = None))
+        pinned(sq.at.get).rangeLiteral(sq.copy(at = None))
       case _ =>
         val off = e match {
           case r: RangeSel => r.sel.offsetMs
@@ -1645,15 +1645,9 @@ object PromQl {
       if (!hasH) None
       else e match {
         case r: RangeSel if r.sel.at.isDefined =>
-          val T = resolveAt(r.sel.at.get)
-          new Compiler(samples, p.copy(startMs = T, endMs = T),
-              outerStartMs, outerEndMs)
-            .histRangeLiteral(RangeSel(r.sel.copy(at = None), r.rangeMs))
+          pinned(r.sel.at.get).histRangeLiteral(RangeSel(r.sel.copy(at = None), r.rangeMs))
         case sq: Subquery if sq.at.isDefined =>
-          val T = resolveAt(sq.at.get)
-          new Compiler(samples, p.copy(startMs = T, endMs = T),
-              outerStartMs, outerEndMs)
-            .histRangeLiteral(sq.copy(at = None))
+          pinned(sq.at.get).histRangeLiteral(sq.copy(at = None))
         case r: RangeSel =>
           // selected() carries the offset shift; filter the shifted
           // window, then restore original timestamps like the float side
@@ -1662,27 +1656,12 @@ object PromQl {
             .withColumn("t", col("t") - r.sel.offsetMs)
             .select("series_key", "labels", "t", "h"))
         case sq: Subquery =>
-          // the inner lattice math mirrors [[rangeArgOf]]'s subquery
-          // branch; the body's histogram channel (when it has one)
-          // replays on that lattice
-          val stepIn = if (sq.stepMs > 0) sq.stepMs else p.defaultEvalMs
-          val raw = p.startMs - sq.rangeMs - sq.offsetMs
-          val rem = math.floorMod(raw, stepIn)
-          val start0 = if (rem == 0L) raw else raw + stepIn - rem
-          new Compiler(samples,
-            p.copy(startMs = start0, endMs = p.endMs - sq.offsetMs,
-              stepMs = stepIn),
-            outerStartMs, outerEndMs)
-            .hVecOf(sq.body)
-            .map { inner =>
-              val shifted =
-                if (sq.offsetMs == 0L) inner
-                else inner.withColumn("t", col("t") + sq.offsetMs)
-              shifted
-                .where(col("t") > p.endMs - sq.rangeMs && col("t") <= p.endMs)
-                .withColumn("t", col("t") - sq.offsetMs)
-                .select("series_key", "labels", "t", "h")
-            }
+          // the body's histogram channel (when it has one) replays on
+          // the inner lattice
+          hSubqueryVec(sq).map(_
+            .where(col("t") > p.endMs - sq.rangeMs && col("t") <= p.endMs)
+            .withColumn("t", col("t") - sq.offsetMs)
+            .select("series_key", "labels", "t", "h"))
         case _ => None
       }
 
@@ -1692,22 +1671,13 @@ object PromQl {
     private def rangeFunction(fn: String, arg: Expr, param: Seq[Double]): DataFrame =
       arg match {
         case RangeSel(s, rangeMs) if s.at.isDefined =>
-          val T = resolveAt(s.at.get)
-          new Compiler(samples, p.copy(startMs = T, endMs = T),
-              outerStartMs, outerEndMs)
-            .rangeFunction(fn, RangeSel(s.copy(at = None), rangeMs), param)
-            .drop("t").crossJoin(latticeDf)
-            .select("series_key", "labels", "t", "v")
+          relattice(pinned(s.at.get)
+            .rangeFunction(fn, RangeSel(s.copy(at = None), rangeMs), param))
         // `expr[r:s] @ T`: the pinned trailing window evaluated once,
         // replicated across the output lattice — the same shape as a
         // pinned range selector
         case sq: Subquery if sq.at.isDefined =>
-          val T = resolveAt(sq.at.get)
-          new Compiler(samples, p.copy(startMs = T, endMs = T),
-              outerStartMs, outerEndMs)
-            .rangeFunction(fn, sq.copy(at = None), param)
-            .drop("t").crossJoin(latticeDf)
-            .select("series_key", "labels", "t", "v")
+          relattice(pinned(sq.at.get).rangeFunction(fn, sq.copy(at = None), param))
         case _ => rangeFunctionBody(fn, arg, param)
       }
 
@@ -2085,19 +2055,9 @@ object PromQl {
       * NO samples of the range argument. */
     private def absentOverTime(arg: Expr): DataFrame = arg match {
       case RangeSel(s, r) if s.at.isDefined =>
-        val T = resolveAt(s.at.get)
-        new Compiler(samples, p.copy(startMs = T, endMs = T),
-            outerStartMs, outerEndMs)
-          .absentOverTime(RangeSel(s.copy(at = None), r))
-          .drop("t").crossJoin(latticeDf)
-          .select("series_key", "labels", "t", "v")
+        relattice(pinned(s.at.get).absentOverTime(RangeSel(s.copy(at = None), r)))
       case sq: Subquery if sq.at.isDefined =>
-        val T = resolveAt(sq.at.get)
-        new Compiler(samples, p.copy(startMs = T, endMs = T),
-            outerStartMs, outerEndMs)
-          .absentOverTime(sq.copy(at = None))
-          .drop("t").crossJoin(latticeDf)
-          .select("series_key", "labels", "t", "v")
+        relattice(pinned(sq.at.get).absentOverTime(sq.copy(at = None)))
       case _ =>
         val (src0, rangeMs) = rangeArgOf(arg)
         // a histogram sample is PRESENT: selector h rows already flow
@@ -2123,9 +2083,7 @@ object PromQl {
     }
 
     private def absentRows(presentT: DataFrame, sel: Option[Selector]): DataFrame = {
-      val lattice = spark.range(p.startMs, p.endMs + 1, p.stepMs)
-        .select(col("id").as("t"))
-      val missing = lattice.join(presentT, Seq("t"), "left_anti")
+      val missing = latticeDf.join(presentT, Seq("t"), "left_anti")
       val eqs: Seq[(String, String)] = sel.toSeq.flatMap(_.matchers.collect {
         case Eq(n, v) if n != p.nameLabel && v.nonEmpty => (n, v)
       }).sortBy(_._1)
@@ -2138,10 +2096,6 @@ object PromQl {
         col("t"), lit(1.0).as("v"))
     }
 
-    /** `label_replace(v, dst, replacement, src, regex)`: full-anchored
-      * regex against the src label's value (absent ≡ ""); on match dst
-      * becomes the `$1`-expanded replacement (empty removes it), on
-      * mismatch the element passes unchanged. */
     /** A legal Prometheus label name ([a-zA-Z_][a-zA-Z0-9_]*) — the
       * upstream precondition on label_replace/label_join destinations;
       * violating it is a query error, not a silent bad label. */
@@ -2149,6 +2103,10 @@ object PromQl {
       if (!name.matches("[a-zA-Z_][a-zA-Z0-9_]*"))
         fail(s"$fn: invalid destination label name '$name'")
 
+    /** `label_replace(v, dst, replacement, src, regex)`: full-anchored
+      * regex against the src label's value (absent ≡ ""); on match dst
+      * becomes the `$1`-expanded replacement (empty removes it), on
+      * mismatch the element passes unchanged. */
     private def labelReplace(
         iv: DataFrame, dst: String, rep: String, src: String, re: String): DataFrame = {
       requireLabelName("label_replace", dst)
@@ -2242,23 +2200,21 @@ object PromQl {
     // the latest `h` per instant through the same AsOf machinery, and
     // reduce IN-ROW to a float vector with higher-order array
     // expressions (instant-vector grain — the interpreted lambdas touch
-    // group-scale rows, never samples). Histogram ARITHMETIC (h ± h
-    // one-to-one; h × / ÷ a scalar expression, a time-varying scalar,
-    // or a one-to-one-matched FLOAT VECTOR) is in corridor since r11
-    // ([[hArith]]/[[hScale]]/[[hMulFloat]], upstream FloatHistogram
-    // Add/Sub/Mul/Div incl. the zero-threshold widening merge), as are
-    // the == / != comparisons in filter AND bool form ([[hCompare]]/
-    // [[hCompareBool]], upstream FloatHistogram.Equals),
+    // group-scale rows, never samples). Histogram ARITHMETIC (h ± h;
+    // h × / ÷ a scalar expression, a time-varying scalar, or a matched
+    // FLOAT VECTOR — [[hArith]]/[[hScaleBy]], upstream FloatHistogram
+    // Add/Sub/Mul/Div incl. the zero-threshold widening merge) and the
+    // == / != comparisons in filter AND bool form ([[compared]],
+    // upstream FloatHistogram.Equals) pair their operands through the
+    // float operators' one vector-matching step ([[matched]]), so
+    // one-to-one and `group_left`/`group_right` matching, its errors
+    // and its label rule are the float path's. Also in corridor:
     // `last_over_time` over a histogram range ([[mixedFill]] at range
     // grain) and over histogram-valued SUBQUERIES
-    // ([[mixedSubqueryStream]]), rate/increase/delta +
+    // ([[mixedSubqueryStream]]), and rate/increase/delta +
     // count/present/absent_over_time over histogram-valued subqueries
-    // ([[hSubqueryVec]]), and — since r12 — many-to-one
-    // `group_left`/`group_right` matching on every histogram operator
-    // above (the one side unique-checked, many-side labels + include,
-    // the float path's grouped-result rules). Still out: ordered
-    // (< <= > >=) comparisons between histograms, which upstream drops
-    // too.
+    // ([[hSubqueryVec]]). Still out: ordered (< <= > >=) comparisons
+    // between histograms, which upstream drops too.
 
     /** True when the bound source carries the histogram channel. */
     private def hasH: Boolean = samples.columns.contains("h")
@@ -2420,12 +2376,14 @@ object PromQl {
           if sq.at.isEmpty =>
         hSubqueryVec(sq).map(inner => hRangeVecFrom(fn,
           inner.select("series_key", "labels", "t", "h"), sq.rangeMs))
-      case Agg("sum", None, body, grouping, without) =>
-        hVecOf(body).map(hSumBy(_, grouping, without))
-      case Agg("avg", None, body, grouping, without) =>
-        hVecOf(body).map(hAvgBy(_, grouping, without))
+      // bucket-wise `sum`/`avg` at instant grain: each element
+      // relabels to its grouping subset and every (group, t) merges;
+      // upstream's avg divides the group sum by its element count
+      case Agg(op @ ("sum" | "avg"), None, body, grouping, without) =>
+        hVecOf(body).map(hv => hMergeGroups(
+          relabel(hv, labelSubset(grouping, keep = !without)), avg = op == "avg"))
       // histogram arithmetic (upstream FloatHistogram Add/Sub/Mul/Div):
-      // h ± h under one-to-one matching; h × any scalar-typed
+      // h ± h under vector matching; h × any scalar-typed
       // expression or float vector (either side — Mul commutes);
       // h ÷ the same (histogram-left only, as upstream). Composes
       // under histogram_quantile / sum by — `histogram_quantile(0.9,
@@ -2460,14 +2418,12 @@ object PromQl {
         hVecOf(lhs).map(hScaleBy(_, rhs, divide = true, matching))
       // histogram == / != (upstream vectorElemBinop routes matched
       // histogram pairs to FloatHistogram.Equals; the filter form
-      // keeps the lhs sample — original labels one-to-one, many-side
-      // labels + include under grouping). The BOOL form is a FLOAT
-      // result and lives in the float channel ([[binary]] unions
-      // [[hCompareBool]] in); ordered comparisons between histograms
-      // drop upstream too.
+      // keeps the lhs sample). The BOOL form is a FLOAT result and
+      // lives in the float channel ([[binary]] unions it in); ordered
+      // comparisons between histograms drop upstream too.
       case Bin(op @ ("==" | "!="), lhs, rhs, false, matching) =>
         (hVecOf(lhs), hVecOf(rhs)) match {
-          case (Some(l), Some(r)) => Some(hCompare(op == "!=", l, r, matching))
+          case (Some(l), Some(r)) => Some(compared(op, bool = false, l, r, matching))
           case _ => None
         }
       // `last_over_time(mh[range])`: the latest sample in the trailing
@@ -2527,21 +2483,8 @@ object PromQl {
       * own lattice, offset-shifted onto outer time — the h twin of
       * [[rangeArgOf]]'s subquery branch (same lattice alignment), for
       * range functions over histogram-valued subqueries. */
-    private def hSubqueryVec(sq: Subquery): Option[DataFrame] = {
-      val stepIn = if (sq.stepMs > 0) sq.stepMs else p.defaultEvalMs
-      val raw = p.startMs - sq.rangeMs - sq.offsetMs
-      val rem = math.floorMod(raw, stepIn)
-      val start0 = if (rem == 0L) raw else raw + stepIn - rem
-      new Compiler(samples,
-        p.copy(startMs = start0, endMs = p.endMs - sq.offsetMs,
-          stepMs = stepIn),
-        outerStartMs, outerEndMs)
-        .hVecOf(sq.body)
-        .map { inner =>
-          if (sq.offsetMs == 0L) inner
-          else inner.withColumn("t", col("t") + sq.offsetMs)
-        }
-    }
+    private def hSubqueryVec(sq: Subquery): Option[DataFrame] =
+      innerOf(sq).hVecOf(sq.body).map(onOuterTime(sq, _))
 
     /** Both channels of a subquery's inner evaluation as one mixed
       * stream `(series_key, labels, t, v, h)` on outer time — the
@@ -2693,7 +2636,7 @@ object PromQl {
         // anchor rows compress away; a byte-coalesced single partition
         // would serialize the window pass)
         val rows = partials.unionByName(
-            anchors.select(partials.columns.map(col): _*))
+            anchors.select(partials.columns.toIndexedSeq.map(col): _*))
           .repartition(shufN, col("series_key"), col("part"), col("i"))
         // events at a bucket (flag 0) order BEFORE the anchor at the
         // same lattice point (flag 1): both event kinds take effect AT
@@ -2784,35 +2727,7 @@ object PromQl {
       dropName(out)
     }
 
-    /** Bucket-wise `sum` of histogram vectors at instant grain: the
-      * group relabels to its grouping subset and every (series, t)
-      * group merges through [[hMergeGroups]]. */
-    private def hSumBy(hv: DataFrame, grouping: Seq[String], without: Boolean): DataFrame = {
-      val ls = grouping.distinct
-      val keep: Column =
-        if (without)
-          map_filter(col("labels"), (k, _) => !k.isin(ls :+ p.nameLabel: _*))
-        else map_filter(col("labels"), (k, _) => k.isin(ls: _*))
-      hMergeGroups(hv
-        .withColumn("labels", keep)
-        .withColumn("series_key", graft.functions.seriesKey(col("labels"))))
-    }
-
-    /** `avg [by/without]` of histogram vectors — upstream divides the
-      * group sum by the group's element count, channel-wise. */
-    private def hAvgBy(hv: DataFrame, grouping: Seq[String], without: Boolean): DataFrame = {
-      val ls = grouping.distinct
-      val keep: Column =
-        if (without)
-          map_filter(col("labels"), (k, _) => !k.isin(ls :+ p.nameLabel: _*))
-        else map_filter(col("labels"), (k, _) => k.isin(ls: _*))
-      hMergeGroups(hv
-        .withColumn("labels", keep)
-        .withColumn("series_key", graft.functions.seriesKey(col("labels"))),
-        avg = true)
-    }
-
-    /** The histogram MERGE CORE shared by [[hSumBy]] and [[hArith]]:
+    /** The histogram MERGE CORE shared by `sum`/`avg` and [[hArith]]:
       * every group of rows sharing (series_key, t) merges bucket-wise.
       * Mixed schemas merge at the group's COARSEST (minimum) schema
       * with the exact `idx' = ⌈idx/2^Δ⌉` remap
@@ -2829,8 +2744,7 @@ object PromQl {
       // The merge core reads its input through SIX relations (base,
       // remapped, star, widen, withUp, and the final three-way join),
       // and the join tree references the input's FULL lineage ~16× —
-      // under [[hArith]] (whose one-to-one union already carries each
-      // operand twice) that multiplied promql_hist_arith's physical
+      // under [[hArith]] that multiplied promql_hist_arith's physical
       // plan to 2,694 nodes / 148 parquet scans / 383 exchanges at 15
       // instants (r12 audit): a compile-time bomb that grows with the
       // consumer count, not the data. The input is INSTANT-VECTOR
@@ -2945,274 +2859,62 @@ object PromQl {
             .as("h"))
     }
 
-    /** Channel-wise negation — [[hArith]]'s subtraction is `l + (−r)`
-      * (upstream Sub is channel-wise with the same reconciliation). */
-    private def hNeg(df: DataFrame): DataFrame = {
-      def neg(arr: Column) = transform(arr, b =>
-        struct(b.getField("i").as("i"), (-b.getField("c")).as("c")))
-      df.withColumn("h", struct(
-        col("h.schema").as("schema"), col("h.zt").as("zt"),
-        (-col("h.z_count")).as("z_count"), (-col("h.count")).as("count"),
-        (-col("h.sum")).as("sum"),
-        neg(col("h.neg")).as("neg"), neg(col("h.pos")).as("pos")))
-    }
-
-    /** `h1 + h2` / `h1 − h2` under vector matching (upstream
-      * FloatHistogram.Add/Sub): matched pairs merge through
-      * [[hMergeGroups]]. One-to-one requires both sides unique per
-      * (match key, instant) — the float path's duplicate execution
-      * error — and the result labels are the matching subset (the
-      * one-to-one resultMetric rule). Many-to-one
-      * (`group_left`/`group_right`, r12): each many-side element
-      * merges with its one-side match; the one side is unique-checked;
-      * result labels are the many side's minus the metric name plus
-      * the include labels copied from the one side (the float path's
-      * grouped-result rule). Two many-side elements collapsing onto
-      * one result series would silently MERGE here, so that case
-      * raises (upstream's duplicate-labelset error). */
-    private def hArith(
-        sub: Boolean, l0: DataFrame, r0: DataFrame,
+    /** `h1 + h2` / `h1 − h2` (upstream FloatHistogram.Add/Sub): each
+      * matched pair ([[matched]]) merges through [[hMergeGroups]];
+      * subtraction adds the written right operand scaled by −1 (upstream
+      * Sub is channel-wise with the same reconciliation). */
+    private def hArith(sub: Boolean, l: DataFrame, r: DataFrame,
         matching: Option[Matching]): DataFrame = {
-      val card = matching.map(_.card).getOrElse(0)
-      if (card == 0) {
-        val lk = hUniqueOrError(l0.withColumn("__mk", matchKey(matching)), "left")
-        val rk = hUniqueOrError(
-          (if (sub) hNeg(r0) else r0).withColumn("__mk", matchKey(matching)),
-          "right")
-        // inner one-to-one match: keep each side's rows whose (key, t)
-        // exists on the other, then merge the union per key
-        val both = lk
-          .join(rk.select("__mk", "t").distinct(), Seq("__mk", "t"), "left_semi")
-          .unionByName(
-            rk.join(lk.select("__mk", "t").distinct(), Seq("__mk", "t"), "left_semi"))
-        hMergeGroups(both
-          .withColumn("labels", matchLabels(matching))
-          .withColumn("series_key", col("__mk"))
-          .select("series_key", "labels", "t", "h"))
-      } else {
-        val include = matching.map(_.include).getOrElse(Nil)
-        // group_left: the written LEFT is the many side. Subtraction
-        // negates the written RIGHT operand whichever side it is.
-        val (many0, one0) = if (card == 1) (l0, r0) else (r0, l0)
-        val many = if (sub && card == 2) hNeg(many0) else many0
-        val one = if (sub && card == 1) hNeg(one0) else one0
-        val manyK = many.withColumn("__mk", matchKey(matching))
-        val oneK = hUniqueOrError(
-          one.withColumn("__mk", matchKey(matching)), "one")
-        val joined = manyK.join(
-          oneK.select(col("__mk"), col("t"), col("h").as("__rh"),
-            col("labels").as("__rlabels")),
-          Seq("__mk", "t"))
-        val lbl =
-          if (include.isEmpty)
-            map_filter(col("labels"), (k, _) => k =!= p.nameLabel)
-          else map_concat(
-            map_filter(col("labels"),
-              (k, _) => !k.isin(include :+ p.nameLabel: _*)),
-            map_filter(col("__rlabels"), (k, _) => k.isin(include: _*)))
-        val paired = hUniqueOrError(
-          joined.withColumn("labels", lbl)
-            .withColumn("series_key", graft.functions.seriesKey(col("labels")))
-            .withColumn("__mk", col("series_key")),
-          "many (duplicate result series)")
-        hMergeGroups(
-          paired.select("series_key", "labels", "t", "h").unionByName(
-            paired.select(col("series_key"), col("labels"), col("t"),
-              col("__rh").as("h"))))
-      }
+      val rh = if (sub) hScaled(col("__r"), lit(-1.0), divide = false) else col("__r")
+      hMergeGroups(matched(l, r, matching, filter = false)
+        .select(col("series_key"), col("labels"), col("t"),
+          explode(array(col("__l"), rh)).as("h")))
     }
 
-    /** The one-to-one duplicate-match-key execution error, shared by
-      * [[hArith]]/[[hMulFloat]]/[[hCompare]] (the float path's rule:
-      * upstream errors when a match group holds more than one series).
-      * The window's (key, t) partitioning is the downstream join's, so
-      * EnsureRequirements plans one exchange per side either way. */
-    private def hUniqueOrError(df: DataFrame, what: String): DataFrame = {
-      val w = Window.partitionBy("__mk", "t")
-      df.withColumn("__dup", count(lit(1)).over(w))
-        .where(when(col("__dup") > 1,
-          raise_error(concat(
-            lit("promql: found duplicate series for the match group "),
-            col("__mk"),
-            lit(s" on the $what side of the operation")))
-            .cast("boolean"))
-          .otherwise(lit(true)))
-        .drop("__dup")
-    }
-
-    /** `h * s` / `h / s` — every channel scales (upstream
-      * FloatHistogram.Mul/Div); schema and zero threshold are
-      * unchanged; the metric name drops. The factor is a COLUMN, so
-      * one body serves literal, per-instant scalar, and matched
-      * float-vector factors. Division by zero follows the float
-      * path's IEEE mapping. */
-    private def hScale(hv: DataFrame, s: Column, divide: Boolean): DataFrame = {
-      def f(c: Column): Column =
-        if (!divide) c * s
-        else when(s =!= 0.0, c / s)
-          .otherwise(when(c > 0, lit(Double.PositiveInfinity))
-            .when(c < 0, lit(Double.NegativeInfinity))
-            .otherwise(lit(Double.NaN)))
+    /** `h * s` / `h / s` on one histogram struct: every channel scales
+      * (upstream FloatHistogram.Mul/Div) and buckets scaled to zero
+      * drop; schema and zero threshold are unchanged. The factor is a
+      * COLUMN, so one body serves literal, per-instant scalar, and
+      * matched float-vector factors. Division by zero follows the float
+      * path's IEEE mapping ([[arith]]). */
+    private def hScaled(h: Column, s: Column, divide: Boolean): Column = {
+      def f(c: Column): Column = arith(if (divide) "/" else "*", c, s)
       def sideF(arr: Column) = filter(
         transform(arr, b =>
           struct(b.getField("i").as("i"), f(b.getField("c")).as("c"))),
         b => b.getField("c") =!= 0.0)
-      dropName(hv.withColumn("h", struct(
-        col("h.schema").as("schema"), col("h.zt").as("zt"),
-        f(col("h.z_count")).as("z_count"), f(col("h.count")).as("count"),
-        f(col("h.sum")).as("sum"),
-        sideF(col("h.neg")).as("neg"), sideF(col("h.pos")).as("pos"))))
+      struct(
+        h.getField("schema").as("schema"), h.getField("zt").as("zt"),
+        f(h.getField("z_count")).as("z_count"), f(h.getField("count")).as("count"),
+        f(h.getField("sum")).as("sum"),
+        sideF(h.getField("neg")).as("neg"), sideF(h.getField("pos")).as("pos"))
     }
 
-    /** The scale operand of `h × e` / `h ÷ e`, routed by e's TYPE: a
-      * scalar expression (literals and arithmetic over them), a
-      * time-varying scalar (`scalar(v)`, `time()`-derived — joined on
-      * the instant alone, the vector↔scalar rule), or a float VECTOR
-      * (one-to-one matched channel-wise scale — upstream
-      * vectorElemBinop's histogram×float Mul/Div). Other hist↔float
+    /** `h × e` / `h ÷ e`, routed by e's TYPE: a scalar expression
+      * (literals and arithmetic over them), a time-varying scalar
+      * (`scalar(v)`, `time()`-derived — joined on the instant alone,
+      * the vector↔scalar rule), or a float VECTOR (each [[matched]]
+      * pair scales channel-wise — upstream vectorElemBinop's
+      * histogram×float Mul/Div; `hIsLeft` says which WRITTEN side the
+      * histogram operand is). The metric name drops. Other hist↔float
       * combinations (±, `f / h`, ordered comparisons) stay
       * upstream-empty: this reading contributes nothing and the float
       * channel drops the histogram rows. */
     private def hScaleBy(hv: DataFrame, e: Expr, divide: Boolean,
         matching: Option[Matching], hIsLeft: Boolean = true): DataFrame =
       eval(e) match {
-        case Scal(s) => hScale(hv, lit(s), divide)
+        case Scal(s) => dropName(hv.withColumn("h", hScaled(col("h"), lit(s), divide)))
         case ScalV(sv) =>
-          hScale(hv.join(sv.withColumnRenamed("v", "__sv"), Seq("t")),
-            col("__sv"), divide).drop("__sv")
-        case Vec(f) => hMulFloat(hv, f, divide, matching, hIsLeft)
+          dropName(hv.join(sv.withColumnRenamed("v", "__sv"), Seq("t"))
+            .withColumn("h", hScaled(col("h"), col("__sv"), divide))
+            .drop("__sv"))
+        case Vec(f) =>
+          val (pairs, hc, fc) =
+            if (hIsLeft) (matched(hv, f, matching, filter = false), "__l", "__r")
+            else (matched(f, hv, matching, filter = false), "__r", "__l")
+          pairs.select(col("series_key"), col("labels"), col("t"),
+            hScaled(col(hc), col(fc), divide).as("h"))
       }
-
-    /** `h * f` / `f * h` / `h / f` with a float-vector operand: each
-      * matched (key, instant) pair scales the histogram channel-wise
-      * by the float value. One-to-one result labels follow the
-      * resultMetric rule (the matching subset); many-to-one
-      * (`group_left`/`group_right`, r12) keeps the many side's labels
-      * minus the metric name plus the include labels from the one
-      * side — `hIsLeft` says which WRITTEN side the histogram operand
-      * is, so the many side resolves the same way as the float path. */
-    private def hMulFloat(hv: DataFrame, fv: DataFrame, divide: Boolean,
-        matching: Option[Matching], hIsLeft: Boolean): DataFrame = {
-      val card = matching.map(_.card).getOrElse(0)
-      if (card == 0) {
-        val lk = hUniqueOrError(hv.withColumn("__mk", matchKey(matching)), "left")
-        val rk = hUniqueOrError(fv.withColumn("__mk", matchKey(matching)), "right")
-        hScale(
-          lk.join(rk.select(col("__mk"), col("t"), col("v").as("__sv")),
-            Seq("__mk", "t")),
-          col("__sv"), divide)
-          .withColumn("labels", matchLabels(matching))
-          .withColumn("series_key", col("__mk"))
-          .select("series_key", "labels", "t", "h")
-      } else {
-        val include = matching.map(_.include).getOrElse(Nil)
-        // group_left: the written LEFT is the many side
-        val hIsMany = (card == 1) == hIsLeft
-        val (manyK, oneK) =
-          if (hIsMany)
-            (hv.withColumn("__mk", matchKey(matching)),
-              hUniqueOrError(fv.withColumn("__mk", matchKey(matching)), "one")
-                .select(col("__mk"), col("t"), col("v").as("__sv"),
-                  col("labels").as("__rlabels")))
-          else
-            (fv.withColumnRenamed("v", "__sv")
-              .withColumn("__mk", matchKey(matching)),
-              hUniqueOrError(hv.withColumn("__mk", matchKey(matching)), "one")
-                .select(col("__mk"), col("t"), col("h"),
-                  col("labels").as("__rlabels")))
-        val joined = manyK.join(oneK, Seq("__mk", "t"))
-        val lbl =
-          if (include.isEmpty)
-            map_filter(col("labels"), (k, _) => k =!= p.nameLabel)
-          else map_concat(
-            map_filter(col("labels"),
-              (k, _) => !k.isin(include :+ p.nameLabel: _*)),
-            map_filter(col("__rlabels"), (k, _) => k.isin(include: _*)))
-        hScale(joined, col("__sv"), divide)
-          .withColumn("labels", lbl)
-          .withColumn("series_key", graft.functions.seriesKey(col("labels")))
-          .select("series_key", "labels", "t", "h")
-      }
-    }
-
-    /** `h == h` / `h != h` comparisons (upstream
-      * FloatHistogram.Equals between matched pairs): strict structural
-      * equality — schema, zero threshold, and every channel (Spark's
-      * NaN = NaN comparison matches upstream's Float64bits rule on the
-      * sum). The FILTER form keeps the written-lhs sample; one-to-one
-      * keeps its original labels, many-to-one the many side's labels
-      * with include-copying (the float path's grouped filter rule).
-      * The joined pair frame is shared with [[hCompareBool]]. */
-    private def hComparePairs(l0: DataFrame, r0: DataFrame,
-        matching: Option[Matching]): (DataFrame, Int) = {
-      val card = matching.map(_.card).getOrElse(0)
-      if (card == 0) {
-        val lk = hUniqueOrError(l0.withColumn("__mk", matchKey(matching)), "left")
-        val rk = hUniqueOrError(r0.withColumn("__mk", matchKey(matching)), "right")
-        (lk.join(rk.select(col("__mk"), col("t"), col("h").as("__rh"),
-            col("labels").as("__rlabels")), Seq("__mk", "t"))
-          .withColumn("__lh", col("h")), card)
-      } else {
-        // many side carries the labels; one side is unique-checked;
-        // __lh is the WRITTEN lhs histogram either way
-        val (many, one) = if (card == 1) (l0, r0) else (r0, l0)
-        val manyK = many.withColumn("__mk", matchKey(matching))
-        val oneK = hUniqueOrError(
-          one.withColumn("__mk", matchKey(matching)), "one")
-        (manyK.join(oneK.select(col("__mk"), col("t"), col("h").as("__rh"),
-            col("labels").as("__rlabels")), Seq("__mk", "t"))
-          .withColumn("__lh", if (card == 1) col("h") else col("__rh")),
-          card)
-      }
-    }
-
-    /** Include-copied many-side labels for grouped results (shared by
-      * the comparison forms; name-dropping is the caller's call). */
-    private def includeLabels(include: Seq[String]): Column =
-      if (include.isEmpty) col("labels")
-      else map_concat(
-        map_filter(col("labels"), (k, _) => !k.isin(include: _*)),
-        map_filter(col("__rlabels"), (k, _) => k.isin(include: _*)))
-
-    private def hCompare(neq: Boolean, l0: DataFrame, r0: DataFrame,
-        matching: Option[Matching]): DataFrame = {
-      val (pairs, card) = hComparePairs(l0, r0, matching)
-      val include = matching.map(_.include).getOrElse(Nil)
-      val eq = col("h") === col("__rh")
-      val kept = pairs.where(if (neq) !eq else eq)
-      // filter form keeps the metric name (the float path's rule);
-      // grouped results still copy include labels from the one side
-      val lbl =
-        if (card == 0) col("labels") else includeLabels(include)
-      kept
-        .withColumn("h", col("__lh"))
-        .withColumn("labels", lbl)
-        .withColumn("series_key", graft.functions.seriesKey(col("labels")))
-        .select("series_key", "labels", "t", "h")
-    }
-
-    /** The BOOL form of `h == h` / `h != h` — a FLOAT result (1/0 per
-      * matched pair), unioned into the float channel by [[binary]]:
-      * upstream vectorElemBinop returns the keep bool and the bool
-      * modifier emits a float sample with the metric name dropped.
-      * Result labels mirror the float path's: one-to-one narrows to
-      * the matching subset; many-to-one keeps the many side's labels
-      * minus the name plus include. */
-    private def hCompareBool(neq: Boolean, l0: DataFrame, r0: DataFrame,
-        matching: Option[Matching]): DataFrame = {
-      val (pairs, card) = hComparePairs(l0, r0, matching)
-      val include = matching.map(_.include).getOrElse(Nil)
-      val eq = col("h") === col("__rh")
-      val lbl =
-        if (card == 0) matchLabels(matching)
-        else map_filter(includeLabels(include), (k, _) => k =!= p.nameLabel)
-      pairs
-        .withColumn("v",
-          when(if (neq) !eq else eq, 1.0).otherwise(0.0))
-        .withColumn("labels", lbl)
-        .withColumn("series_key", graft.functions.seriesKey(col("labels")))
-        .select("series_key", "labels", "t", "v")
-    }
 
     // --- aggregations --------------------------------------------------
 
@@ -3229,16 +2931,8 @@ object PromQl {
               .select("series_key", "labels", "t", "v")))
             .getOrElse(iv0)
         else iv0
-      // grouping labels: `by` keeps exactly the listed ones; `without`
-      // drops the listed ones plus the metric name
-      val keep: Column =
-        if (a.without)
-          map_filter(col("labels"),
-            (k, _) => !k.isin(a.grouping :+ p.nameLabel: _*))
-        else
-          map_filter(col("labels"), (k, _) => k.isin(a.grouping: _*))
       val keyed = iv
-        .withColumn("g_labels", keep)
+        .withColumn("g_labels", labelSubset(a.grouping, keep = !a.without))
         .withColumn("g_key", graft.functions.seriesKey(col("g_labels")))
       // g_labels ride as a GROUPING KEY (sorted entry array — g_key is
       // derived from g_labels, so the grouping is identity), not a
@@ -3355,7 +3049,7 @@ object PromQl {
           if (b.bool && (b.op == "==" || b.op == "!=") && hasH)
             (hVecOf(b.lhs), hVecOf(b.rhs)) match {
               case (Some(hl), Some(hr)) =>
-                base.unionByName(hCompareBool(b.op == "!=", hl, hr, b.matchOn))
+                base.unionByName(compared(b.op, bool = true, hl, hr, b.matchOn))
               case _ => base
             }
           else base)
@@ -3437,129 +3131,131 @@ object PromQl {
       } else dropName(v.withColumn("v", arith(b.op, l, r)))
     }
 
+    /** A label subset of the row's `labels`: `keep` retains exactly
+      * `ls` (`by`, `on`); otherwise `ls` and the metric name drop
+      * (`without`, `ignoring`, and a bare binary operator, which
+      * matches on every label but the name). The grouping labels of
+      * every aggregation and the match key of every binary operator. */
+    private def labelSubset(ls: Seq[String], keep: Boolean): Column =
+      if (keep) map_filter(col("labels"), (k, _) => k.isin(ls: _*))
+      else map_filter(col("labels"), (k, _) => !k.isin(ls :+ p.nameLabel: _*))
+
     /** The matching label subset as a MAP — also the upstream
       * resultMetric label set for one-to-one results. */
-    private def matchLabels(matching: Option[Matching]): Column = matching match {
-      case Some(Matching(true, ls, _, _)) => // on(...)
-        map_filter(col("labels"), (k, _) => k.isin(ls: _*))
-      case Some(Matching(false, ls, _, _)) => // ignoring(...)
-        map_filter(col("labels"), (k, _) => !k.isin(ls :+ p.nameLabel: _*))
-      case None =>
-        map_filter(col("labels"), (k, _) => k =!= p.nameLabel)
-    }
+    private def matchLabels(matching: Option[Matching]): Column =
+      matching.fold(labelSubset(Nil, keep = false))(m => labelSubset(m.labels, m.on))
 
     private def matchKey(matching: Option[Matching]): Column =
       graft.functions.seriesKey(matchLabels(matching))
 
-    private def vectorVector(b: Bin, l0: DataFrame, r0: DataFrame): DataFrame = {
-      // group_right is group_left with the sides swapped for label
-      // purposes: the "many" side supplies the result labels. The value
-      // expression keeps its written operand order either way.
-      val card = b.matchOn.map(_.card).getOrElse(0)
-      val include = b.matchOn.map(_.include).getOrElse(Nil)
-      val (l, r, rightIsMany) =
-        if (card == 2) (r0, l0, true) else (l0, r0, false)
-      val lk = l.withColumn("__mk", matchKey(b.matchOn))
-      val rk = r.withColumn("__mk", matchKey(b.matchOn))
-      b.op match {
-        case "and" =>
-          if (card != 0) fail("set operations take no grouping modifier")
-          lk.join(rk.select("__mk", "t").distinct(), Seq("__mk", "t"), "left_semi")
-            .select("series_key", "labels", "t", "v")
-        case "unless" =>
-          if (card != 0) fail("set operations take no grouping modifier")
-          lk.join(rk.select("__mk", "t").distinct(), Seq("__mk", "t"), "left_anti")
-            .select("series_key", "labels", "t", "v")
-        case "or" =>
-          if (card != 0) fail("set operations take no grouping modifier")
-          val extra = rk.join(lk.select("__mk", "t").distinct(),
-            Seq("__mk", "t"), "left_anti")
-          lk.select("series_key", "labels", "t", "v")
-            .unionByName(extra.select("series_key", "labels", "t", "v"))
-        case op =>
-          // upstream's execution errors for duplicate match keys:
-          // one-to-one requires BOTH sides unique per (key, instant);
-          // many-to-one requires the "one" side (r here) unique. The
-          // detection window's (key, t) partitioning is exactly the
-          // join's, so EnsureRequirements plans ONE exchange per side
-          // either way — the check costs an in-partition sort of
-          // lattice-scale rows, not a pass over samples.
-          // FILTER form, not a projected column: a raise_error buried
-          // in a projection collapses into the post-join output and
-          // never evaluates when the join matches nothing — a filter
-          // above the window is evaluated for every input row
-          def uniqueOrError(df: DataFrame, what: String): DataFrame = {
-            val w = Window.partitionBy("__mk", "t")
-            df.withColumn("__dup", count(lit(1)).over(w))
-              .where(when(col("__dup") > 1,
-                raise_error(concat(
-                  lit("promql: found duplicate series for the match group "),
-                  col("__mk"),
-                  lit(s" on the $what side of the operation")))
-                  .cast("boolean"))
-                .otherwise(lit(true)))
-              .drop("__dup")
-          }
-          // right-side (the "one" side) duplicates error UNCONDITIONALLY
-          // (upstream builds its signature map first); left-side
-          // duplicates error only among MATCHED signatures, so the
-          // left check runs on the joined frame — where, with the
-          // right side unique, >1 row per (key, t) means left dups
-          // that actually matched. The joined frame is already
-          // partitioned by the join keys, so the window adds no
-          // exchange.
-          val rku = uniqueOrError(rk, if (card == 0) "right" else "one")
-          val joined0 = lk.join(
-            rku.select(col("__mk"), col("t"), col("v").as("__rv"),
-              col("labels").as("__rlabels")),
-            Seq("__mk", "t"))
-          val joined =
-            if (card != 0) joined0
-            else {
-              val w = Window.partitionBy("__mk", "t")
-              joined0.withColumn("__dup", count(lit(1)).over(w))
-                .where(when(col("__dup") > 1,
-                  raise_error(concat(
-                    lit("promql: found duplicate series for the match group "),
-                    col("__mk"),
-                    lit(" on the left side of the operation")))
-                    .cast("boolean"))
-                  .otherwise(lit(true)))
-                .drop("__dup")
-            }
-          // value operands in WRITTEN order (swap back under group_right)
-          val (lv, rv) =
-            if (rightIsMany) (col("__rv"), col("v")) else (col("v"), col("__rv"))
-          // group_left(include...): named labels copy over from the
-          // "one" side onto the result's (many-side) label set
-          val withInclude =
-            if (include.isEmpty) joined
-            else relabel(joined, map_concat(
-              map_filter(col("labels"), (k, _) => !k.isin(include: _*)),
-              map_filter(col("__rlabels"), (k, _) => k.isin(include: _*))))
-          // upstream's resultMetric rule: a ONE-TO-ONE result narrows
-          // to the MATCHING labels exactly (the on-list, or everything
-          // minus ignored minus name — which is the match key map
-          // itself); many-to-one keeps the many side's label set
-          // (+ include) with only the name dropped. Filter comparisons
-          // are the exception either way: the surviving samples keep
-          // their original label sets, metric name included.
-          def resultLabels(df: DataFrame): DataFrame =
-            if (card == 0) relabel(df, matchLabels(b.matchOn)) else dropName(df)
-          if (cmpOps.contains(op)) {
-            val pred = cmpCol(op, lv, rv)
-            if (b.bool)
-              resultLabels(withInclude.withColumn("v", when(pred, 1.0).otherwise(0.0)))
-                .select("series_key", "labels", "t", "v")
-            else withInclude.where(pred)
-              // the kept VALUE is the written lhs operand's; the label
-              // set is the many side's (the grouping convention)
-              .withColumn("v", lv)
-              .select("series_key", "labels", "t", "v")
-          } else
-            resultLabels(withInclude.withColumn("v", arith(op, lv, rv)))
-              .select("series_key", "labels", "t", "v")
-      }
+    /** Upstream's execution error when `keys` repeat: a FILTER over a
+      * window count, not a projected column — a raise_error buried in a
+      * projection collapses into the post-join output and never
+      * evaluates when the join matches nothing, while a filter above
+      * the window is evaluated for every input row. */
+    private def uniqueOrError(df: DataFrame, keys: Seq[String], msg: Column): DataFrame =
+      df.withColumn("__dup", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+        .where(when(col("__dup") > 1,
+          raise_error(concat(lit("promql: "), msg)).cast("boolean"))
+          .otherwise(lit(true)))
+        .drop("__dup")
+
+    /** Vector matching, once for every binary operator between two
+      * instant vectors, float or native histogram — upstream
+      * `VectorBinop` (promql/engine.go). Each side's rows key on
+      * [[matchKey]] per instant. The MANY side is the written left,
+      * or the written right under `group_right`; the other is the ONE
+      * side (one-to-one: the right). Upstream's three execution errors:
+      *  1. the one side must be unique per (match key, instant),
+      *     checked unconditionally — matched or not;
+      *  2. a one-to-one's left side must be unique among the pairs
+      *     that matched — an unmatched duplicate group is skipped;
+      *  3. a many-to-one's result series must be unique within its
+      *     match group ("grouping labels must ensure unique matches").
+      * Result labels follow upstream's resultMetric: one-to-one
+      * arithmetic and `bool` results narrow to the matching labels;
+      * many-to-one results drop the metric name, then copy the
+      * `group_x(include…)` labels from the one side (a label absent
+      * there is removed); filter comparisons (`filter`) keep the many
+      * side's labels, metric name included, plus the include copy.
+      *
+      * The output: the RESULT `series_key`/`labels`, `t`, the match
+      * key `__mk`, and each side's payload (`v` or `h`) as `__l`/`__r`
+      * in WRITTEN order. Checks 2 and 3 window over the join output,
+      * which the join already partitions by (key, t), so they add no
+      * exchange; check 1's window shares the join's partitioning. */
+    private def matched(l: DataFrame, r: DataFrame,
+        matching: Option[Matching], filter: Boolean): DataFrame = {
+      val card = matching.map(_.card).getOrElse(0)
+      val include = matching.map(_.include).getOrElse(Nil)
+      def keyed(df: DataFrame, payload: String, labels: String): DataFrame =
+        df.select(matchKey(matching).as("__mk"), col("t"), col("labels").as(labels),
+          col(payloadOf(df)).as(payload))
+      val (many, one) = if (card == 2) (r, l) else (l, r)
+      val oneK = uniqueOrError(keyed(one, "__op", "__olabels"), Seq("__mk", "t"),
+        concat(lit("found duplicate series for the match group "), col("__mk"),
+          lit(s" on the ${if (card == 2) "left" else "right"} side of the operation")))
+      val kept =
+        if (filter) col("labels")
+        else if (card == 0) matchLabels(matching)
+        else labelSubset(Nil, keep = false)
+      val lbl =
+        if (include.isEmpty) kept
+        else map_concat(
+          map_filter(kept, (k, _) => !k.isin(include: _*)),
+          map_filter(col("__olabels"), (k, _) => k.isin(include: _*)))
+      val (lp, rp) = if (card == 2) ("__op", "__mp") else ("__mp", "__op")
+      val pairs = keyed(many, "__mp", "labels").join(oneK, Seq("__mk", "t"))
+        .select(col("__mk"), col("t"), lbl.as("labels"),
+          col(lp).as("__l"), col(rp).as("__r"))
+        .withColumn("series_key", graft.functions.seriesKey(col("labels")))
+      if (card == 0)
+        uniqueOrError(pairs, Seq("__mk", "t"), lit("multiple matches for labels: " +
+          "many-to-one matching must be explicit (group_left/group_right)"))
+      else
+        uniqueOrError(pairs, Seq("__mk", "series_key", "t"),
+          lit("multiple matches for labels: grouping labels must ensure unique matches"))
+    }
+
+    /** The payload column of an instant-vector frame: `h` for the
+      * histogram channel, `v` for floats. */
+    private def payloadOf(df: DataFrame): String =
+      if (df.columns.contains("h")) "h" else "v"
+
+    /** A comparison over [[matched]] pairs, float or histogram (the
+      * histogram `==`/`!=` is upstream FloatHistogram.Equals: strict
+      * structural equality, where Spark's NaN = NaN matches upstream's
+      * Float64bits rule on the sum). The filter form keeps the pairs
+      * whose predicate holds, with the written left's payload; the
+      * `bool` form is a 1/0 FLOAT for every pair. */
+    private def compared(op: String, bool: Boolean, l: DataFrame, r: DataFrame,
+        matching: Option[Matching]): DataFrame = {
+      val pairs = matched(l, r, matching, filter = !bool)
+      val pred = cmpCol(op, col("__l"), col("__r"))
+      if (bool)
+        pairs.select(col("series_key"), col("labels"), col("t"),
+          when(pred, 1.0).otherwise(0.0).as("v"))
+      else pairs.where(pred)
+        .select(col("series_key"), col("labels"), col("t"), col("__l").as(payloadOf(l)))
+    }
+
+    private def vectorVector(b: Bin, l: DataFrame, r: DataFrame): DataFrame = b.op match {
+      case op @ ("and" | "or" | "unless") =>
+        if (b.matchOn.exists(_.card != 0)) fail("set operations take no grouping modifier")
+        def keyed(df: DataFrame) = df.select(col("series_key"), col("labels"),
+          col("t"), col("v"), matchKey(b.matchOn).as("__mk"))
+        def keysOf(df: DataFrame) = df.select("__mk", "t").distinct()
+        val (lk, rk) = (keyed(l), keyed(r))
+        (op match {
+          case "and" => lk.join(keysOf(rk), Seq("__mk", "t"), "left_semi")
+          case "unless" => lk.join(keysOf(rk), Seq("__mk", "t"), "left_anti")
+          case _ => lk.unionByName(rk.join(keysOf(lk), Seq("__mk", "t"), "left_anti"))
+        }).select("series_key", "labels", "t", "v")
+      case op if cmpOps.contains(op) => compared(op, b.bool, l, r, b.matchOn)
+      case op =>
+        matched(l, r, b.matchOn, filter = false)
+          .select(col("series_key"), col("labels"), col("t"),
+            arith(op, col("__l"), col("__r")).as("v"))
     }
   }
 }

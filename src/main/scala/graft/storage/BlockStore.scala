@@ -215,6 +215,14 @@ final class BlockStore(
   private def markSynced(): Unit =
     BlockStore.syncedVersions.put(tableName, Manifest.currentVersion(root))
 
+  /** Publish `st` as the next manifest version and mark this JVM's
+    * catalog in sync with it: every writer publishes through here, so
+    * none can leave the catalog a version behind its own write. */
+  private def publish(st: ManifestState): Unit = {
+    Manifest.publish(root, st)
+    markSynced()
+  }
+
   private def du(path: String): Long = {
     val p = Paths.get(path)
     if (!Files.exists(p)) 0L
@@ -272,8 +280,7 @@ final class BlockStore(
       val numSeries = BlockStore.writeDict(series(id), dictPath(id), SaveMode.Overwrite)
       val next = st.copy(blocks = st.blocks :+
         BlockMeta(id, mint, maxt, n, numSeries, numTombstones = 0L, bytes = du(blockPath(id))))
-      Manifest.publish(root, next)
-      markSynced()
+      publish(next)
       next
     }
   }
@@ -693,7 +700,7 @@ final class BlockStore(
       if (probe.length <= tombstoneSpillThreshold) {
         val added = probe.map(r =>
           TombstoneInterval(r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-        Manifest.publish(root, recount(st.copy(tombstones = coalesce(st.tombstones ++ added))))
+        publish(recount(st.copy(tombstones = coalesce(st.tombstones ++ added))))
       } else {
         val fid = st.nextBlockId
         val obs = Observation(s"graft-tomb-$fid")
@@ -710,10 +717,9 @@ final class BlockStore(
         val n = stats.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
         val lo = stats.get("lo").map(_.asInstanceOf[Long]).getOrElse(mint)
         val hi = stats.get("hi").map(_.asInstanceOf[Long]).getOrElse(maxt)
-        Manifest.publish(root, recount(st.copy(highWater = math.max(st.highWater, fid),
+        publish(recount(st.copy(highWater = math.max(st.highWater, fid),
           tombstoneFiles = st.tombstoneFiles :+ TombstoneFile(fid, lo, hi, n))))
       }
-      markSynced()
     }
 
   /** `st` with its per-block tombstone counters, which feed the
@@ -801,9 +807,8 @@ final class BlockStore(
     // multi-block clean never clears the manifest and re-rewrites the
     // same blocks on the next call.
     if (entryTombs.nonEmpty || entryFiles.nonEmpty) {
-      Manifest.publish(root, recount(st1.copy(tombstones = st1.tombstones.filterNot(entryTombs),
+      publish(recount(st1.copy(tombstones = st1.tombstones.filterNot(entryTombs),
         tombstoneFiles = st1.tombstoneFiles.filterNot(f => entryFiles(f.fileId)))))
-      markSynced()
     }
     rewritten
   }
@@ -841,8 +846,7 @@ final class BlockStore(
     // came out empty (everything tombstoned): it must never be reused
     val kept = retaining(st, st.blocks.filterNot(b => ids.contains(b.blockId)))
     val next = recount(kept.copy(blocks = kept.blocks ++ meta, highWater = math.max(st.highWater, newId)))
-    Manifest.publish(root, next)
-    markSynced()
+    publish(next)
     (next, meta.map(_.blockId))
   }
 
@@ -871,8 +875,7 @@ final class BlockStore(
     else {
       val (gone, keep) = st.blocks.partition(b => drop.contains(b.blockId))
       // retire tombstones that touched only the dropped blocks
-      Manifest.publish(root, recount(retaining(st, keep)))
-      markSynced()
+      publish(recount(retaining(st, keep)))
       gone
     }
   }
@@ -951,10 +954,9 @@ final class BlockStore(
           copyTree(Paths.get(tombPath(f.fileId)), Paths.get(dest.tombsDir, s"ts_id=$nid"))
           f.copy(fileId = nid)
         }
-        Manifest.publish(destRoot, recount(copied.copy(tombstones = st.tombstones, tombstoneFiles = newFiles,
+        dest.publish(recount(copied.copy(tombstones = st.tombstones, tombstoneFiles = newFiles,
           highWater = newFiles.map(_.fileId).foldLeft(copied.highWater)(math.max))))
       }
-      dest.markSynced()
       dest
     }
 

@@ -60,7 +60,7 @@ object Merge {
     * Non-primitive payloads (ad-hoc frames carrying label maps) keep
     * the max_by form. */
   def dedupLatest(samples: DataFrame, seq: Column, tieBreak: Column): DataFrame = {
-    val cols = samples.columns
+    val cols = samples.columns.toIndexedSeq
     val payload = cols.filterNot(c => c == "series_key" || c == "t")
     val primitive = payload.forall(c => samples.schema(c).dataType match {
       case org.apache.spark.sql.types.LongType |
